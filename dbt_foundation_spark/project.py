@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from dbt_foundation_spark.manifest import Manifest, Node, NodeConfig
 from dbt_foundation_spark.materialize import materialize
+from dbt_foundation_spark.session import check_codegen_cache, codegen_compiles
 from dbt_foundation_spark.sources.registry import SourceRegistry
 
 logger = logging.getLogger("dbt_foundation_spark")
@@ -711,6 +712,8 @@ class Project:
         of every microbatch model in this run (backfills, per-batch
         retries) instead of the derived max-batch-minus-lookback window.
         """
+        check_codegen_cache(self.spark)
+        compiled0, compile_ms0 = codegen_compiles(self.spark)
         self._event_time_window = (event_time_start, event_time_end)
         self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {self.target.schema}")
         for node in self.manifest.nodes.values():
@@ -789,6 +792,11 @@ class Project:
                             failed.add(n.name)
         for hook in self.on_run_end:
             self.spark.sql(hook.replace("{schema}", self.target.schema))
+        compiled, compile_ms = codegen_compiles(self.spark)
+        logger.info(
+            "%s: codegen compiled %d classes in %.0f ms",
+            self.name, compiled - compiled0, compile_ms - compile_ms0,
+        )
         return results
 
     def ls(self, selector: str | None = None, exclude: str | None = None) -> list[str]:

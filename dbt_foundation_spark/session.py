@@ -11,9 +11,27 @@ initial value.
 
 from __future__ import annotations
 
+import logging
 import os
+import threading
+import weakref
 
 from pyspark.sql import SparkSession
+
+logger = logging.getLogger("dbt_foundation_spark")
+
+# Spark keeps the classes it compiles for generated code (whole-stage
+# codegen, projections, predicates) in one JVM-wide LRU cache keyed by
+# the generated source, sized once per JVM by the static conf
+# spark.sql.codegen.cache.maxEntries (default 100). Invariant: the cache
+# holds a build's working set, so a repeated build compiles only the
+# code that is new to it. The perfbench dag_refresh project (10 models,
+# 17 nodes) makes 109 distinct classes on its initial build, 59 more on
+# its first incremental build, then about 6 new per build. At 100
+# entries each class is evicted before its next use, and every build
+# recompiles about 145 classes, a fifth of its CPU on 4 cores; at 1000
+# a steady build compiles about 6.
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(
@@ -68,6 +86,7 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     if warehouse_dir:
         builder = builder.config("spark.sql.warehouse.dir", warehouse_dir)
@@ -76,3 +95,38 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> tuple[int, float]:
+    """Generated classes compiled and milliseconds spent compiling them
+    in this JVM so far. Both counters are JVM-wide: a difference of two
+    reads covers every session and thread of the JVM in that interval."""
+    jvm = spark.sparkContext._jvm
+    metrics = getattr(jvm.org.apache.spark.metrics.source, "CodegenMetrics$").__getattr__("MODULE$")
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    return metrics.METRIC_COMPILATION_TIME().getCount(), codegen.compileTime() / 1e6
+
+
+_checked_sessions: weakref.WeakSet[SparkSession] = weakref.WeakSet()
+_checked_lock = threading.Lock()
+
+
+def check_codegen_cache(spark: SparkSession) -> None:
+    """Warn once per session whose codegen cache is smaller than
+    ``CODEGEN_CACHE_ENTRIES``: sessions built outside :func:`get_spark`
+    get Spark's default of 100, and their repeated builds recompile
+    their generated classes."""
+    with _checked_lock:
+        if spark in _checked_sessions:
+            return
+        _checked_sessions.add(spark)
+    entries = int(spark.conf.get("spark.sql.codegen.cache.maxEntries"))
+    if entries < CODEGEN_CACHE_ENTRIES:
+        logger.warning(
+            "spark.sql.codegen.cache.maxEntries is %d, below the %d entries a build's "
+            "generated classes need: each build will recompile classes the last one "
+            "evicted. Create the session with get_spark(), or set the conf on the "
+            "session builder.",
+            entries,
+            CODEGEN_CACHE_ENTRIES,
+        )

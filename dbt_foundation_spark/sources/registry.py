@@ -17,6 +17,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from pathlib import Path
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 TESTDATA_TABLES = (
@@ -184,11 +185,20 @@ def information_schema_tables(spark: SparkSession) -> DataFrame:
 
     Mirrors the projection of macros/list_orphaned_objects.sql:24-32:
     (table_type, table_schema, table_name); Snowflake's 'BASE TABLE' →
-    'TABLE'/'VIEW' from spark.catalog.listTables().
+    'TABLE'/'VIEW' from spark.catalog.listTables(). A schema dropped
+    between the database listing and its table listing (a concurrent
+    build dropping a throwaway schema) is skipped, as if listed after
+    the drop.
     """
     rows = []
     for db in spark.catalog.listDatabases():
-        for t in spark.catalog.listTables(db.name):
+        try:
+            tables = spark.catalog.listTables(db.name)
+        except AnalysisException as e:
+            if e.getCondition() != "SCHEMA_NOT_FOUND":
+                raise
+            continue
+        for t in tables:
             table_type = "VIEW" if t.tableType in ("TEMPORARY", "VIEW") else "TABLE"
             rows.append((table_type, t.namespace[0] if t.namespace else db.name, t.name))
     from dbt_foundation_spark.local_data import local_frame

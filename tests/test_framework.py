@@ -304,6 +304,34 @@ def test_orphans_and_lint(project, spark):
     assert any("3-part" in p for p in problems)
 
 
+def test_information_schema_skips_schema_dropped_mid_listing(spark, monkeypatch):
+    """A schema dropped between the database listing and its table
+    listing (a concurrent build dropping its throwaway schema) is
+    skipped; the other schemas are still listed."""
+    from dbt_foundation_spark.sources.registry import information_schema_tables
+
+    kept, dropped = (f"t_{uuid.uuid4().hex[:8]}" for _ in range(2))
+    spark.sql(f"CREATE DATABASE {kept}")
+    spark.sql(f"CREATE TABLE {kept}.still_here AS SELECT 1 AS x")
+    spark.sql(f"CREATE DATABASE {dropped}")
+    list_databases = spark.catalog.listDatabases
+
+    def list_then_drop(*args, **kwargs):
+        dbs = list_databases(*args, **kwargs)
+        spark.sql(f"DROP DATABASE {dropped} CASCADE")
+        return dbs
+
+    monkeypatch.setattr(spark.catalog, "listDatabases", list_then_drop)
+    try:
+        rows = {tuple(r) for r in information_schema_tables(spark).collect()}
+    finally:
+        monkeypatch.undo()
+        spark.sql(f"DROP DATABASE IF EXISTS {kept} CASCADE")
+        spark.sql(f"DROP DATABASE IF EXISTS {dropped} CASCADE")
+    assert ("TABLE", kept, "still_here") in rows
+    assert not [r for r in rows if r[1] == dropped]
+
+
 def test_state_modified_selector(project, spark):
     @project.model(materialized="table")
     def base_m(ctx):
