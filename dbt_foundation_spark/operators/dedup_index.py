@@ -18,7 +18,10 @@ and every daily ingest joins against the stored index; each
 cross-side pairs — pytest pins that equivalence per flavor. Each
 ``append_to_*`` folds a verified batch in (dedup-then-admit), keeping
 the index one incremental write per ingest instead of a corpus-wide
-rebuild.
+rebuild. The manifest, batch conform, append marker, write order and
+tombstone-subtracted reads every flavor shares live in
+operators/index_core.py; a flavor here is its parameter dict plus its
+signature and candidate/verify code.
 
 Minhash layout:
 
@@ -26,7 +29,7 @@ Minhash layout:
   written repartitioned by (band, bucket) so at read time the
   new-batch join shuffles only the (tiny) batch side and index
   partitions irrelevant to the batch's buckets are skippable.
-- ``{path}/shingles``: (id, shingles array<string>) — the verify-side
+- ``{path}/shingles``: (id, shingles array<bigint>) — the verify-side
   payload, keyed by id for the candidate re-attach join.
 
 Simhash layout: ``{path}/chunks`` = (chunk, ck, id, simhash),
@@ -48,23 +51,6 @@ On a real cluster, write the bands/chunks/postings datasets as bucketed
 tables (``bucketBy(n, key)``) so the per-ingest join is shuffle-free on
 the index side; path-based parquet keeps this module warehouse-free.
 
-Signature parameters MUST match between build/append/query (they
-define the hash family / chunking / prefix length). Each ``build_*``
-therefore writes a MANIFEST (one-row JSON dataset at
-``{path}/manifest`` — written through Spark, so it lands on whatever
-object store holds the index) recording them, and every query/append
-validates the caller's parameters against it, raising on a mismatch
-instead of silently returning wrong candidates (e.g. querying a
-16-hash band index with the 32-hash default). Where the math permits
-a RANGE rather than equality, the manifest enforces the safe
-direction: a simhash query radius may be ≤ the build radius (the
-batch side chunks at the BUILD radius so the equi-join lines up, the
-hamming filter applies the caller's tighter radius); a containment
-query threshold may be ≥ the build threshold (stored prefixes are
-then longer than required — extra candidates, never a lost one).
-Indexes created before manifests existed validate nothing and trust
-the caller, as before.
-
 Multi-version contract: ``append_to_*`` does NOT check whether an id
 is already live (an existence probe would anti-join the full index on
 every micro-batch). Re-appending an id with changed content therefore
@@ -85,12 +71,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbt_foundation_spark.checkpoint import pin
-
-from dbt_foundation_spark.operators.similarity import (
-    hyperplane_banded,
-    random_hyperplanes,
-    sniff_dim,
-)
+from dbt_foundation_spark.functions import vectors as V
 from dbt_foundation_spark.operators.dedup import (
     SIGNATURE_MAX_TOKENS,
     _band_buckets,
@@ -102,399 +83,52 @@ from dbt_foundation_spark.operators.dedup import (
     hashed_shingle_sets,
     identified,
     signature_chunks,
+    similarity_threshold,
     simhash,
 )
+from dbt_foundation_spark.operators.index_core import open_index, write_index
+from dbt_foundation_spark.operators.similarity import (
+    hyperplane_banded,
+    random_hyperplanes,
+    sniff_dim,
+)
+from dbt_foundation_spark.operators.tombstones import assert_literal_path
+from dbt_foundation_spark.parallelism import fan_out
+
+# The giant-document cap (``max_tokens``) is part of every text flavor's
+# signature space exactly like num_hashes/shingle_len: build and batch
+# sides must agree, or a capped document would band differently per side
+# and its re-ingest would be silently admitted.
 
 
-#: Manifest encoding of an EXPLICITLY-uncapped build (``max_tokens=None``).
-#: Spark's JSON writer drops null fields and its JSON reader drops
-#: all-null columns, so ``null`` can't carry the fact through the
-#: manifest — a JSON-safe integer sentinel does. ``-1`` is outside the
-#: valid cap domain (token_ngrams requires >= shingle_len), so it can
-#: never collide with a real cap.
-UNCAPPED_TOKENS = -1
+def _minhash_params(num_hashes, bands, shingle_len, portable, max_tokens) -> dict:
+    return {
+        "flavor": "minhash",
+        "num_hashes": num_hashes,
+        "bands": bands,
+        "shingle_len": shingle_len,
+        "portable": portable,
+        "max_tokens": max_tokens,
+    }
 
 
-def _cap_params(params: dict, max_tokens: int | None, record: bool = False) -> dict:
-    """Thread the giant-document cap through manifests (r11 review):
-    the cap is part of the signature space exactly like
-    num_hashes/shingle_len, so build and batch sides must agree or a
-    capped document would band differently per side and its re-ingest
-    would be silently admitted.
-
-    ``record=True`` (the ``_write_manifest`` side) ALWAYS includes the
-    key, encoding ``None`` as :data:`UNCAPPED_TOKENS` (r12, from the
-    r11 advice): a deliberately-uncapped index must be distinguishable
-    from a pre-cap legacy manifest, or a later query/append using the
-    DEFAULT cap would slip through the trust-the-caller migration path
-    and sign a 100k-token window against full-document corpus
-    signatures — the exact silent drift the manifest exists to prevent.
-    Trust-the-caller is reserved for manifests that lack the key
-    entirely (built before the cap existed).
-
-    The VALIDATION side passes ``None`` through as-is (decoded against
-    the sentinel in :func:`_validate_params`): an explicitly-uncapped
-    query against an index whose manifest records a cap must RAISE
-    (None vs 64 fails the eq rule), not silently compute full-document
-    signatures against a 64-token-window corpus (r11 review pass 3)."""
-    if max_tokens is None and record:
-        return {**params, "max_tokens": UNCAPPED_TOKENS}
-    return {**params, "max_tokens": max_tokens}
-
-
-def _conform_batch_id(
-    df: DataFrame,
-    id_col: str,
-    path: str,
-    flavor: str | None = None,
-    id_type: str | None = None,
-) -> DataFrame:
-    """Pin a batch's document-id type to the index's stored id type
-    (r12 probe — the id-type-drift dirty shape). Parquet happily
-    appends a string-id batch into a bigint-id index, leaving MIXED
-    schemas across one sub-dataset's files: the default read samples
-    ONE footer nondeterministically, so the index's id type flips per
-    read and a later legitimate query dies inside the scan (probed
-    live: a single string-id append poisoned every later bigint
-    query). Same contract as the tombstone log's ``_conform_id_type``:
-    identical type passes untouched (zero plan change); same-category
-    mismatches CAST, with cast loss raising loudly per-row inside the
-    plan (a lost id would otherwise become NULL and fall out silently
-    through the identity gate); cross-category mismatches raise at
-    call time naming both types. Query batches conform too, so
-    reported pair ids carry one coherent type instead of Spark's
-    silent join coercion.
-
-    ``id_type`` (r14): the manifest-recorded stored id type, passed by
-    callers that already read the manifest — skips the per-operation
-    parquet schema probe (listing + footer read, ~0.25 s of driver
-    constant per append/query). Indexes built before the field was
-    recorded fall back to the schema probe."""
-    spark = df.sparkSession
-    from dbt_foundation_spark.operators.tombstones import (
-        _index_id_type,
-        _type_category,
-    )
-
-    target = id_type or _index_id_type(spark, path, flavor)
-    got = df.schema[id_col].dataType.simpleString()
-    if target is None or got == target:
-        return df
-    if _type_category(got) != _type_category(target):
-        raise ValueError(
-            f"{path}: batch {id_col} is {got} but the index keys "
-            f"documents by {target} — appending would write mixed-schema "
-            "files (reads then flip type per sampled parquet footer) and "
-            "a query would coerce silently. Cast the id explicitly "
-            "upstream, or rebuild the index with the new type."
-        )
-    orig = F.col(id_col)
-    conformed = orig.try_cast(target)
-    return df.withColumn(
-        id_col,
-        F.when(
-            orig.isNotNull() & conformed.isNull(),
-            F.raise_error(
-                F.concat(
-                    F.lit(f"{path}: {id_col} value "),
-                    orig.cast("string"),
-                    F.lit(
-                        f" does not fit the index id type {target} "
-                        f"(cast from {got}) — fix the batch or rebuild "
-                        "the index with the wider type"
-                    ),
-                )
-            ),
-        ).otherwise(conformed),
+def _minhash_arrays(df, id_col, text_col, shingle_len, max_tokens, portable):
+    # one tokenize pass: the lazily pinned shingle-array frame feeds both
+    # the signature and the verify shingles. The stored verify shingles
+    # are xxhash64 longs for both flavors (dedup.py collision contract):
+    # the fast flavor pins the hashed frame outright (bit-identical
+    # signatures), the portable one hashes at write.
+    return pin(
+        _shingle_array_frame(
+            df, id_col, text_col, shingle_len, max_tokens, hashed=not portable
+        ),
+        eager=False,
     )
 
 
-def _conform_batch_vec(
-    df: DataFrame, vec_col: str, path: str, vec_type: str | None = None
-) -> DataFrame:
-    """The vector half of :func:`_conform_batch_id` for the embedding
-    flavor: an ``array<float>`` batch appended into an
-    ``array<double>`` vectors store (or vice versa) mixes parquet
-    schemas exactly like a drifted id. Numeric element drift CASTS to
-    the stored type; non-numeric drift raises. The schema probe goes
-    through :func:`tombstones.guarded_sub_read` (r12 advice), not a
-    bare ``spark.read.parquet``: an all-torn (only zero-byte files) or
-    mid-compaction-parked ``vectors`` dir gets the named torn-file /
-    rename-window error and heal like every other sub-dataset read,
-    instead of a generic schema-inference PATH_NOT_FOUND."""
-    from dbt_foundation_spark.operators.tombstones import (
-        _has_data_file,
-        _type_category,
-        guarded_sub_read,
-    )
-
-    spark = df.sparkSession
-    # manifest-recorded type (r14): skips the vectors-store schema
-    # probe; pre-record manifests fall back to it
-    if vec_type is not None:
-        stored = vec_type
-    else:
-        vp = f"{path}/vectors"
-        if not _has_data_file(spark, vp):
-            return df
-        stored = (
-            guarded_sub_read(spark, path, "vectors")
-            .schema["vec"].dataType.simpleString()
-        )
-    got = df.schema[vec_col].dataType.simpleString()
-    if got == stored:
-        return df
-    inner_got = got.removeprefix("array<").removesuffix(">")
-    inner_stored = stored.removeprefix("array<").removesuffix(">")
-    if (
-        not got.startswith("array<")
-        or not stored.startswith("array<")
-        or _type_category(inner_got) != "numeric"
-        or _type_category(inner_stored) != "numeric"
-    ):
-        raise ValueError(
-            f"{path}: batch {vec_col} is {got} but the index stores "
-            f"{stored} — appending would write mixed-schema files; cast "
-            "the vectors upstream or rebuild the index"
-        )
-    return df.withColumn(vec_col, F.col(vec_col).cast(stored))
-
-
-def _write_manifest(
-    df: DataFrame, path: str, params: dict, id_col: str | None = None
-) -> None:
-    """Record the index's build parameters as a one-row JSON dataset —
-    written through Spark so it lands next to the index on any store.
-
-    ``id_col`` (r14): when given, the stored document-id TYPE is
-    recorded as ``id_type`` — the batch-conform paths then skip their
-    per-operation parquet schema probe of the stored datasets
-    (:func:`_conform_batch_id`). The stored type is exactly
-    ``df[id_col]``'s type (builders alias the column unchanged), and
-    every later append conforms to it, so the record cannot drift.
-
-    Called by every ``build_*`` (all five flavors, incl. the IVF index
-    in operators/similarity.py), so it is also where a COMPLETED
-    rebuild clears the tombstone log: the new corpus is a fresh id
-    space, and a stale log would silently hide any recycled id
-    (operators/tombstones.py). Deliberately at the END of the build —
-    a build that crashes mid-way leaves mixed-generation datasets
-    whatever the ordering, the recovery is to RE-RUN the build, and
-    clearing up-front would instead let a crashed rebuild resurrect
-    retracted docs (the worse failure for takedown compliance)."""
-    from dbt_foundation_spark.operators.tombstones import clear_tombstones
-
-    spark = df.sparkSession
-    # _rebuild_reset: the rebuild just replaced every dataset, so the
-    # clear bypasses the revive/compaction handshake and removes any
-    # stale __compacting/__reviving marker — those guarded a generation
-    # that no longer exists, and raising here would leave the new index
-    # with a stale log and no manifest (the worse failure)
-    clear_tombstones(spark, path, _rebuild_reset=True)
-    # manifest_version 2 = the cap key is always present (UNCAPPED_TOKENS
-    # for cap-less builds); version 1 / absent = pre-cap legacy, the only
-    # manifests allowed the trust-the-caller path for max_tokens.
-    # Arrow-routed with an explicit schema mirroring createDataFrame's
-    # dict inference (sorted keys; bool/int/float/str → boolean/bigint/
-    # double/string): the classic one-dict path + coalesce(1) paid ~7 s
-    # of serial slice fetches per build on local[32] (local_data.py);
-    # any param type outside that set falls back to the classic path.
-    payload = {**params, "manifest_version": 2}
-    if id_col is not None:
-        payload["id_type"] = df.schema[id_col].dataType.simpleString()
-    _T = {bool: "boolean", int: "bigint", float: "double", str: "string"}
-    if all(type(v) in _T for v in payload.values()):
-        from dbt_foundation_spark.local_data import local_frame
-
-        ddl = ", ".join(
-            f"`{k}` {_T[type(payload[k])]}" for k in sorted(payload)
-        )
-        mdf = local_frame(spark, [payload], ddl)
-    else:
-        mdf = spark.createDataFrame([payload])
-    mdf.coalesce(1).write.mode("overwrite").json(f"{path}/manifest")
-
-
-def _read_manifest(spark: SparkSession, path: str) -> dict | None:
-    from dbt_foundation_spark.operators.tombstones import assert_literal_path
-
-    assert_literal_path(path, "index path")
-    # absent-DIRECTORY probe via the FileSystem, not a read + caught
-    # AnalysisException: a pre-manifest index — trust the caller, as
-    # before manifests existed. (fs probes, not try/except — Spark
-    # logs the JVM stack of even CAUGHT exceptions, burying
-    # bench/driver tails under harmless py4j traces; r6 verdict #4.)
-    # An EXISTING dir with no data file is NOT pre-manifest: that is
-    # the crash window of _write_manifest's overwrite (old manifest
-    # deleted, new part not committed) — raise loudly; silently
-    # skipping validation there would re-open the exact footgun the
-    # manifest exists to close. Any other read failure (permissions,
-    # transient store error) propagates for the same reason.
-    from dbt_foundation_spark.operators.tombstones import _hadoop, _has_data_file
-
-    mpath = f"{path}/manifest"
-    mp, mfs = _hadoop(spark, mpath)
-    if not mfs.exists(mp):
-        return None
-    if not _has_data_file(spark, mpath):
-        raise ValueError(
-            f"{mpath} exists but holds no data file — a manifest write "
-            "crashed mid-overwrite; re-run the build (which rewrites "
-            "the manifest) rather than operating unvalidated"
-        )
-    # torn-manifest gate (r12 review): a ZERO-BYTE manifest part file
-    # reads as an empty JSON dataset (first() -> None), which the
-    # pre-manifest migration below would treat as "validate nothing,
-    # trust the caller" — silently disabling every flavor/param check
-    # the manifest exists for. Same fate as the torn tombstone log:
-    # refuse loudly naming the heal.
-    from dbt_foundation_spark.operators.tombstones import zero_byte_files
-
-    torn = zero_byte_files(spark, mpath)
-    if torn:
-        raise ValueError(
-            f"{mpath}: manifest holds zero-byte torn file(s) "
-            f"({', '.join(torn)}) — reading it as absent would silently "
-            "disable parameter validation; re-run the build (which "
-            "rewrites the manifest) or restore the file"
-        )
-    # Driver-side read, not spark.read.json (r13 manifest-corruption
-    # probe): the manifest is ONE tiny JSON row, and the Spark reader
-    # had two bad fates here — garbage/truncated bytes surfaced as the
-    # generic QUERY_ONLY_CORRUPT_RECORD_COLUMN AnalysisException
-    # (naming neither the file nor the heal), and a MULTI-ROW manifest
-    # (a torn or duplicated write) was SILENTLY accepted because
-    # .first() picks one row nondeterministically — a second
-    # conflicting row could flip signing parameters per read, the
-    # footer-sampling bug's control-plane twin. Reading the visible
-    # files through the Hadoop FS (tombstones.read_small_text_lines —
-    # any file name, so the documented restore-the-file heal works
-    # under any sane name) keeps any store Spark can reach, costs no
-    # job, and lets every failure name the file and the heal.
-    import json as _json
-
-    from dbt_foundation_spark.operators.tombstones import read_small_text_lines
-
-    rows = read_small_text_lines(spark, mpath)
-    if len(rows) != 1:
-        raise ValueError(
-            f"{mpath}: manifest holds {len(rows)} rows, expected exactly "
-            "1 — a torn or duplicated manifest write; reading one row "
-            "nondeterministically could silently change the index's "
-            "signing parameters per query. Rebuild the index (which "
-            "rewrites the manifest) or restore the single-row file"
-        )
-    fname, line = rows[0]
-    try:
-        m = _json.loads(line)
-    except ValueError:
-        raise ValueError(
-            f"{mpath}/{fname}: manifest bytes are not valid JSON — a "
-            "torn write or store corruption; rebuild the index (which "
-            "rewrites the manifest) or restore the file. Refusing to "
-            "operate unvalidated"
-        ) from None
-    if not isinstance(m, dict) or "flavor" not in m:
-        raise ValueError(
-            f"{path}/manifest exists but is corrupt (empty or no 'flavor' "
-            "field) — rebuild the index or restore the manifest; refusing "
-            "to validate queries against a half-written manifest"
-        )
-    return m
-
-
-def _check_manifest(
-    spark: SparkSession, path: str, caller: dict, ranges: dict | None = None
-) -> dict:
-    """Validate caller parameters against the stored manifest.
-
-    Equality is required for every key unless ``ranges`` marks it
-    ``"lte"``/``"gte"`` (caller value ≤ / ≥ the build value is safe).
-    Returns the BUILD values (callers use them where the index layout,
-    not the query, dictates the computation). Missing manifest →
-    caller values returned untouched."""
-    from dbt_foundation_spark.operators.tombstones import assert_literal_path
-
-    assert_literal_path(path, "index path")
-    return _validate_params(path, _read_manifest(spark, path), caller, ranges)
-
-
-def _validate_params(
-    path: str, m: dict | None, caller: dict, ranges: dict | None = None
-) -> dict:
-    """The validation half of :func:`_check_manifest`, split out so
-    callers that also need other manifest fields (the embedding flavor
-    reads ``dim``) read the manifest dataset ONCE per call."""
-    if m is None:
-        return dict(caller)
-    resolved = {}
-    for k, v in caller.items():
-        b = m.get(k)
-        if b is None:
-            # key absent (or null — Spark's JSON reader drops all-null
-            # columns, so absent and null are indistinguishable here):
-            # a manifest from before this key existed — trust the
-            # caller, the documented legacy migration. Deliberately
-            # cap-less indexes are NOT on this path: they record the
-            # UNCAPPED_TOKENS sentinel (r12).
-            resolved[k] = v
-            continue
-        if k == "max_tokens" and b == UNCAPPED_TOKENS:
-            b = None  # decode: the index was built explicitly uncapped
-        rule = (ranges or {}).get(k, "eq")
-        ok = (
-            v == b
-            if rule == "eq"
-            # range rules never apply to None-able keys; guard anyway so
-            # a future None doesn't TypeError inside the comparison
-            else (v is not None and b is not None)
-            and (v <= b if rule == "lte" else v >= b)
-        )
-        if not ok:
-            op = {"lte": "<=", "gte": ">=", "eq": "=="}[rule]
-            raise ValueError(
-                f"{path}: index built with {k}={b!r}, query passed {v!r} "
-                f"(need caller {op} build) — mismatched parameters would "
-                "silently return wrong candidates"
-            )
-        resolved[k] = b
-    # manifest-only extras ride along (r14): keys the caller did not
-    # pass (and therefore never validate) — e.g. the recorded id_type —
-    # so callers get build-time facts without a second manifest read or
-    # a stored-dataset schema probe. setdefault: a validated caller key
-    # always wins its resolved value.
-    for k, b in m.items():
-        resolved.setdefault(k, b)
-    return resolved
-
-
-def _live(
-    spark: SparkSession, path: str, sub: str, tomb: DataFrame | None
-) -> DataFrame:
-    """Read an index sub-dataset restricted to LIVE documents — the
-    stored rows minus the tombstone log (operators/tombstones.py).
-    Every stored dataset in the dedup flavors keys documents by ``id``,
-    so the subtraction is uniform; ``tomb`` is the log read ONCE per
-    query via ``read_tombstones`` (several sub-datasets share it), and
-    ``None`` gets the bare scan back (no join in the plan). The read
-    itself routes through the compaction rename-window guard
-    (tombstones.guarded_sub_read, r12): a sub-dataset missing mid-swap
-    raises naming the compaction, never PATH_NOT_FOUND or a subset."""
-    from dbt_foundation_spark.operators.tombstones import (
-        guarded_sub_read,
-        subtract_tombstones,
-    )
-
-    return subtract_tombstones(
-        spark, path, guarded_sub_read(spark, path, sub), "id", tomb=tomb
-    )
-
-
-# The stored verify-shingle frame is derived from dedup._shingle_array_
-# frame at every call site (r13) — ONE tokenize pass shared with the
-# signature; that helper carries the max_tokens-consistency and NULL-id
-# contracts the old local _shingle_sets duplicated (removed as dead
-# code on the r13 review pass).
+def _minhash_bands(arr, num_hashes, bands, portable) -> DataFrame:
+    sig = _minhash_sig_from_arrays(arr, num_hashes, portable, hashed=not portable)
+    return _band_buckets(sig, bands, banding_geometry(num_hashes, bands), portable)
 
 
 def build_minhash_index(
@@ -517,53 +151,25 @@ def build_minhash_index(
     ``max_tokens`` (the giant-document cap) is recorded in the manifest
     and enforced on every append/query: it defines the signature space
     like num_hashes/shingle_len do."""
-    from dbt_foundation_spark.operators.tombstones import assert_literal_path
-    from dbt_foundation_spark.parallelism import fan_out
-
     assert_literal_path(path, "index path")
     # undersized-scan fan-out (parallelism.py): a corpus arriving as
     # fewer splits than cores would serialize the shingling/signature
     # stage on those tasks; identity on a real many-file corpus
     df = fan_out(df)
-    # one tokenize pass (r13): the lazily pinned shingle-array frame
-    # feeds BOTH stored datasets — pre-pin the signature write and the
-    # shingle-store write each re-tokenized the corpus from its own scan.
-    # r14: the stored verify shingles are xxhash64 longs for BOTH
-    # flavors (~3× smaller store + verify join; dedup.py collision
-    # contract) — the fast flavor pins the hashed frame outright
-    # (bit-identical signatures), the portable one hashes at write.
-    hashed = not portable
-    arr = pin(
-        _shingle_array_frame(
-            df, id_col, text_col, shingle_len, max_tokens, hashed=hashed
-        ),
-        eager=False,
-    )
-    sig = _minhash_sig_from_arrays(arr, num_hashes, portable, hashed=hashed)
-    banded = (
-        _band_buckets(sig, bands, banding_geometry(num_hashes, bands), portable)
-        .withColumnRenamed("_id", "id")
-        .repartition(index_partitions, "band", "bucket")
-    )
-    banded.write.mode("overwrite").parquet(f"{path}/bands")
-    _hashed_attach(arr, hashed).select(
-        F.col("_id").alias("id"), F.col("_sh").alias("shingles")
-    ).write.mode("overwrite").parquet(f"{path}/shingles")
-    _write_manifest(
+    arr = _minhash_arrays(df, id_col, text_col, shingle_len, max_tokens, portable)
+    write_index(
         df,
+        id_col,
         path,
-        _cap_params(
-            {
-                "flavor": "minhash",
-                "num_hashes": num_hashes,
-                "bands": bands,
-                "shingle_len": shingle_len,
-                "portable": portable,
-            },
-            max_tokens,
-            record=True,
-        ),
-        id_col=id_col,
+        _minhash_params(num_hashes, bands, shingle_len, portable, max_tokens),
+        {
+            "bands": _minhash_bands(arr, num_hashes, bands, portable)
+            .withColumnRenamed("_id", "id")
+            .repartition(index_partitions, "band", "bucket"),
+            "shingles": _hashed_attach(arr, not portable).select(
+                F.col("_id").alias("id"), F.col("_sh").alias("shingles")
+            ),
+        },
     )
 
 
@@ -588,65 +194,39 @@ def dedup_against_index(
     with (they define the hash family) — validated against the stored
     manifest, raising on mismatch. ``jaccard_threshold`` is query-time
     only and free to vary."""
-    resolved = _check_manifest(
+    idx = open_index(
         spark,
         path,
-        _cap_params(
-            {
-                "flavor": "minhash",
-                "num_hashes": num_hashes,
-                "bands": bands,
-                "shingle_len": shingle_len,
-                "portable": portable,
-            },
-            max_tokens,
-        ),
+        _minhash_params(num_hashes, bands, shingle_len, portable, max_tokens),
     )
-    from dbt_foundation_spark.operators.dedup import similarity_threshold
-
     similarity_threshold(jaccard_threshold, "jaccard_threshold")
-    new_df = _conform_batch_id(new_df, id_col, path, "minhash", id_type=resolved.get("id_type"))
-    # one tokenize pass over the batch (r13): the pinned array frame
-    # feeds the batch signature AND the verify attach. r14: hash-space
-    # verify against the long-hashed shingle store (see build).
-    hashed = not portable
-    arr_new = pin(
-        _shingle_array_frame(
-            new_df, id_col, text_col, shingle_len, max_tokens, hashed=hashed
-        ),
-        eager=False,
+    new_df = idx.conform(new_df, id_col)
+    arr_new = _minhash_arrays(
+        new_df, id_col, text_col, shingle_len, max_tokens, portable
     )
-    sig_new = _minhash_sig_from_arrays(arr_new, num_hashes, portable, hashed=hashed)
-    banded_new = _band_buckets(sig_new, bands, banding_geometry(num_hashes, bands), portable)
-    from dbt_foundation_spark.operators.tombstones import read_tombstones
-
-    tomb = read_tombstones(spark, path)
-    index_bands = _live(spark, path, "bands", tomb)
+    banded_new = _minhash_bands(arr_new, num_hashes, bands, portable)
     cand = (
         banded_new.select("band", "bucket", F.col("_id").alias("new_id"))
         .join(
-            index_bands.select("band", "bucket", F.col("id").alias("corpus_id")),
+            idx.live("bands").select(
+                "band", "bucket", F.col("id").alias("corpus_id")
+            ),
             ["band", "bucket"],
         )
         .select("new_id", "corpus_id")
         .dropDuplicates(["new_id", "corpus_id"])
     )
-    sh_new = _hashed_attach(arr_new, hashed).select(
+    sh_new = _hashed_attach(arr_new, not portable).select(
         F.col("_id").alias("new_id"), F.col("_sh").alias("sh_a")
     )
-    sh_corpus = _live(spark, path, "shingles", tomb).select(
+    sh_corpus = idx.live("shingles").select(
         F.col("id").alias("corpus_id"), F.col("shingles").alias("sh_b")
     )
     pairs = cand.join(sh_new, "new_id").join(sh_corpus, "corpus_id")
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size(F.array_union("sh_a", "sh_b"))
-    # One row per (new_id, corpus_id), STRONGEST version wins: an id
-    # appended more than once with different content (or duplicated in
-    # the batch) has several live shingle rows, and the verify join
-    # would emit one row per version — duplicate pairs with different
-    # jaccard values. Fold to max: "near-dup if ANY stored version
-    # matches", deterministic, output-sized agg (see module docstring,
-    # multi-version contract).
+    # one row per (new_id, corpus_id), strongest version wins
+    # (multi-version contract, module docstring)
     return (
         pairs.withColumn("jaccard", F.try_divide(inter, union))
         .filter(F.col("jaccard") >= jaccard_threshold)
@@ -667,61 +247,42 @@ def append_to_index(
     owner: str | None = None,
     max_tokens: int | None = SIGNATURE_MAX_TOKENS,
 ) -> None:
-    """Admit a (deduped) batch into the index: append its band rows and
-    shingle sets. Appends — never rewrites — so the index grows by one
-    file set per ingest; fold accumulated micro-batch files back to
-    target-sized, key-clustered files with
-    operators.maintenance.compact_index.
-
-    Concurrency (r10 verdict #4): the whole write holds the
-    ``__appending`` marker (``tombstones.hold_append_marker``) —
-    concurrent appends to one index and append-during-compaction are
-    both refused loudly; ``owner`` is the streaming ingests' stable
-    reclaim identity. Sub-datasets write VERIFY store first (shingles),
-    discovery rows last (bands): a concurrent reader mid-append either
-    sees the batch fully admitted or not yet discoverable — never a
-    band candidate whose verify shingles are missing."""
-    from dbt_foundation_spark.operators.tombstones import hold_append_marker
-
-    resolved = _check_manifest(
+    """Admit a (deduped) batch into the index: append its shingle sets,
+    then its band rows (index_core's verify-first append). Appends —
+    never rewrites — so the index grows by one file set per ingest; fold
+    accumulated micro-batch files back to target-sized, key-clustered
+    files with operators.maintenance.compact_index. ``owner`` is the
+    streaming ingests' stable append-marker reclaim identity."""
+    idx = open_index(
         df.sparkSession,
         path,
-        _cap_params(
-            {
-                "flavor": "minhash",
-                "num_hashes": num_hashes,
-                "bands": bands,
-                "shingle_len": shingle_len,
-                "portable": portable,
-            },
-            max_tokens,
-        ),
+        _minhash_params(num_hashes, bands, shingle_len, portable, max_tokens),
     )
-    df = _conform_batch_id(df, id_col, path, "minhash", id_type=resolved.get("id_type"))
-    with hold_append_marker(df.sparkSession, path, owner):
-        # one tokenize pass per batch (r13): the pinned array frame
-        # feeds the shingle-store write AND the band write; the
-        # verify-first write ORDER (shingles, then bands) is the
-        # concurrency contract and is unchanged. r14: long-hashed
-        # shingle store, matching build_minhash_index.
-        hashed = not portable
-        arr = pin(
-            _shingle_array_frame(
-                df, id_col, text_col, shingle_len, max_tokens, hashed=hashed
+    df = idx.conform(df, id_col)
+    arr = _minhash_arrays(df, id_col, text_col, shingle_len, max_tokens, portable)
+    idx.append(
+        {
+            "shingles": _hashed_attach(arr, not portable).select(
+                F.col("_id").alias("id"), F.col("_sh").alias("shingles")
             ),
-            eager=False,
-        )
-        _hashed_attach(arr, hashed).select(
-            F.col("_id").alias("id"), F.col("_sh").alias("shingles")
-        ).write.mode("append").parquet(f"{path}/shingles")
-        sig = _minhash_sig_from_arrays(arr, num_hashes, portable, hashed=hashed)
-        banded = _band_buckets(
-            sig, bands, banding_geometry(num_hashes, bands), portable
-        ).withColumnRenamed("_id", "id")
-        banded.write.mode("append").parquet(f"{path}/bands")
+            "bands": _minhash_bands(
+                arr, num_hashes, bands, portable
+            ).withColumnRenamed("_id", "id"),
+        },
+        owner,
+    )
 
 
 # ---------- simhash chunk index ----------
+
+
+def _simhash_params(max_hamming, portable, max_tokens) -> dict:
+    return {
+        "flavor": "simhash",
+        "max_hamming": max_hamming,
+        "portable": portable,
+        "max_tokens": max_tokens,
+    }
 
 
 def _simhash_chunks(
@@ -753,23 +314,17 @@ def build_simhash_index(
     a chunk explode written clustered on the (chunk, ck) join key.
     ``max_hamming`` fixes the chunking — queries may use the same or a
     TIGHTER radius (the manifest enforces caller ≤ build)."""
-    from dbt_foundation_spark.operators.tombstones import assert_literal_path
-
     assert_literal_path(path, "index path")
-    _simhash_chunks(
-        df, id_col, text_col, max_hamming, portable, max_tokens
-    ).repartition(index_partitions, "chunk", "ck").write.mode(
-        "overwrite"
-    ).parquet(f"{path}/chunks")
-    _write_manifest(
+    write_index(
         df,
+        id_col,
         path,
-        _cap_params(
-            {"flavor": "simhash", "max_hamming": max_hamming, "portable": portable},
-            max_tokens,
-            record=True,
-        ),
-        id_col=id_col,
+        _simhash_params(max_hamming, portable, max_tokens),
+        {
+            "chunks": _simhash_chunks(
+                df, id_col, text_col, max_hamming, portable, max_tokens
+            ).repartition(index_partitions, "chunk", "ck")
+        },
     )
 
 
@@ -794,28 +349,22 @@ def dedup_against_simhash_index(
     the equi-join lines up with the stored layout — any pair within the
     caller radius is within the build radius, so some chunk still
     matches — and the hamming filter applies the caller's radius."""
-    resolved = _check_manifest(
+    idx = open_index(
         spark,
         path,
-        _cap_params(
-            {"flavor": "simhash", "max_hamming": max_hamming, "portable": portable},
-            max_tokens,
-        ),
+        _simhash_params(max_hamming, portable, max_tokens),
         ranges={"max_hamming": "lte"},
     )
-    new_df = _conform_batch_id(new_df, id_col, path, "simhash", id_type=resolved.get("id_type"))
+    new_df = idx.conform(new_df, id_col)
     new_chunks = _simhash_chunks(
-        new_df, id_col, text_col, int(resolved["max_hamming"]), portable, max_tokens
+        new_df, id_col, text_col, int(idx.params["max_hamming"]), portable, max_tokens
     )
-    from dbt_foundation_spark.operators.tombstones import read_tombstones
-
-    idx = _live(spark, path, "chunks", read_tombstones(spark, path))
     return (
         new_chunks.select(
             "chunk", "ck", F.col("id").alias("new_id"), F.col("simhash").alias("sh_a")
         )
         .join(
-            idx.select(
+            idx.live("chunks").select(
                 "chunk",
                 "ck",
                 F.col("id").alias("corpus_id"),
@@ -825,12 +374,9 @@ def dedup_against_simhash_index(
         )
         .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
         .filter(F.col("hamming") <= max_hamming)
-        # min per pair, not dropDuplicates: with one live version per id
-        # every surviving row of a pair carries the same hamming and the
-        # two are equivalent — but a multi-version id (re-appended with
-        # changed text) has several signatures, and dropDuplicates would
-        # keep an ARBITRARY version's distance. Closest version wins,
-        # deterministically (module docstring, multi-version contract).
+        # min per pair, not dropDuplicates: a multi-version id has
+        # several signatures, and dropDuplicates would keep an ARBITRARY
+        # version's distance. Closest version wins, deterministically.
         .groupBy("new_id", "corpus_id")
         .agg(F.min("hamming").alias("hamming"))
     )
@@ -847,29 +393,44 @@ def append_to_simhash_index(
     max_tokens: int | None = SIGNATURE_MAX_TOKENS,
 ) -> None:
     """Admit a (deduped) batch's chunk rows into the index (append-only,
-    same contract as :func:`append_to_index`, including its
-    ``__appending`` exclusion — single sub-dataset, so the chunk rows
-    carry discovery and verify together). Chunking must match the
-    index layout exactly, so ``max_hamming`` must EQUAL the build value
-    here (manifest-enforced) — only queries may tighten the radius."""
-    from dbt_foundation_spark.operators.tombstones import hold_append_marker
-
-    resolved = _check_manifest(
-        df.sparkSession,
-        path,
-        _cap_params(
-            {"flavor": "simhash", "max_hamming": max_hamming, "portable": portable},
-            max_tokens,
-        ),
+    same contract as :func:`append_to_index` — single sub-dataset, so
+    the chunk rows carry discovery and verify together). Chunking must
+    match the index layout exactly, so ``max_hamming`` must EQUAL the
+    build value here (manifest-enforced) — only queries may tighten the
+    radius."""
+    idx = open_index(
+        df.sparkSession, path, _simhash_params(max_hamming, portable, max_tokens)
     )
-    df = _conform_batch_id(df, id_col, path, "simhash", id_type=resolved.get("id_type"))
-    with hold_append_marker(df.sparkSession, path, owner):
-        _simhash_chunks(
-            df, id_col, text_col, max_hamming, portable, max_tokens
-        ).write.mode("append").parquet(f"{path}/chunks")
+    df = idx.conform(df, id_col)
+    idx.append(
+        {
+            "chunks": _simhash_chunks(
+                df, id_col, text_col, max_hamming, portable, max_tokens
+            )
+        },
+        owner,
+    )
 
 
 # ---------- containment prefix-posting index ----------
+
+
+def _containment_params(shingle_len, threshold, max_tokens) -> dict:
+    return {
+        "flavor": "containment",
+        "shingle_len": shingle_len,
+        "threshold": threshold,
+        "max_tokens": max_tokens,
+    }
+
+
+def _hash_sets(df, id_col, text_col, shingle_len, max_tokens) -> DataFrame:
+    # one tokenize+hash pass: postings, prefixes and the hash-set
+    # payload all read the lazily pinned frame
+    return pin(
+        hashed_shingle_sets(df, id_col, text_col, shingle_len, max_tokens),
+        eager=False,
+    )
 
 
 def build_containment_index(
@@ -887,35 +448,21 @@ def build_containment_index(
     corpus-side prefix postings at the BUILD threshold (query with the
     same or a higher threshold — a longer prefix than required only adds
     candidates, never loses one), and the hash-set verify payload."""
-    from dbt_foundation_spark.operators.tombstones import assert_literal_path
-
     assert_literal_path(path, "index path")
-    # one tokenize+hash pass (r13): the pinned hash-set frame feeds the
-    # postings, the prefixes, and the hashsets write — pre-pin the
-    # hashsets write re-tokenized the corpus from its own scan
-    hs = pin(
-        hashed_shingle_sets(df, id_col, text_col, shingle_len, max_tokens),
-        eager=False,
-    )
+    hs = _hash_sets(df, id_col, text_col, shingle_len, max_tokens)
     post, pref = containment_postings(hs, threshold)
-    post.select("id", "n", "s").repartition(index_partitions, "s").write.mode(
-        "overwrite"
-    ).parquet(f"{path}/postings")
-    pref.write.mode("overwrite").parquet(f"{path}/prefixes")
-    hs.write.mode("overwrite").parquet(f"{path}/hashsets")
-    _write_manifest(
+    write_index(
         df,
+        id_col,
         path,
-        _cap_params(
-            {
-                "flavor": "containment",
-                "shingle_len": shingle_len,
-                "threshold": threshold,
-            },
-            max_tokens,
-            record=True,
-        ),
-        id_col=id_col,
+        _containment_params(shingle_len, threshold, max_tokens),
+        {
+            "postings": post.select("id", "n", "s").repartition(
+                index_partitions, "s"
+            ),
+            "prefixes": pref,
+            "hashsets": hs,
+        },
     )
 
 
@@ -944,40 +491,21 @@ def containment_against_index(
     enforced caller ≥ build): stored corpus prefixes are then longer
     than the query needs — extra candidates, never a lost pair — while
     the batch's own prefixes and the verify use the caller's value."""
-    resolved = _check_manifest(
+    idx = open_index(
         spark,
         path,
-        _cap_params(
-            {
-                "flavor": "containment",
-                "shingle_len": shingle_len,
-                "threshold": threshold,
-            },
-            max_tokens,
-        ),
+        _containment_params(shingle_len, threshold, max_tokens),
         ranges={"threshold": "gte"},
     )
-    from dbt_foundation_spark.operators.dedup import similarity_threshold
-
     similarity_threshold(threshold, "threshold")
-    new_df = _conform_batch_id(new_df, id_col, path, "containment", id_type=resolved.get("id_type"))
-    # one tokenize+hash pass over the batch (r13): postings, prefixes
-    # and the verify attach all read the pinned hash-set frame
-    hs_new = pin(
-        hashed_shingle_sets(new_df, id_col, text_col, shingle_len, max_tokens),
-        eager=False,
-    )
+    new_df = idx.conform(new_df, id_col)
+    hs_new = _hash_sets(new_df, id_col, text_col, shingle_len, max_tokens)
     post_new, pref_new = containment_postings(hs_new, threshold)
-    from dbt_foundation_spark.operators.tombstones import read_tombstones
-
-    tomb = read_tombstones(spark, path)
-    idx_post = _live(spark, path, "postings", tomb)
-    idx_pref = _live(spark, path, "prefixes", tomb)
     c1 = pref_new.select(F.col("id").alias("new_id"), "s").join(
-        idx_post.select(F.col("id").alias("corpus_id"), "s"), "s"
+        idx.live("postings").select(F.col("id").alias("corpus_id"), "s"), "s"
     )
     c2 = post_new.select(F.col("id").alias("new_id"), "s").join(
-        idx_pref.select(F.col("id").alias("corpus_id"), "s"), "s"
+        idx.live("prefixes").select(F.col("id").alias("corpus_id"), "s"), "s"
     )
     cand = (
         c1.select("new_id", "corpus_id")
@@ -985,7 +513,7 @@ def containment_against_index(
         .dropDuplicates(["new_id", "corpus_id"])
     )
     sh_a = hs_new.select(F.col("id").alias("new_id"), F.col("hs").alias("sh_a"))
-    sh_b = _live(spark, path, "hashsets", tomb).select(
+    sh_b = idx.live("hashsets").select(
         F.col("id").alias("corpus_id"), F.col("hs").alias("sh_b")
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
@@ -994,16 +522,12 @@ def containment_against_index(
         .join(sh_b, "corpus_id")
         .withColumn("containment_new", F.try_divide(inter, F.size("sh_a")))
         .withColumn("containment_corpus", F.try_divide(inter, F.size("sh_b")))
-        # column-wise max per pair BEFORE the threshold gate (r10
-        # advice): a multi-version id (re-appended with changed text)
-        # yields one verify row per stored version, and a version that
-        # fails the combined gate can still carry the strongest
-        # one-sided evidence — filtering first understated the reported
-        # per-direction maximum. The surviving PAIR set is unchanged
-        # (greatest of the maxima >= t iff some version passed), only
-        # the reported maxima are now true maxima over every verified
-        # candidate version (the two may come from different versions —
-        # documented in the module docstring's multi-version contract).
+        # column-wise max per pair BEFORE the threshold gate: a version
+        # that fails the combined gate can still carry the strongest
+        # one-sided evidence, so filtering first would understate the
+        # reported per-direction maximum. The surviving PAIR set is the
+        # same either way (greatest of the maxima >= t iff some version
+        # passed); the two maxima may come from different versions.
         .groupBy("new_id", "corpus_id")
         .agg(
             F.max("containment_new").alias("containment_new"),
@@ -1026,111 +550,50 @@ def append_to_containment_index(
     max_tokens: int | None = SIGNATURE_MAX_TOKENS,
 ) -> None:
     """Admit a (deduped) batch into the containment index: append its
-    postings, its prefix postings (ordered by the BATCH's own df —
-    any ordering preserves the pigeonhole bound), and its hash sets.
+    hash sets, then its postings and its prefix postings (ordered by the
+    BATCH's own df — any ordering preserves the pigeonhole bound).
     Appended prefixes must be at least as long as the build threshold
     demands, so ``threshold`` must EQUAL the build value here
-    (manifest-enforced) — only queries may raise it.
-
-    Concurrency: same ``__appending`` exclusion as
-    :func:`append_to_index`. Write order is verify store first
-    (hashsets), then the discovery postings/prefixes — a reader
-    mid-append can under-discover the in-flight batch but every
-    candidate it does propose has its verify row."""
-    from dbt_foundation_spark.operators.tombstones import hold_append_marker
-
-    resolved = _check_manifest(
-        df.sparkSession,
-        path,
-        _cap_params(
-            {
-                "flavor": "containment",
-                "shingle_len": shingle_len,
-                "threshold": threshold,
-            },
-            max_tokens,
-        ),
+    (manifest-enforced) — only queries may raise it."""
+    idx = open_index(
+        df.sparkSession, path, _containment_params(shingle_len, threshold, max_tokens)
     )
-    df = _conform_batch_id(df, id_col, path, "containment", id_type=resolved.get("id_type"))
-    with hold_append_marker(df.sparkSession, path, owner):
-        # one tokenize+hash pass per batch (r13, see build_prefix_index)
-        hs = pin(
-            hashed_shingle_sets(df, id_col, text_col, shingle_len, max_tokens),
-            eager=False,
-        )
-        post, pref = containment_postings(hs, threshold)
-        hs.write.mode("append").parquet(f"{path}/hashsets")
-        post.select("id", "n", "s").write.mode("append").parquet(f"{path}/postings")
-        pref.write.mode("append").parquet(f"{path}/prefixes")
+    df = idx.conform(df, id_col)
+    hs = _hash_sets(df, id_col, text_col, shingle_len, max_tokens)
+    post, pref = containment_postings(hs, threshold)
+    idx.append(
+        {"hashsets": hs, "postings": post.select("id", "n", "s"), "prefixes": pref},
+        owner,
+    )
 
 
 # ---------- embedding (banded hyperplane-LSH) index ----------
 
 
+def _embedding_params(m, bands, seed, dim, **extra) -> dict:
+    params = {"flavor": "embedding", "m": m, "bands": bands, "seed": seed, **extra}
+    if dim is not None:
+        params["dim"] = dim
+    return params
 
 
+def _embedding_bands(df, id_col, vec_col, m, bands, seed, dim) -> DataFrame:
+    return hyperplane_banded(
+        df,
+        id_col,
+        vec_col,
+        random_hyperplanes(dim, m, seed),
+        bands,
+        banding_geometry(m, bands, "m"),
+    )
 
 
-# dataset name -> the cluster key each build_*/append_* writes with;
-# operators.maintenance.compact_index reads this so compaction and the
-# builders can never disagree about layout
-INDEX_LAYOUT: dict[str, dict[str, tuple[str, ...]]] = {
-    "minhash": {"bands": ("band", "bucket"), "shingles": ("id",)},
-    "simhash": {"chunks": ("chunk", "ck")},
-    "containment": {"postings": ("s",), "prefixes": ("s",), "hashsets": ("id",)},
-    "embedding": {"bands": ("band", "bucket"), "vectors": ("id",)},
-    # the similarity-family flavor (operators/similarity.py:
-    # build/append/search_ivf_index); lists is HIVE-PARTITIONED on
-    # _ivf_list — see INDEX_PARTITIONED. ingest_log exists only when
-    # streaming.run_ivf_ingest maintains the index (compact_index
-    # skips absent sub-datasets).
-    "ivf": {"lists": ("_ivf_list",), "centroids": (), "ingest_log": ()},
-}
-
-# (flavor, sub-dataset) pairs whose key columns are hive PARTITION
-# directories, not data columns: compaction must rewrite them with
-# partitionBy or the rewrite silently flattens the layout and the
-# reader's partition pruning degrades to a data filter.
-INDEX_PARTITIONED: set[tuple[str, str]] = {("ivf", "lists")}
-
-# (flavor, sub-dataset) pairs that are SET-semantic and may carry
-# byte-identical duplicate rows after a crash-window batch replay
-# (streaming.run_ivf_ingest: a crash between append and its marker
-# write): compaction drops exact-duplicate rows, restoring
-# exactly-once state.
-# Every stored dataset below is a SET by construction (band/chunk/
-# posting membership rows, one signature or hash-set row per doc) —
-# row multiplicity never carries meaning, queries distinct their
-# candidate pairs, and the only way a byte-identical duplicate row
-# appears is a crash-window batch replay (the streaming ingests'
-# append-then-crash-then-replay paths). Folding duplicates at
-# compaction therefore both shrinks the rewrite and HEALS every such
-# replay window, uniformly across flavors — the same contract
-# run_ivf_ingest has always leaned on for the lists dataset.
-INDEX_DISTINCT_ON_COMPACT: set[tuple[str, str]] = {
-    ("ivf", "lists"),
-    ("minhash", "bands"),
-    ("minhash", "shingles"),
-    ("simhash", "chunks"),
-    ("containment", "postings"),
-    ("containment", "prefixes"),
-    ("containment", "hashsets"),
-    ("embedding", "bands"),
-    ("embedding", "vectors"),
-}
-
-
-def _resolve_dim(resolved: dict, mft: dict | None, df: DataFrame, vec_col: str) -> int:
-    """Embedding-index dim: caller value (already manifest-equality-
-    checked, in ``resolved``) → manifest record → sniff from the batch
-    (pre-manifest indexes only — sniffing risks silent plane mismatch
-    if the batch's vectors drifted, which the recorded dim prevents)."""
-    dim = resolved.get("dim")
-    if dim is None and mft and mft.get("dim") is not None:
-        dim = mft["dim"]
-    if dim is None:
-        return sniff_dim(df, vec_col)
-    return int(dim)
+def _dim(idx, df: DataFrame, vec_col: str) -> int:
+    """The recorded (or caller-validated) dim; sniffed from the batch only
+    for pre-manifest indexes — sniffing risks a silent plane mismatch if
+    the batch's vectors drifted, which the recorded dim prevents."""
+    dim = idx.params.get("dim")
+    return sniff_dim(df, vec_col) if dim is None else int(dim)
 
 
 def build_embedding_index(
@@ -1159,43 +622,36 @@ def build_embedding_index(
     threshold is at least the designed recall), never a lower one.
     ``dim`` is sniffed from the first row when omitted and recorded, so
     queries and appends never need to re-sniff."""
-    from dbt_foundation_spark.operators.tombstones import assert_literal_path
-
     assert_literal_path(path, "index path")
     banding_geometry(m, bands, "m")
-    # degenerate-identity gate BEFORE the dim sniff: same contract as
-    # every other flavor (an id-less stored row could never be paired,
-    # retracted, or folded), and sniffing first could fix the index's
-    # dim from a corrupt NULL-id row's vector — or raise the misleading
-    # empty-frame error when that row's vector is NULL (r11 review)
+    # degenerate-identity gate BEFORE the dim sniff: an id-less stored
+    # row could never be paired, retracted, or folded, and sniffing
+    # first could fix the index's dim from a corrupt NULL-id row's
+    # vector — or raise the misleading empty-frame error when that
+    # row's vector is NULL
     df = identified(df, id_col)
     if dim is None:
         dim = sniff_dim(df, vec_col)
-    planes = random_hyperplanes(dim, m, seed)
-    banded = (
-        hyperplane_banded(df, id_col, vec_col, planes, bands, banding_geometry(m, bands, "m"))
-        .withColumnRenamed("_id", "id")
-        .repartition(index_partitions, "band", "bucket")
-    )
-    banded.write.mode("overwrite").parquet(f"{path}/bands")
-    df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/vectors")
-    _write_manifest(
+    write_index(
         df,
+        id_col,
         path,
+        _embedding_params(
+            m,
+            bands,
+            seed,
+            dim,
+            threshold=threshold,
+            vec_type=df.schema[vec_col].dataType.simpleString(),
+        ),
         {
-            "flavor": "embedding",
-            "m": m,
-            "bands": bands,
-            "seed": seed,
-            "dim": dim,
-            "threshold": threshold,
-            # r14: stored vector element type — skips the per-operation
-            # vectors-store schema probe in _conform_batch_vec
-            "vec_type": df.schema[vec_col].dataType.simpleString(),
+            "bands": _embedding_bands(df, id_col, vec_col, m, bands, seed, dim)
+            .withColumnRenamed("_id", "id")
+            .repartition(index_partitions, "band", "bucket"),
+            "vectors": df.select(
+                F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
+            ),
         },
-        id_col=id_col,
     )
 
 
@@ -1219,39 +675,28 @@ def dedup_against_embedding_index(
     must equal the build values (manifest-enforced); ``threshold`` may
     be ≥ the build design point."""
     banding_geometry(m, bands, "m")
-    caller: dict = {
-        "flavor": "embedding",
-        "m": m,
-        "bands": bands,
-        "seed": seed,
-        "threshold": threshold,
-    }
-    if dim is not None:
-        caller["dim"] = dim
-    mft = _read_manifest(spark, path)  # read ONCE: validation + dim
-    resolved = _validate_params(path, mft, caller, ranges={"threshold": "gte"})
-    dim = _resolve_dim(resolved, mft, new_df, vec_col)
-    from dbt_foundation_spark.functions import vectors as V
-
-    planes = random_hyperplanes(dim, m, seed)
-    new_df = _conform_batch_id(new_df, id_col, path, "embedding", id_type=resolved.get("id_type"))
-    new_df = _conform_batch_vec(new_df, vec_col, path, vec_type=resolved.get("vec_type"))
-    banded_new = hyperplane_banded(new_df, id_col, vec_col, planes, bands, banding_geometry(m, bands, "m"))
-    from dbt_foundation_spark.operators.tombstones import read_tombstones
-
-    tomb = read_tombstones(spark, path)
-    idx = _live(spark, path, "bands", tomb)
+    idx = open_index(
+        spark,
+        path,
+        _embedding_params(m, bands, seed, dim, threshold=threshold),
+        ranges={"threshold": "gte"},
+    )
+    dim = _dim(idx, new_df, vec_col)
+    new_df = idx.conform(new_df, id_col, vec_col)
+    banded_new = _embedding_bands(new_df, id_col, vec_col, m, bands, seed, dim)
     cand = (
         banded_new.select("band", "bucket", F.col("_id").alias("new_id"))
         .join(
-            idx.select("band", "bucket", F.col("id").alias("corpus_id")),
+            idx.live("bands").select(
+                "band", "bucket", F.col("id").alias("corpus_id")
+            ),
             ["band", "bucket"],
         )
         .select("new_id", "corpus_id")
         .dropDuplicates(["new_id", "corpus_id"])
     )
     v_new = new_df.select(F.col(id_col).alias("new_id"), F.col(vec_col).alias("_va"))
-    v_corpus = _live(spark, path, "vectors", tomb).select(
+    v_corpus = idx.live("vectors").select(
         F.col("id").alias("corpus_id"), F.col("vec").alias("_vb")
     )
     return (
@@ -1259,9 +704,7 @@ def dedup_against_embedding_index(
         .join(v_corpus, "corpus_id")
         .withColumn("cosine_sim", V.cosine("_va", "_vb"))
         .filter(F.col("cosine_sim") >= threshold)
-        # strongest version wins (multi-version contract, module
-        # docstring): a re-appended id has several live vectors and the
-        # verify join would emit duplicate pairs otherwise.
+        # strongest version wins (multi-version contract)
         .groupBy("new_id", "corpus_id")
         .agg(F.max("cosine_sim").alias("cosine_sim"))
     )
@@ -1278,33 +721,25 @@ def append_to_embedding_index(
     dim: int | None = None,
     owner: str | None = None,
 ) -> None:
-    """Admit a (deduped) batch into the embedding index: append its band
-    rows and vectors. The index content is threshold-independent (bands
-    + raw vectors), so only the hash-family parameters are validated.
-
-    Concurrency: same ``__appending`` exclusion as
-    :func:`append_to_index`; vectors (verify) write before bands
-    (discovery)."""
-    from dbt_foundation_spark.operators.tombstones import hold_append_marker
-
+    """Admit a (deduped) batch into the embedding index: append its
+    vectors, then its band rows. The index content is
+    threshold-independent (bands + raw vectors), so only the hash-family
+    parameters are validated."""
     banding_geometry(m, bands, "m")
-    caller: dict = {"flavor": "embedding", "m": m, "bands": bands, "seed": seed}
-    if dim is not None:
-        caller["dim"] = dim
-    mft = _read_manifest(df.sparkSession, path)  # read ONCE: validation + dim
-    resolved = _validate_params(path, mft, caller)
+    idx = open_index(df.sparkSession, path, _embedding_params(m, bands, seed, dim))
     # identity gate before any dim resolution sniffs the frame (see
     # build_embedding_index)
     df = identified(df, id_col)
-    dim = _resolve_dim(resolved, mft, df, vec_col)
-    planes = random_hyperplanes(dim, m, seed)
-    df = _conform_batch_id(df, id_col, path, "embedding", id_type=resolved.get("id_type"))
-    df = _conform_batch_vec(df, vec_col, path, vec_type=resolved.get("vec_type"))
-    with hold_append_marker(df.sparkSession, path, owner):
-        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")).write.mode(
-            "append"
-        ).parquet(f"{path}/vectors")
-        banded = hyperplane_banded(
-            df, id_col, vec_col, planes, bands, banding_geometry(m, bands, "m")
-        ).withColumnRenamed("_id", "id")
-        banded.write.mode("append").parquet(f"{path}/bands")
+    dim = _dim(idx, df, vec_col)
+    df = idx.conform(df, id_col, vec_col)
+    idx.append(
+        {
+            "vectors": df.select(
+                F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
+            ),
+            "bands": _embedding_bands(
+                df, id_col, vec_col, m, bands, seed, dim
+            ).withColumnRenamed("_id", "id"),
+        },
+        owner,
+    )

@@ -17,13 +17,25 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbt_foundation_spark.checkpoint import pin
+from dbt_foundation_spark.operators import tombstones as tlog
+from dbt_foundation_spark.operators.index_core import Sub, open_index
+from dbt_foundation_spark.operators.tombstones import (
+    _hadoop,
+    _has_data_file,
+    _iter_visible_statuses,
+    append_marker_path,
+    assert_literal_path,
+    compaction_marker_path,
+    revive_marker_path,
+    zero_byte_files,
+)
 
 
 def _file_stats(df) -> dict:
     """(n_files, total_bytes) from the ``_metadata`` hidden columns of
     an already-loaded DataFrame — dedup per file on the executors,
     aggregate, fetch ONE row (shared by table and path stats; no
-    per-file driver collect — round-2 finding)."""
+    per-file driver collect)."""
     row = (
         df.select(
             F.col("_metadata.file_path").alias("_p"),
@@ -252,8 +264,6 @@ def _has_data_files(spark: SparkSession, path: str) -> bool:
     """True if any non-hidden file exists under ``path`` (recursive) —
     a pure FileSystem listing, no Spark job. Delegates to the single
     shared probe (tombstones._has_data_file) so the two can't drift."""
-    from dbt_foundation_spark.operators.tombstones import _has_data_file
-
     return _has_data_file(spark, path)
 
 
@@ -264,11 +274,6 @@ def _has_healthy_data_file(
     ``torn`` set — the all-torn guard for index_stats' per-dataset
     stats read (a directory whose only footers are 0-byte tears dies
     at schema inference)."""
-    from dbt_foundation_spark.operators.tombstones import (
-        _hadoop,
-        _iter_visible_statuses,
-    )
-
     p, fs = _hadoop(spark, path)
     if not fs.exists(p):
         return False
@@ -313,8 +318,6 @@ def compact_parquet_path(
     dataset parked at ``{path}__compact_old`` and nothing at ``path`` —
     the next invocation detects that state and restores it before doing
     anything else, so re-running compaction is always the fix."""
-    from dbt_foundation_spark.operators.tombstones import assert_literal_path
-
     assert_literal_path(path, "dataset path")
     base = path.rstrip("/")
     tmp, old = f"{base}__compact_tmp", f"{base}__compact_old"
@@ -331,15 +334,13 @@ def compact_parquet_path(
         raise ValueError(
             "pass at most one of cluster_by / zorder_by / partition_by"
         )
-    # torn-file accounting (r12 probe): Spark reads a ZERO-BYTE part
+    # torn-file accounting: Spark reads a ZERO-BYTE part
     # file as silently empty, so this rewrite would fold it away with
     # no signal — compaction IS the documented heal for torn residue,
     # but the fold must be loud (the no-silent-caps rule): the operator
     # has to be able to notice data may have been lost. Non-empty torn
     # files are not detectable from metadata; they fail the read below
     # with parquet's magic-number error naming the file.
-    from dbt_foundation_spark.operators.tombstones import zero_byte_files
-
     torn = zero_byte_files(spark, base)
     if torn:
         import logging
@@ -431,12 +432,13 @@ def compact_index(
     target_file_bytes: int = 128 * 1024 * 1024,
 ) -> dict:
     """Compact every dataset of a persisted dedup/ANN index
-    (operators/dedup_index.py) — each ``append_to_*`` ingest adds one
+    (operators/index_core.py) — each ``append_to_*`` ingest adds one
     file set per dataset, so a year of daily ingests is ~365 small
     files per dataset; this folds them back to target-sized files
     WITHOUT losing the clustering the batch-vs-index join relies on.
     Flavor (and hence layout + cluster keys) comes from the index
-    manifest; pre-manifest indexes must compact their datasets
+    manifest, and an unknown flavor is refused before any marker goes
+    down; pre-manifest indexes must compact their datasets
     individually via :func:`compact_parquet_path`.
 
     Compaction is also where tombstoned documents
@@ -456,38 +458,19 @@ def compact_index(
     single-maintainer assumption every lease-less marker scheme
     carries (a create-exclusive run-claim would brick the crashed-fold
     re-run path, the more common event by far)."""
-    from dbt_foundation_spark.operators.tombstones import assert_literal_path
-
-    assert_literal_path(index_path, "index path")
-    from dbt_foundation_spark.operators.dedup_index import (
-        INDEX_DISTINCT_ON_COMPACT,
-        INDEX_LAYOUT,
-        INDEX_PARTITIONED,
-        _read_manifest,
-    )
-    from dbt_foundation_spark.operators.tombstones import (
-        append_marker_path,
-        clear_tombstones,
-        compaction_marker_path,
-        read_tombstones,
-        revive_marker_path,
-    )
-
-    mft = _read_manifest(spark, index_path)
-    if mft is None:
+    idx = open_index(spark, index_path)
+    if idx.manifest is None:
         raise ValueError(
             f"{index_path} has no manifest — compact each dataset "
             "directly with compact_parquet_path"
         )
-    flavor = mft["flavor"]
     jvm = spark._jvm
     fs = jvm.org.apache.hadoop.fs.Path(index_path).getFileSystem(
         spark._jsc.hadoopConfiguration()
     )
     # __compacting marker: held for the whole rewrite so a concurrent
     # REVIVE (clear_tombstones with ids) raises instead of silently
-    # losing rows already folded against the pre-revive snapshot
-    # (round-6 verdict #3 — the window was a docstring contract before).
+    # losing rows already folded against the pre-revive snapshot.
     # Symmetric write-then-check handshake with the revive's
     # __reviving marker (tombstones.revive_marker_path): our marker
     # goes down FIRST, then we test for a revive — so of two ops
@@ -519,18 +502,18 @@ def compact_index(
             "revive (which clears the marker), then compact. If BOTH "
             "__reviving and __compacting are crash leftovers (no op "
             "live — index_stats lists them), the re-run directions are "
-            "circular; rebuild the index (rebuild_*_index resets both "
-            "markers) — the only LOSSLESS escape, since sub-datasets a "
-            "crashed compaction already rewrote have physically "
-            "dropped their tombstoned rows and no revive can restore "
-            "them. The in-place alternative (after confirming nothing "
+            "circular; rebuild the index (re-running its build_*_index "
+            "resets both markers) — the only LOSSLESS escape, since "
+            "sub-datasets a crashed compaction already rewrote have "
+            "physically dropped their tombstoned rows and no revive can "
+            "restore them. The in-place alternative (after confirming nothing "
             "is running: delete the stale __compacting marker "
             "directory, re-run the revive FIRST — its half-folded log "
             "must complete before any compaction folds it — then "
             "compact_index) may report revive success for ids whose "
             "rows are already gone from the rewritten sub-datasets."
         )
-    # __appending (round-10 verdict #4): the mirror half of the append
+    # __appending: the mirror half of the append
     # exclusion — appends claim their marker then check ours, we create
     # ours (above) then check theirs, so of two ops starting
     # concurrently at least one sees the other and raises. Without
@@ -542,9 +525,9 @@ def compact_index(
         if not stale_marker:
             fs.delete(marker, True)
         # when OUR marker was also a crash leftover (stale_marker), the
-        # two messages would otherwise point at each other (r11 advice:
-        # "let the append finish" here vs "re-run compact_index" on the
-        # append side) — name the manual-heal order explicitly
+        # two messages would otherwise point at each other ("let the
+        # append finish" here vs "re-run compact_index" on the append
+        # side) — name the manual-heal order explicitly
         both_stale = (
             " BOTH __appending and __compacting are present and this "
             "run created neither, so both are crash leftovers and the "
@@ -575,10 +558,10 @@ def compact_index(
     # was rewritten, so OUR fresh marker is withdrawn like the sibling
     # conflict paths above — else a torn log would orphan a
     # __compacting marker that blocks every append with a misleading
-    # "compaction in flight" (r12 review); a stale marker stays, it
+    # "compaction in flight"; a stale marker stays, it
     # guards an earlier crash's half-rewritten state.
     try:
-        tomb = read_tombstones(spark, index_path)
+        tomb = idx.tombstones()
     except Exception:
         if not stale_marker:
             fs.delete(marker, True)
@@ -586,18 +569,18 @@ def compact_index(
     if tomb is not None:
         tomb = pin(tomb, eager=True)
 
-    def _compact_sub(sub: str, keys) -> dict | None:
-        sub_path = f"{index_path}/{sub}"
+    def _compact_sub(sub: Sub) -> dict | None:
+        sub_path = f"{index_path}/{sub.name}"
         # optional sub-datasets (the ivf ingest_log exists only for
         # stream-maintained indexes) are skipped, not errors — but a
         # sub-dataset PARKED at __compact_old by a crashed swap is NOT
-        # absent (r12, found by the reader-seam test): skipping it here
-        # would leave the index permanently half-missing while this
-        # re-run "succeeds". The restore runs HERE, before anything
-        # reads sub_path (r12 review: _doc_id_col's schema read below
-        # otherwise hits the still-missing directory on a tombstone-
-        # holding index and the documented heal loops forever);
-        # compact_parquet_path's own restore-on-entry then no-ops.
+        # absent: skipping it here would leave the index permanently
+        # half-missing while this re-run "succeeds". The restore runs
+        # HERE, before anything reads sub_path (the doc-id schema read
+        # below would otherwise hit the still-missing directory on a
+        # tombstone-holding index and the documented heal would loop
+        # forever); compact_parquet_path's own restore-on-entry then
+        # no-ops.
         sub_p = jvm.org.apache.hadoop.fs.Path(sub_path)
         old_p = jvm.org.apache.hadoop.fs.Path(f"{sub_path}__compact_old")
         if not fs.exists(sub_p):
@@ -611,43 +594,32 @@ def compact_index(
         # the id column only matters when there is a log to fold — and
         # deriving it for the IVF lists costs a schema-inference read,
         # so skip it entirely on the common no-takedown compaction
-        doc_col = (
-            _doc_id_col(spark, flavor, sub, sub_path)
-            if tomb is not None
-            else None
-        )
+        doc_col = sub.doc_id if tomb is not None else None
+        if callable(doc_col):
+            doc_col = doc_col(spark.read.parquet(sub_path).schema)
         return compact_parquet_path(
             spark,
             sub_path,
             target_file_bytes,
-            # hive-partitioned sub-datasets re-declare their partition
-            # spec; the rest re-cluster on their join keys
-            **(
-                {"partition_by": keys}
-                if (flavor, sub) in INDEX_PARTITIONED
-                else {"cluster_by": keys}
-            ),
-            distinct_rows=(flavor, sub) in INDEX_DISTINCT_ON_COMPACT,
+            **{("partition_by" if sub.partitioned else "cluster_by"): sub.keys},
+            distinct_rows=sub.distinct_on_compact,
             minus_ids=tomb if doc_col else None,
             minus_col=doc_col,
         )
 
-    # sub-datasets compact CONCURRENTLY (r14): each fold touches only
-    # its own directory (read snapshot → write-aside → rename swap), so
-    # the serial loop was pure wasted wall — 2-4 small read+write jobs
-    # queuing behind each other plus their driver planning gaps
-    # (measured ~40 jobs / 4.7 s per minhash compact at sf0.1, ~45% of
-    # it driver gap). Spark's scheduler interleaves jobs from threads;
-    # the crash contract is unchanged — any sub's failure propagates
-    # (first exception re-raised), the __compacting marker stays, and
-    # a re-run completes the remaining folds in any order, exactly the
-    # heal-by-rerun semantics the serial loop had.
+    # sub-datasets compact CONCURRENTLY: each fold touches only its
+    # own directory (read snapshot → write-aside → rename swap), and a
+    # serial loop would queue 2-4 small read+write jobs behind each
+    # other plus their driver planning gaps (~40 jobs per minhash
+    # compact at sf0.1, ~45% of it driver gap). Spark's scheduler
+    # interleaves jobs from threads. Crash contract: any sub's failure
+    # propagates (first exception re-raised), the __compacting marker
+    # stays, and a re-run completes the remaining folds in any order.
     from concurrent.futures import ThreadPoolExecutor
 
-    layout = list(INDEX_LAYOUT[flavor].items())
     out = {}
-    with ThreadPoolExecutor(max_workers=max(1, len(layout))) as pool:
-        futures = {sub: pool.submit(_compact_sub, sub, keys) for sub, keys in layout}
+    with ThreadPoolExecutor(max_workers=max(1, len(idx.subs))) as pool:
+        futures = {sub.name: pool.submit(_compact_sub, sub) for sub in idx.subs}
     for sub, fut in futures.items():
         res = fut.result()  # re-raises the sub's failure, serial-loop style
         if res is not None:
@@ -661,26 +633,9 @@ def compact_index(
         # log survives, folded datasets re-subtract harmlessly
         # (anti-join matches nothing), next run finishes; the subset
         # clear itself installs via the write-aside rename swap.
-        clear_tombstones(spark, index_path, ids=tomb, _during_compaction=True)
+        tlog.clear_tombstones(spark, index_path, ids=tomb, _during_compaction=True)
     fs.delete(marker, True)
     return out
-
-
-def _doc_id_col(
-    spark: SparkSession, flavor: str, sub: str, sub_path: str
-) -> str | None:
-    """The document-id column of an index sub-dataset (the tombstone
-    fold key), or None for datasets not keyed by document (IVF
-    centroids / ingest_log). Dedup flavors uniformly store ``id``; the
-    IVF lists keep the builder's column names, so the id is
-    schema-derived exactly as the read path derives it."""
-    if flavor != "ivf":
-        return "id"
-    if sub != "lists":
-        return None
-    from dbt_foundation_spark.operators.similarity import ivf_id_col
-
-    return ivf_id_col(spark.read.parquet(sub_path).schema)
 
 
 def index_stats(spark: SparkSession, index_path: str) -> dict:
@@ -694,12 +649,12 @@ def index_stats(spark: SparkSession, index_path: str) -> dict:
     Returns ``{"flavor", "params", "datasets": {sub: {"n_files",
     "total_bytes"}}, "missing_datasets": [...], "tombstones": n,
     "crash_leftovers": [...]}``; absent sub-datasets are omitted from
-    ``datasets`` AND named in ``missing_datasets`` (r12: never a
+    ``datasets`` AND named in ``missing_datasets`` (never a
     silent subset) — for the ivf ingest_log that is the normal
     batch-built shape, for any other sub it means mid-swap/crashed
     compaction (check ``crash_leftovers`` for ``__compacting`` or the
     sub's ``__compact_old``) or a damaged store. Zero-byte torn data
-    files are reported per file in ``crash_leftovers`` (r12 probe),
+    files are reported per file in ``crash_leftovers``,
     and a torn TOMBSTONE-LOG file also sets ``tombstones`` to None —
     the retraction count is unknowable, never a silent 0. ``crash_leftovers`` lists any ``__compact_tmp`` /
     ``__compact_old`` / ``__revive_tmp`` / ``__compacting`` /
@@ -718,40 +673,26 @@ def index_stats(spark: SparkSession, index_path: str) -> dict:
     append's marker is deleted manually per its raise message before
     the re-run), so a persistent entry is a "re-run maintenance"
     signal, not damage."""
-    from dbt_foundation_spark.operators.tombstones import assert_literal_path
-
-    assert_literal_path(index_path, "index path")
-    from dbt_foundation_spark.operators.dedup_index import (
-        INDEX_LAYOUT,
-        _read_manifest,
-    )
-    from dbt_foundation_spark.operators.tombstones import read_tombstones
-
-    mft = _read_manifest(spark, index_path)
-    if mft is None:
+    idx = open_index(spark, index_path)
+    if idx.manifest is None:
         raise ValueError(
             f"{index_path} has no manifest — not a (post-manifest) "
             "persisted index; inspect datasets directly with "
             "parquet_path_stats"
         )
-    flavor = mft["flavor"]
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(index_path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    # torn-file report (r12 probe): zero-byte data files are tears a
-    # read treats as silently empty — the query paths REFUSE on them
-    # (guarded_sub_read / read_tombstones name the file and the heal);
-    # the describe tool reports them without raising. Computed BEFORE
-    # the stats reads: a sub-dataset whose ONLY files are torn would
-    # make parquet_path_stats die at schema inference (r12 review) —
-    # such a sub is reported torn + missing, never read. Torn files
-    # with leftover bytes are not metadata-detectable and surface as
-    # loud parquet magic-number errors at read time instead.
-    from dbt_foundation_spark.operators.tombstones import zero_byte_files
-
+    subs = [sub.name for sub in idx.subs]
+    root, fs = _hadoop(spark, index_path)
+    # zero-byte data files are tears a read treats as silently empty —
+    # the query paths REFUSE on them (guarded_sub_read / read_tombstones
+    # name the file and the heal); the describe tool reports them
+    # without raising. Computed BEFORE the stats reads: a sub-dataset
+    # whose ONLY files are torn would make parquet_path_stats die at
+    # schema inference — such a sub is reported torn + missing, never
+    # read. Torn files with leftover bytes are not metadata-detectable
+    # and surface as loud parquet magic-number errors at read time.
     torn_entries: list[str] = []
     sub_torn: dict[str, list[str]] = {}
-    for sub in INDEX_LAYOUT[flavor]:
+    for sub in subs:
         sub_torn[sub] = zero_byte_files(spark, f"{index_path}/{sub}")
         torn_entries.extend(
             f"{sub}/{f.rsplit('/', 1)[-1]} (0-byte torn file)"
@@ -764,10 +705,10 @@ def index_stats(spark: SparkSession, index_path: str) -> dict:
     )
 
     datasets: dict[str, dict] = {}
-    for sub in INDEX_LAYOUT[flavor]:
+    for sub in subs:
         # data-FILE probe, not a read + caught AnalysisException (Spark
         # logs the JVM stack even for caught exceptions and buries the
-        # bench/driver tail — r6 verdict #4) and not bare fs.exists (an
+        # bench/driver tail) and not bare fs.exists (an
         # existing-but-empty dir from a crashed write would make the
         # read raise — and index_stats' whole job is describing damaged
         # indexes)
@@ -786,7 +727,7 @@ def index_stats(spark: SparkSession, index_path: str) -> dict:
         # file's retractions may be lost) — None, never a silent 0
         tomb_count: int | None = None
     else:
-        tomb = read_tombstones(spark, index_path)
+        tomb = idx.tombstones()
         tomb_count = 0 if tomb is None else tomb.count()
     # crash-leftover scan: one directory listing of the index root —
     # swap residue is always a SIBLING of the dataset it was swapping
@@ -805,12 +746,10 @@ def index_stats(spark: SparkSession, index_path: str) -> dict:
         or st.getPath().getName() == "__appending"
     )
     return {
-        "flavor": flavor,
-        "params": {k: v for k, v in mft.items() if k != "flavor"},
+        "flavor": idx.flavor,
+        "params": {k: v for k, v in idx.manifest.items() if k != "flavor"},
         "datasets": datasets,
-        "missing_datasets": [
-            sub for sub in INDEX_LAYOUT[flavor] if sub not in datasets
-        ],
+        "missing_datasets": [sub for sub in subs if sub not in datasets],
         # None (not 0) when the log itself holds torn files — the
         # retraction count is unknowable, see torn_entries
         "tombstones": tomb_count,

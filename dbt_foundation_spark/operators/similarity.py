@@ -24,6 +24,15 @@ from pyspark.sql import functions as F
 
 from dbt_foundation_spark.checkpoint import pin
 from dbt_foundation_spark.functions import vectors as V
+from dbt_foundation_spark.local_data import local_frame
+from dbt_foundation_spark.operators.index_core import (
+    Index,
+    ivf_id_col,
+    open_index,
+    write_index,
+)
+from dbt_foundation_spark.operators.tombstones import assert_literal_path
+from dbt_foundation_spark.parallelism import fan_out
 
 
 def random_hyperplanes(dim: int, m: int, seed: int = 42) -> list[list[float]]:
@@ -280,7 +289,7 @@ def ivf_assignments(
 
 def _lit_vec(vec: list[float]):
     """A literal array<double> column from a Python vector, built as
-    ONE parsed SQL expression (r14): the F.lit-per-element form cost a
+    ONE parsed SQL expression: the F.lit-per-element form costs a
     Py4J driver roundtrip per element — ~1100 roundtrips (~0.7 s of
     per-operation driver constant) for a 16×64 centroid set on every
     IVF assign/probe. ``repr(float)`` round-trips the exact IEEE double
@@ -309,7 +318,7 @@ def _sqdist(v, centroid: list[float]):
 
 
 def _sqdist_sql(v_sql: str, centroid: list[float]) -> str:
-    """The SQL-string twin of :func:`_sqdist` (r14): parses to the
+    """The SQL-string twin of :func:`_sqdist`: parses to the
     IDENTICAL expression tree (same zip_with/aggregate lambdas, same
     repr-round-tripped double literals — see :func:`~dbt_foundation_
     spark.functions.vectors.lit_vec`), but an n-centroid family builds
@@ -354,7 +363,7 @@ def _ivf_assign(
     Quarantine contract: a vector that is non-finite (NaN/Inf/NULL
     element) or whose length differs from the quantizer's dim gets
     ``_ivf_list = -1`` — and so does a row whose ``id_col`` is NULL
-    when the caller names one (r11 degenerate-identity class: an
+    when the caller names one (the degenerate-identity class: an
     id-less vector can appear in top-k results but can never be
     fetched, deduplicated, or retracted — no stable identity means it
     must not be searchable, same rule as the dedup detectors). Probes
@@ -661,9 +670,6 @@ def build_ivf_index(
     cores when the query side, not the corpus, bounds parallelism);
     :func:`ivf_sizing_advice` reports when a pinned choice has drifted
     >4× from the rule as the corpus grows through appends."""
-    from dbt_foundation_spark.operators.tombstones import assert_literal_path
-    from dbt_foundation_spark.parallelism import fan_out
-
     assert_literal_path(path, "index path")
     # undersized-scan fan-out (parallelism.py): the per-row n_lists
     # centroid-distance assignment would otherwise serialize on a
@@ -675,67 +681,51 @@ def build_ivf_index(
         df, vec_col, n_lists=n_lists, seed=seed,
         target_fit_rows=target_fit_rows, id_col=id_col,
     )
-    (
-        assigned.select(id_col, vec_col, "_ivf_list")
-        .repartition("_ivf_list")
-        .write.mode("overwrite")
-        .partitionBy("_ivf_list")
-        .parquet(f"{path}/lists")
-    )
     spark = df.sparkSession
     rows = [(i, [float(x) for x in c]) for i, c in enumerate(centroids)]
     # local_frame: the classic list createDataFrame + coalesce(1) fetches
     # its defaultParallelism pickled slices SERIALLY in the one coalesced
     # task — measured ~7 s of fixed overhead per build on local[32]
     # (local_data.py); the Arrow route writes the same file in ~0.2 s
-    from dbt_foundation_spark.local_data import local_frame
-
-    local_frame(spark, rows, "list_id int, centroid array<double>").coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{path}/centroids")
-    # manifest: same contract as the dedup-index flavors (runtime
-    # import — dedup_index imports this module at top level)
-    from dbt_foundation_spark.operators.dedup_index import _write_manifest
-
-    _write_manifest(
+    write_index(
         df,
+        id_col,
         path,
         {
             "flavor": "ivf",
             "n_lists": n_lists,
             "seed": seed,
             "dim": len(centroids[0]),
-            # r14: stored lists schema, recorded so appends can refuse
-            # drift without a per-ingest directory walk (see
-            # _refuse_schema_drift); id_type rides via id_col below
+            # stored lists schema, recorded so appends can refuse drift
+            # without a per-ingest directory walk (_refuse_schema_drift)
             "id_name": id_col,
             "vec_name": vec_col,
             "vec_type": df.schema[vec_col].dataType.simpleString(),
         },
-        id_col=id_col,
+        {
+            "lists": assigned.select(id_col, vec_col, "_ivf_list").repartition(
+                "_ivf_list"
+            ),
+            "centroids": local_frame(
+                spark, rows, "list_id int, centroid array<double>"
+            ).coalesce(1),
+        },
     )
     return centroids
 
 
 def _load_ivf(spark: SparkSession, path: str):
-    """(centroids in list_id order, dim, manifest) for a persisted IVF
-    index, with the manifest flavor validated — the single load path
+    """(index handle, centroids in list_id order, dim) for a persisted
+    IVF index, with the manifest flavor validated — the single load path
     for append/search/batch-search, so loaders cannot diverge."""
-    from dbt_foundation_spark.operators.dedup_index import (
-        _read_manifest,
-        _validate_params,
-    )
-    from dbt_foundation_spark.operators.tombstones import guarded_sub_read
+    idx = open_index(spark, path, {"flavor": "ivf"})
+    return (idx, *_centroids(idx))
 
-    mft = _read_manifest(spark, path)
-    _validate_params(path, mft, {"flavor": "ivf"})
-    cents = sorted(
-        guarded_sub_read(spark, path, "centroids").collect(),
-        key=lambda r: r["list_id"],
-    )
+
+def _centroids(idx: Index) -> tuple[list[list[float]], int]:
+    cents = sorted(idx.read("centroids").collect(), key=lambda r: r["list_id"])
     centroids = [[float(x) for x in r["centroid"]] for r in cents]
-    dim = int((mft or {}).get("dim") or len(centroids[0]))
-    return centroids, dim, mft
+    return centroids, int(idx.params.get("dim") or len(centroids[0]))
 
 
 def _dim_guarded(df: DataFrame, vec_col: str, dim: int, context: str) -> DataFrame:
@@ -745,7 +735,7 @@ def _dim_guarded(df: DataFrame, vec_col: str, dim: int, context: str) -> DataFra
     the row is silently mis-assigned / mis-ranked; without the
     finiteness check a NaN/Inf QUERY vector ranked every centroid at
     NaN distance, probed arbitrary lists, and silently returned zero
-    neighbors instead of the promised caller-error raise (r10 advice) —
+    neighbors instead of the promised caller-error raise —
     all three shapes get the same loud treatment. The guard is woven
     INSIDE the vector column via when/raise_error — a never-referenced
     ``assert_true`` side column would be column-pruned out of the plan
@@ -813,7 +803,7 @@ def _refuse_schema_drift(
     stored_vec_type: str,
 ) -> None:
     """The comparison half of :func:`_check_batch_schema`, split out
-    (r14) so the stored names/types can come from the index MANIFEST
+    so the stored names/types can come from the index MANIFEST
     (recorded at build) instead of a per-append schema probe of the
     partitioned lists dataset — a directory-walk + footer read of
     driver constant on every ingest. Same refusals, same messages."""
@@ -835,10 +825,10 @@ def _refuse_schema_drift(
 
 
 def _append_assigned(
+    idx: Index,
     df: DataFrame,
     id_col: str,
     vec_col: str,
-    path: str,
     centroids: list[list[float]],
     dim: int,
     refuse_all_dirty: bool = True,
@@ -857,13 +847,12 @@ def _append_assigned(
     ``refuse_all_dirty=False``: there the raise fires before the
     ``(app_id, batch_id)`` marker is written, so every restart replays
     the identical batch and crashes again — one corrupt vector arriving
-    alone in a micro-batch would become a permanent poison pill (r10
-    advice). The stream instead logs an ERROR, lands the rows in
+    alone in a micro-batch would become a permanent poison pill. The
+    stream instead logs an ERROR, lands the rows in
     list -1 (where ``index_stats`` and retract/compact still see them),
     and lets the marker commit. A partial quarantine is logged with
     counts and written the same way in both modes."""
-    from dbt_foundation_spark.checkpoint import pin
-
+    path = idx.path
     assigned = pin(_assigned_rows(df, id_col, vec_col, path, centroids, dim))
     counts = assigned.groupBy(F.col("_ivf_list") == -1).count().collect()
     n_quar = sum(r["count"] for r in counts if r[0])
@@ -894,7 +883,7 @@ def _append_assigned(
             "(wrong dim/NULL/non-finite vectors)",
             path, n_quar, n_quar + n_ok,
         )
-    assigned.write.mode("append").partitionBy("_ivf_list").parquet(f"{path}/lists")
+    idx.write({"lists": assigned})
 
 
 def _assigned_rows(
@@ -911,9 +900,7 @@ def _assigned_rows(
 
     Corrupt rows (wrong dim / NULL / non-finite) quarantine to list -1
     via :func:`_ivf_assign` — the SAME fate they get at build time, so
-    one dirty row never aborts an ingest batch (pre-r10 this path wore
-    the query-side raise guard and the identical row crashed an append
-    but was quarantined by a rebuild). The loud `_dim_guarded` raise
+    one dirty row never aborts an ingest batch. The loud `_dim_guarded` raise
     stays on the QUERY side only, where a mis-sized vector is a
     caller/config error, not dirty data."""
     return (
@@ -947,54 +934,23 @@ def append_to_ivf_index(
     build sample; re-run :func:`build_ivf_index` on that signal
     (:func:`ivf_list_profile` skew), not per ingest.
 
-    Concurrency (r10 verdict #4): the write holds the ``__appending``
-    marker (``tombstones.hold_append_marker``) — concurrent appends
-    and append-during-compaction are refused loudly; ``owner`` is the
-    streaming ingest's stable reclaim identity."""
-    from dbt_foundation_spark.operators.tombstones import (
-        guarded_sub_read,
-        hold_append_marker,
-    )
-
-    spark = df.sparkSession
-    centroids, dim, mft = _load_ivf(spark, path)
-    mft = mft or {}
+    The write holds the ``__appending`` marker (index_core) —
+    concurrent appends and append-during-compaction are refused loudly;
+    ``owner`` is the streaming ingest's stable reclaim identity."""
+    idx, centroids, dim = _load_ivf(df.sparkSession, path)
+    mft = idx.manifest or {}
     if {"id_name", "vec_name", "id_type", "vec_type"} <= set(mft):
-        # manifest-recorded stored schema (r14): same refusals, no
-        # per-append directory walk of the partitioned lists dataset
+        # manifest-recorded stored schema: same refusals, no per-append
+        # directory walk of the partitioned lists dataset
         _refuse_schema_drift(
             df, id_col, vec_col,
             mft["id_name"], mft["vec_name"],
             mft["id_type"], mft["vec_type"],
         )
-    else:  # pre-record manifest: probe the stored dataset as before
-        _check_batch_schema(
-            df, id_col, vec_col, guarded_sub_read(spark, path, "lists").schema
-        )
-    with hold_append_marker(spark, path, owner):
-        _append_assigned(df, id_col, vec_col, path, centroids, dim)
-
-
-def ivf_id_col(schema) -> str:
-    """The document-id column of a persisted IVF lists dataset — the
-    non-partition, non-array field, whatever name the index was built
-    with. SHARED between the read path (:func:`_live_lists`) and the
-    compaction tombstone fold (maintenance._doc_id_col) so the two can
-    never drift onto different columns."""
-    name = next(
-        (
-            f.name
-            for f in schema.fields
-            if f.name != "_ivf_list" and f.dataType.typeName() != "array"
-        ),
-        None,
-    )
-    if name is None:
-        raise ValueError(
-            "IVF lists dataset has no scalar (non-array) id column — the "
-            f"store is corrupt or hand-edited; fields: {schema.fieldNames()}"
-        )
-    return name
+    else:  # pre-record manifest: probe the stored dataset
+        _check_batch_schema(df, id_col, vec_col, idx.read("lists").schema)
+    with idx.appending(owner):
+        _append_assigned(idx, df, id_col, vec_col, centroids, dim)
 
 
 def ivf_vec_col(schema) -> str:
@@ -1015,21 +971,6 @@ def ivf_vec_col(schema) -> str:
             f"store is corrupt or hand-edited; fields: {schema.fieldNames()}"
         )
     return name
-
-
-def _live_lists(spark: SparkSession, path: str) -> DataFrame:
-    """The IVF lists dataset restricted to LIVE vectors — stored rows
-    minus the tombstone log (operators/tombstones.py). No log -> the
-    bare partition-pruned scan, unchanged plan. Routed through the
-    compaction rename-window guard (r12): lists missing mid-swap
-    raises naming the compaction, never PATH_NOT_FOUND."""
-    from dbt_foundation_spark.operators.tombstones import (
-        guarded_sub_read,
-        subtract_tombstones,
-    )
-
-    lists = guarded_sub_read(spark, path, "lists")
-    return subtract_tombstones(spark, path, lists, ivf_id_col(lists.schema))
 
 
 def ivf_list_profile(spark: SparkSession, path: str) -> DataFrame:
@@ -1056,7 +997,7 @@ def ivf_list_profile(spark: SparkSession, path: str) -> DataFrame:
     A ``_ivf_list = -1`` row is the QUARANTINE list (wrong-dim / NULL /
     non-finite vectors, unsearchable by construction); a non-zero share
     there is the fix-upstream-or-rebuild signal."""
-    lists = _live_lists(spark, path)
+    lists = open_index(spark, path, {"flavor": "ivf"}).live("lists")
     counts = lists.groupBy("_ivf_list").agg(F.count(F.lit(1)).alias("n_members"))
     total = Window.partitionBy()
     return (
@@ -1078,7 +1019,7 @@ def ivf_sizing_advice(spark: SparkSession, path: str) -> dict:
     dataset's id/partition columns — no vector pages are read. The
     list count comes from the CENTROIDS dataset, not the manifest, so
     pre-manifest indexes (mft=None) are advised too."""
-    centroids, _, _ = _load_ivf(spark, path)
+    idx, centroids, _ = _load_ivf(spark, path)
     n_lists = len(centroids)
     if n_lists == 0:
         raise ValueError(
@@ -1086,7 +1027,7 @@ def ivf_sizing_advice(spark: SparkSession, path: str) -> dict:
             "store is corrupt or hand-edited; rebuild with "
             "build_ivf_index"
         )
-    n_vectors = _live_lists(spark, path).count()
+    n_vectors = idx.live("lists").count()
     rec = recommended_n_lists(n_vectors)
     ratio = max(n_lists / rec, rec / n_lists)
     advice = {
@@ -1152,14 +1093,12 @@ def knn_join_ivf(
     corpus/append side, where a dirty row quarantines, a mis-sized
     QUERY is a caller/config error that would probe meaningless lists
     and return NULL similarities as "neighbors"."""
-    from dbt_foundation_spark.operators.tombstones import assert_literal_path
-
     assert_literal_path(path, "index path")
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     if num_salts < 1:
         raise ValueError(f"num_salts must be >= 1, got {num_salts}")
-    centroids, dim, _ = _load_ivf(spark, path)
+    idx, centroids, dim = _load_ivf(spark, path)
     if not 1 <= n_probe <= len(centroids):
         raise ValueError(f"n_probe must be in [1, {len(centroids)}], got {n_probe}")
 
@@ -1168,7 +1107,7 @@ def knn_join_ivf(
     import math as _math
 
     if all(_math.isfinite(x) for c in centroids for x in c):
-        # one parsed expression (r14 — see _sqdist_sql): identical tree,
+        # one parsed expression (see _sqdist_sql): identical tree,
         # ~30× fewer driver roundtrips per probe ranking
         qv_sql = f"cast(`{query_vec}` as array<double>)"
         ranked = F.expr(
@@ -1197,7 +1136,7 @@ def knn_join_ivf(
             F.slice(F.transform(ranked, lambda s: s["i"]), 1, n_probe)
         ).alias("_ivf_list"),
     )
-    lists = _live_lists(spark, path)
+    lists = idx.live("lists")
     # derive by TYPE, not position, and through the same helper the
     # tombstone fold uses (ivf_id_col) — a store whose column order
     # ever diverged from (id, vec) would otherwise silently swap the
@@ -1269,10 +1208,8 @@ def search_ivf_index(
     pruned `PartitionFilters`, and the test pins that the scan touches
     n_probe/n_lists of the files. Same ranking contract as
     :func:`cosine_topk` (desc cosine, id tiebreak)."""
-    from dbt_foundation_spark.operators.tombstones import assert_literal_path
-
     assert_literal_path(path, "index path")
-    centroids, dim, _ = _load_ivf(spark, path)
+    idx, centroids, dim = _load_ivf(spark, path)
     if len(query_vec) != dim:
         raise ValueError(
             f"IVF index {path} built for dim={dim}, query has {len(query_vec)}"
@@ -1283,8 +1220,8 @@ def search_ivf_index(
         # distance and probe arbitrary lists (and NaN sims sort ABOVE
         # real ones descending, so garbage would rank first). The
         # explicit None check keeps this the documented ValueError —
-        # float(None) would otherwise TypeError out of the guard (r11
-        # review; _ivf_assign classifies NULL elements as non-finite).
+        # float(None) would otherwise TypeError out of the guard
+        # (_ivf_assign classifies NULL elements as non-finite).
         raise ValueError(
             f"IVF index {path}: query vector contains NaN/Inf/NULL — fix "
             "the query; a non-finite query cannot rank centroids or "
@@ -1299,7 +1236,7 @@ def search_ivf_index(
     )[:n_probe]
     q = V.lit_vec(query_vec)
     out = (
-        _live_lists(spark, path)
+        idx.live("lists")
         .filter(F.col("_ivf_list").isin(probe_ids))
         .select(F.col(id_col), V.cosine(F.col(vec_col), q).alias("cosine_sim"))
     )

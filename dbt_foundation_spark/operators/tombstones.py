@@ -68,11 +68,11 @@ _GLOB_METACHARS = frozenset("*?[]{}")
 
 
 def assert_literal_path(path: str, what: str = "dataset path") -> str:
-    """Refuse paths carrying Hadoop glob metacharacters (r13 probe —
-    the write-literal/read-glob asymmetry). ``DataFrameWriter`` and
+    """Refuse paths carrying Hadoop glob metacharacters — the
+    write-literal/read-glob asymmetry. ``DataFrameWriter`` and
     the FileSystem API treat a path LITERALLY, but ``spark.read`` and
     ``globStatus`` expand it as a GLOB, so one string names two
-    different locations. Probed live: reading ``run[2024]/data``
+    different locations. Observed: reading ``run[2024]/data``
     silently UNIONED three wrong sibling directories (``run2``,
     ``run0``, ``run4``); ``batch_{1}`` silently read the sibling
     ``batch_1`` instead of itself; an index built at ``idx[v1]``
@@ -105,10 +105,9 @@ def _hidden_component(seg: str) -> bool:
     ``hadoop fs -put/-cp`` transfer) — except the parquet summary
     names ``_metadata``/``_common_metadata``, which Spark lists.
     Diverging from Spark in ANY clause makes the probes disagree with
-    what a read would actually see (the r8 full-suite catch: a
-    partition-dir-blind version of this rule called a freshly written
-    hive-partitioned dataset empty and injected its schema sentinel
-    next to live rows)."""
+    what a read would actually see (a partition-dir-blind version of
+    this rule called a freshly written hive-partitioned dataset empty
+    and injected its schema sentinel next to live rows)."""
     if seg.startswith(("_metadata", "_common_metadata")):
         return False
     return (
@@ -173,7 +172,7 @@ def zero_byte_files(spark: SparkSession, path: str) -> list[str]:
     copy, filesystem damage). A committed Spark part file is never
     empty — even a 0-row parquet write carries its footer and magic —
     so a 0-byte visible data file always means a tear, and Spark READS
-    it as silently empty (probed r12): without this probe a torn
+    it as silently empty: without this probe a torn
     tombstone-log file silently resurrected retracted docs and a torn
     index file silently shrank the corpus. Lengths come from the
     listing the visibility walk already makes — no per-file I/O.
@@ -199,10 +198,8 @@ def iter_part_files(fs, p):
     the exempt ``_metadata``/``_common_metadata`` summary footers — a
     "first non-hidden file" pick under
     ``parquet.summary.metadata.level=ALL`` installs a 0-row footer as
-    the output (ADVICE r8).  Shared by the ingest batch installer and
-    the revive survivor fold so the contract lives in ONE place (the
-    r8 bug existed precisely because the two sites shared a contract
-    but not code)."""
+    the output. Shared by the ingest batch installer and the revive
+    survivor fold so the contract lives in ONE place."""
     it = fs.listFiles(p, False)
     while it.hasNext():
         f = it.next().getPath()
@@ -214,14 +211,12 @@ def read_small_text_lines(spark: SparkSession, path: str) -> list[tuple[str, str
     """Driver-side line read of the VISIBLE data files under ``path``
     (or of ``path`` itself when it is a file) through the Hadoop FS —
     the shared helper behind the control-plane readers
-    (``dedup_index._read_manifest``, the checkpoint-metadata read):
+    (``index_core._read_manifest``, the checkpoint-metadata read):
     tiny single-row JSON files where a Spark read costs a job and
     buries parse failures in generic errors. Returns ``(file name,
     line)`` pairs for every non-blank line. Visible-file listing, not
-    ``part-*`` only (r13 review): the torn-manifest heal says "restore
-    the file", and a manifest restored under any sane name must read
-    back — a part-name-only scan misdiagnosed the healed file as a
-    torn write."""
+    ``part-*`` only: the torn-manifest heal says "restore the file",
+    and a manifest restored under any sane name must read back."""
     jvm = spark._jvm
     p, fs = _hadoop(spark, path)
     if not fs.exists(p):
@@ -281,12 +276,12 @@ def read_tombstones(spark: SparkSession, index_path: str) -> DataFrame | None:
 
     The absent-log probe is a FileSystem listing, not a read + caught
     AnalysisException: Spark logs the full JVM stack of the exception
-    even when Python catches it, which buried every bench / driver
-    tail under a harmless py4j trace (round-6 verdict #4). Listing
-    data FILES (not just the directory) also covers the empty-dir
-    state the file-level clears leave behind.
+    even when Python catches it, which buries every bench / driver
+    tail under a harmless py4j trace. Listing data FILES (not just
+    the directory) also covers the empty-dir state the file-level
+    clears leave behind.
 
-    Torn-file contract (r12 probe): a ZERO-BYTE log file reads as
+    Torn-file contract: a ZERO-BYTE log file reads as
     silently empty in Spark, so retractions it carried would silently
     resurface — takedown non-compliance with no signal. The log read
     therefore refuses loudly naming the file; the heal is manual by
@@ -297,8 +292,8 @@ def read_tombstones(spark: SparkSession, index_path: str) -> DataFrame | None:
     same state without raising (describe tools describe damage)."""
     assert_literal_path(index_path, "index path")
     # ONE directory walk serves both the file list and the torn probe
-    # (r12 review: a second recursive listing per query-path call is
-    # wasted LIST RPCs on object stores)
+    # (a second recursive listing per query-path call is wasted LIST
+    # RPCs on object stores)
     tp = _tomb_path(index_path)
     p, fs = _hadoop(spark, tp)
     statuses = list(_iter_visible_statuses(fs, p)) if fs.exists(p) else []
@@ -389,55 +384,6 @@ def _type_category(t: str) -> str:
     return t
 
 
-def _index_id_type(
-    spark: SparkSession, index_path: str, flavor: str | None = None
-) -> str | None:
-    """The index's document-id type, derived from its stored datasets
-    (flavor via manifest unless the caller already knows it — the
-    batch-conform callers do, which skips a manifest read job per
-    append/query; dedup flavors key by ``id``, the IVF lists keep the
-    builder's names). None when underivable (pre-manifest index, or
-    datasets not yet written)."""
-    from dbt_foundation_spark.operators.dedup_index import (
-        INDEX_LAYOUT,
-        _read_manifest,
-    )
-
-    # manifest-recorded type (r14): builds record id_type, making this
-    # a driver-side manifest read instead of a stored-dataset schema
-    # probe (listing + parquet footer per call — the retract/legacy
-    # conform paths pay it per operation). Appends conform to the
-    # recorded type, so it cannot drift from the stored datasets.
-    mft = _read_manifest(spark, index_path)
-    if mft and mft.get("id_type"):
-        return mft["id_type"]
-    if flavor is None:
-        flavor = (mft or {}).get("flavor")
-    if flavor not in INDEX_LAYOUT:
-        return None
-    for sub in INDEX_LAYOUT[flavor]:
-        # fs probe, not read + caught AnalysisException (the caught
-        # exception's JVM stack still lands in the driver tail); the
-        # data-file check also skips an existing-but-empty dir, which
-        # the old except-and-continue covered via UNABLE_TO_INFER_SCHEMA
-        if not _has_data_file(spark, f"{index_path}/{sub}"):
-            continue
-        # guarded (r13, extending the r12-advice _conform_batch_vec
-        # fix): an all-torn or mid-compaction-parked sub-dataset gets
-        # the named torn-file/rename-window heal, not a generic
-        # schema-inference error
-        schema = guarded_sub_read(spark, index_path, sub).schema
-        if flavor == "ivf":
-            if sub != "lists":
-                continue
-            from dbt_foundation_spark.operators.similarity import ivf_id_col
-
-            return schema[ivf_id_col(schema)].dataType.simpleString()
-        if "id" in schema.names:
-            return schema["id"].dataType.simpleString()
-    return None
-
-
 def _conform_id_type(
     spark: SparkSession, index_path: str, tomb: DataFrame
 ) -> DataFrame:
@@ -449,11 +395,13 @@ def _conform_id_type(
     success. Same-category mismatches (int batch, bigint index) are
     CAST to the target; cross-category mismatches raise."""
     existing = read_tombstones(spark, index_path)
-    target = (
-        existing.schema["id"].dataType.simpleString()
-        if existing is not None
-        else _index_id_type(spark, index_path)
-    )
+    if existing is not None:
+        target = existing.schema["id"].dataType.simpleString()
+    else:
+        # imported here: index_core imports this module at load time
+        from dbt_foundation_spark.operators.index_core import open_index
+
+        target = open_index(spark, index_path).id_type()
     got = tomb.schema["id"].dataType.simpleString()
     if target is None or got == target:
         return tomb
@@ -500,13 +448,12 @@ def retract_from_index(
     ``ids``: a single-column DataFrame (any id type matching the
     index's) or a plain Python iterable of id values.
 
-    Concurrency (r13 probe — concurrent takedown batches): a plain
-    ``mode("append")`` made concurrent retracts share the log's
-    ``_temporary/0`` FileOutputCommitter staging, and one job's commit
-    DELETES that directory wholesale — probed live with 4 concurrent
-    batches: one failed loud, and one SILENTLY LOST its whole batch
-    (returned success, rows never landed) — the worst fate for
-    takedown compliance. Each batch therefore writes aside to a
+    Concurrency: a plain ``mode("append")`` would make concurrent
+    retracts share the log's ``_temporary/0`` FileOutputCommitter
+    staging, and one job's commit DELETES that directory wholesale —
+    with 4 concurrent batches one failed loud and one SILENTLY LOST its
+    whole batch (returned success, rows never landed), the worst fate
+    for takedown compliance. Each batch therefore writes aside to a
     private sibling scratch dir and RENAME-installs its one file into
     the log under a unique name (the ``_install_batch_output``
     pattern): no shared staging, so any number of concurrent retracts
@@ -560,14 +507,14 @@ def retract_from_index(
 
 def guarded_sub_read(spark: SparkSession, index_path: str, sub: str) -> DataFrame:
     """Read one index sub-dataset with the compaction rename-window
-    guard (r12 verdict #3 — the reader∥maintenance seam).
+    guard (the reader∥maintenance seam).
 
     ``maintenance.compact_parquet_path`` installs a compacted
     sub-dataset via rename-aside → install, so an UNCOORDINATED reader
     (writers are excluded by the marker handshakes; plain reads are
     not) can catch the directory MISSING mid-swap, or parked at
     ``{sub}__compact_old`` after a crash between the two renames.
-    Pre-guard that surfaced as Spark's generic PATH_NOT_FOUND — or, on
+    Unguarded, that surfaces as Spark's generic PATH_NOT_FOUND — or, on
     listing-based paths, as a silently incomplete answer. Contract:
 
     - directory present → plain read after the torn-file probe (one
@@ -590,7 +537,7 @@ def guarded_sub_read(spark: SparkSession, index_path: str, sub: str) -> DataFram
     maintenance window — the same single-maintainer assumption the
     write-side markers carry (maintenance.compact_index docstring).
 
-    Torn-file contract (r12 probe): a ZERO-BYTE part file reads as
+    Torn-file contract: a ZERO-BYTE part file reads as
     silently empty (a silent subset of the index), so it raises here
     naming the file and the heal; a torn file with leftover bytes
     already fails loudly inside Spark with parquet's magic-number
@@ -669,8 +616,8 @@ def revive_marker_path(index_path: str) -> str:
 
 def append_marker_path(index_path: str) -> str:
     """The ``__appending`` marker every index APPEND holds while its
-    sub-dataset writes are in flight (round-10 verdict #4 — the write
-    seam the revive/compact handshake never covered).
+    sub-dataset writes are in flight (the write seam the revive/compact
+    handshake does not cover).
 
     Two hazards force write-side exclusion:
 
@@ -700,8 +647,9 @@ def append_marker_path(index_path: str) -> str:
     stable per-stream owner (their checkpoint identity), so a restart
     after a crash mid-append RECLAIMS its own stale marker and re-runs
     the batch (byte-identical replayed rows fold at compaction —
-    INDEX_DISTINCT_ON_COMPACT); batch appends get a fresh UUID owner,
-    so a crashed batch append's marker must be healed explicitly:
+    ``index_core.Sub.distinct_on_compact``); batch appends get a fresh
+    UUID owner, so a crashed batch append's marker must be healed
+    explicitly:
     verify no append is running, delete the marker, re-run the append.
     """
     return f"{index_path.rstrip('/')}/__appending"
@@ -714,7 +662,7 @@ def _read_marker_owner(fs, jvm, path) -> str | None:
     failed (open error, transient store fault, marker deleted between
     probe and open) — the two must not be conflated, or a transient
     read error would let a stream's empty-owner reclaim steal a LIVE
-    foreign claim (r11 review pass 3)."""
+    foreign claim."""
     try:
         stream = fs.open(path)
         try:
@@ -796,7 +744,7 @@ def hold_append_marker(
                 # create succeeded but the owner-token write/close
                 # failed IN-PROCESS: withdraw our half-created marker
                 # before propagating, or an empty-owner file would
-                # block later appends and compactions (r11 review)
+                # block later appends and compactions
                 fs.delete(mpath, False)
                 raise
             last_err.append(e)
@@ -807,7 +755,6 @@ def hold_append_marker(
         # the holder released between our failed create and this probe
         # — plain contention that resolved itself; retry once rather
         # than surfacing the raw FS exception as a fake store failure
-        # (r11 review pass 2)
         claimed = _claim_exclusive()
         if not claimed and not fs.exists(mpath):
             raise IOError(
@@ -895,7 +842,7 @@ def clear_tombstones(
     The driver-side collect is safe by the same bound the broadcast
     subtraction relies on: the log is takedown-sized, not corpus-sized.
 
-    Interleaving contract (ENFORCED since round 7): a revive — subset
+    Interleaving contract (enforced): a revive — subset
     OR full clear — issued while ``compact_index`` is running could
     report success and still lose ids whose rows sub-datasets already
     rewritten against the pre-revive snapshot dropped physically. Both
@@ -906,7 +853,7 @@ def clear_tombstones(
     that existed BEFORE the op started is a crashed run's deliberate
     guard, which a conflict must leave in place). ``compact_index``
     passes ``_during_compaction=True`` for its own snapshot clear,
-    which skips the handshake. ``_write_manifest`` passes
+    which skips the handshake. ``index_core._write_manifest`` passes
     ``_rebuild_reset=True`` at the end of a completed rebuild: every
     dataset was just replaced, so stale markers guard a generation
     that no longer exists — the rebuild clear bypasses the handshake
@@ -973,8 +920,8 @@ def clear_tombstones(
                 "__compacting and __reviving are crash leftovers (no "
                 "op live — index_stats lists them), the re-run "
                 "directions are circular; rebuild the index "
-                "(rebuild_*_index resets both markers) — the only "
-                "LOSSLESS escape, since sub-datasets the crashed "
+                "(re-running its build_*_index resets both markers) — "
+                "the only LOSSLESS escape, since sub-datasets the crashed "
                 "compaction already rewrote have physically dropped "
                 "their tombstoned rows and no revive can restore "
                 "them. The in-place alternative (after confirming "

@@ -298,7 +298,7 @@ def test_max_tokens_is_manifest_enforced(spark, tmp_path):
     # trust-the-caller survives ONLY for manifests that lack the key
     # entirely (built before the cap existed) — unit-level, since every
     # build now records the key
-    from dbt_foundation_spark.operators.dedup_index import _validate_params
+    from dbt_foundation_spark.operators.index_core import _validate_params
 
     legacy = {"flavor": "minhash", "num_hashes": 16}
     resolved = _validate_params("p", legacy, {"num_hashes": 16,

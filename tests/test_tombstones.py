@@ -1069,10 +1069,8 @@ def test_stale_markers_survive_conflicts_and_rebuild_resets(spark, tmp_path):
     its datasets replaced whatever the stale guard covered — and a
     typo'd revive fails BEFORE taking the marker."""
     import dbt_foundation_spark.operators.maintenance as maint
-    from dbt_foundation_spark.operators.dedup_index import (
-        _read_manifest,
-        build_simhash_index,
-    )
+    from dbt_foundation_spark.operators.dedup_index import build_simhash_index
+    from dbt_foundation_spark.operators.index_core import _read_manifest
     from dbt_foundation_spark.operators.tombstones import (
         _hadoop,
         compaction_marker_path,
@@ -1133,10 +1131,8 @@ def test_read_manifest_empty_dir_raises(spark, tmp_path):
     """An EXISTING manifest dir with no data file is _write_manifest's
     crash window, not a pre-manifest index — reads must raise loudly
     instead of silently skipping parameter validation."""
-    from dbt_foundation_spark.operators.dedup_index import (
-        _read_manifest,
-        build_simhash_index,
-    )
+    from dbt_foundation_spark.operators.dedup_index import build_simhash_index
+    from dbt_foundation_spark.operators.index_core import _read_manifest
     from dbt_foundation_spark.operators.tombstones import _hadoop
 
     path = str(tmp_path / "sh")
@@ -1183,10 +1179,10 @@ def test_manifest_corruption_fails_loud_and_named(spark, tmp_path):
     import os as _os
 
     from dbt_foundation_spark.operators.dedup_index import (
-        _read_manifest,
         build_simhash_index,
         dedup_against_simhash_index,
     )
+    from dbt_foundation_spark.operators.index_core import _read_manifest
 
     corpus = spark.createDataFrame(
         [(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa")],
