@@ -20,7 +20,9 @@ keys, so the shuffles are keyed and AQE-skew-splittable at 100 TB.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from dbt_foundation_spark.checkpoint import pin
@@ -36,7 +38,7 @@ from dbt_foundation_spark.functions.text import (
 # (h % P) * a < 2^62 — no int64 overflow under Spark 4 ANSI mode
 _P = (1 << 31) - 1
 
-# Giant-document guard (r10 verdict #2): every signature/shingle path
+# Giant-document guard: every signature/shingle path
 # computes over AT MOST this many leading whitespace tokens per
 # document. A single pathological multi-hundred-MB document otherwise
 # materializes its whole distinct-shingle array — and its explode —
@@ -115,20 +117,17 @@ def minhash_signature(
     doc's first ``max_tokens`` tokens (:data:`SIGNATURE_MAX_TOKENS` —
     the giant-document guard).
 
-    Degenerate identities (r11 probe): a duplicated id with DIFFERENT
-    text must not fold both texts into one aggregate — the pre-fix
-    groupBy(id) merged the two shingle streams into one garbage
-    signature that banded like NEITHER version (a probe lost an
-    exact-copy pair at jaccard 1.0), so one corrupt duplicate row
-    could silently change which pairs a CLEAN doc matches. The group
-    key is now (id, xxhash64(text)): unique-id corpora produce the
-    identical one-row-per-id output, exact full-row duplicates still
-    collapse, and a multi-version id yields one signature per version
-    — the same per-version rows the persisted index stores, folded to
-    strongest evidence by every pair consumer. NULL-id rows are
+    Degenerate identities: a duplicated id with DIFFERENT text must not
+    fold both texts into one aggregate — a groupBy(id) would merge the
+    two shingle streams into one signature that bands like NEITHER
+    version, so one corrupt duplicate row could silently change which
+    pairs a CLEAN doc matches. The group key is (id, xxhash64(text)):
+    unique-id corpora produce one row per id, exact full-row duplicates
+    collapse, and a multi-version id yields one signature per version —
+    the same per-version rows the persisted index stores, folded to
+    strongest evidence by :func:`_verify_pairs`. NULL-id rows are
     excluded up front: with no stable identity there is nothing to
-    pair, retract, or keep (the sampler contract), and pre-fix they
-    fell out SILENTLY through NULL comparisons downstream anyway.
+    pair, retract, or keep (the sampler contract).
 
     h_i(s) = (a_i * (H(s) mod P) + b_i) mod P over xxhash64-derived H
     with P = 2^31-1 — deterministic (fixed seed), and every intermediate
@@ -169,15 +168,15 @@ def _shingle_array_frame(
     """(_id, _ver, _sh) — one row per input row with the document's
     DISTINCT shingle array. The single tokenize/shingle pass every
     minhash stage derives from: the signature explodes it, the verify
-    re-attaches it. The pair operators ``pin`` this frame so the corpus
-    is tokenized ONCE per query (pre-r13 the signature subtree and each
-    verify attach re-tokenized it — 3 full scans; at 100 TB the pin is
-    a disk-backed cache the size of one posting shuffle, strictly
+    re-attaches it. :func:`_minhash_sign` pins this frame so the
+    corpus is tokenized ONCE per query (otherwise the signature subtree
+    and each verify attach re-tokenize it — 3 full scans; at 100 TB the
+    pin is a disk-backed cache the size of one posting shuffle, strictly
     cheaper than re-running the dominant map stage).
 
     ``hashed=True`` (the fast, non-portable flavor) stores
     ``_sh array<bigint>`` = the xxhash64'd shingle set instead of the
-    strings — ~3× lighter to pin, ship and compare (r14; containment's
+    strings — ~3× lighter to pin, ship and compare (containment's
     long-hash pattern). Signature math is BIT-IDENTICAL because the
     fast signature's base hash is xxhash64(shingle) — exactly the
     stored long (``_minhash_sig_from_arrays`` just skips the re-hash).
@@ -200,25 +199,22 @@ def _shingle_array_frame(
 
 
 def _hashed_attach(arr: DataFrame, hashed: bool) -> DataFrame:
-    """The verify-attach view of a :func:`_shingle_array_frame`:
-    (_id, _sh array<bigint>). Identity for a ``hashed`` frame; for a
+    """The verify-attach view of a :func:`_shingle_array_frame`, in the
+    persisted index's shingles layout: (id, shingles array<bigint>).
+    Renames only for a ``hashed`` frame; for a
     portable (string) frame it xxhash64's the arrays AFTER the pin read
     and BEFORE the attach join, so the join exchange ships longs and
-    the pair-level intersect/union compares longs (r14 — the measured
-    ~2.5× verify win containment_pairs documents). Hash-space jaccard
+    the pair-level intersect/union compares longs (the measured ~2.5×
+    verify win containment_pairs documents). Hash-space jaccard
     equals string-space jaccard unless two distinct shingles of the
     compared pair collide in 64 bits (expected colliding pairs
     S²/2⁶⁵ ≈ 2·10⁻⁹ at S=260 k — the containment collision-odds
     contract), so the emitted doubles match the string-space DuckDB
     oracles with overwhelming probability."""
-    if hashed:
-        return arr.select("_id", "_sh")
-    return arr.select(
-        "_id",
-        F.array_distinct(
-            F.transform("_sh", lambda s: F.xxhash64(s))
-        ).alias("_sh"),
-    )
+    sh = F.col("_sh")
+    if not hashed:
+        sh = F.array_distinct(F.transform(sh, lambda s: F.xxhash64(s)))
+    return arr.select(F.col("_id").alias("id"), sh.alias("shingles"))
 
 
 def _minhash_sig_from_arrays(
@@ -242,12 +238,11 @@ def _minhash_sig_from_arrays(
     h = exploded.select(
         "_id", "_ver", F.pmod(hashed_col, F.lit(_P)).alias("_h")
     )
-    # k-min aggs as ONE SQL string each (r14): the Column-by-Column
-    # form cost ~6 Py4J driver roundtrips per hash (~200 for k=32),
-    # a measured ~0.4 s of per-OPERATION driver constant — the hot
-    # per-ingest tax on index append/query paths. F.expr parses the
-    # identical arithmetic in one JVM call; the resulting expression
-    # tree (and therefore every signature value) is unchanged.
+    # k-min aggs as ONE SQL string each: the Column-by-Column form
+    # costs ~6 Py4J driver roundtrips per hash (~200 for k=32), a
+    # measured ~0.4 s of per-OPERATION driver constant on the index
+    # append/query paths. F.expr parses the identical arithmetic in one
+    # JVM call, to the same expression tree.
     aggs = [
         F.expr(f"min((_h * {a} + {b}) % {_P}) AS _mh{i}")
         for i, (a, b) in enumerate(coeffs)
@@ -274,13 +269,13 @@ def _hash_coeffs(k: int) -> list[tuple[int, int]]:
 
 
 def banding_geometry(num_hashes: int, bands: int, what: str = "num_hashes") -> int:
-    """Validated rows-per-band for minhash / hyperplane banding (r12
-    param-domain probe): ``bands < 1`` died in an integer division,
-    ``num_hashes < bands`` produced empty buckets that surfaced as an
+    """Validated rows-per-band for minhash / hyperplane banding:
+    ``bands < 1`` would die in an integer division, ``num_hashes <
+    bands`` would produce empty buckets that surface as an
     xxhash64-arity error deep inside codegen, and a non-dividing
-    ``bands`` SILENTLY ignored the trailing ``num_hashes % bands``
-    hashes — narrower banding than the caller designed, with no
-    signal. All three get one named error at the operator boundary."""
+    ``bands`` would SILENTLY ignore the trailing ``num_hashes % bands``
+    hashes — narrower banding than the caller designed. All three get
+    one named error at the operator boundary."""
     if num_hashes < 1 or bands < 1:
         raise ValueError(
             f"{what}={num_hashes} and bands={bands} must both be >= 1"
@@ -304,8 +299,8 @@ def banding_geometry(num_hashes: int, bands: int, what: str = "num_hashes") -> i
 
 
 def similarity_threshold(threshold: float, name: str) -> float:
-    """Validated similarity threshold for the set-overlap detectors
-    (r12 param-domain probe): jaccard/containment live in [0, 1], and
+    """Validated similarity threshold for the set-overlap detectors:
+    jaccard/containment live in [0, 1], and
     the inverted-index candidate generation only materializes pairs
     sharing at least one shingle — so a threshold <= 0, instead of
     meaning "all pairs", SILENTLY under-reports (zero-overlap pairs
@@ -324,15 +319,14 @@ def similarity_threshold(threshold: float, name: str) -> float:
 def _band_buckets(
     sig: DataFrame, bands: int, rows_per_band: int, portable: bool
 ) -> DataFrame:
-    """(_id, band, bucket) — one row per (doc, band), bucket = the band's
+    """(id, band, bucket) — one row per (doc, band), bucket = the band's
     r consecutive minhash values collapsed to a string key. Portable mode
     keeps the raw values joined with '|' (replayable anywhere); the fast
     flavor compresses them through xxhash64 (shorter shuffle keys).
 
-    Built as ONE F.expr (r14): the Column-by-Column form cost ~8 Py4J
+    Built as ONE F.expr: the Column-by-Column form costs ~8 Py4J
     roundtrips per band — per-operation driver constant on the ingest
-    hot path (see _minhash_sig_from_arrays). The parsed expression tree
-    and every bucket value are unchanged."""
+    hot path (see _minhash_sig_from_arrays)."""
 
     def bucket_sql(b: int) -> str:
         vals = [f"minhash[{b * rows_per_band + r}]" for r in range(rows_per_band)]
@@ -350,7 +344,180 @@ def _band_buckets(
     )
     return sig.select(
         "_id", F.expr(f"explode(array({rows})) AS bb")
-    ).select("_id", "bb.band", "bb.bucket")
+    ).select(F.col("_id").alias("id"), "bb.band", "bb.bucket")
+
+
+# Output id columns of the pair kernel: a batch paired with itself, and
+# a batch paired with a corpus (recomputed or a persisted index).
+_SELF = ("id_a", "id_b")
+_CROSS = ("new_id", "corpus_id")
+
+
+def _minhash_sign(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    num_hashes: int,
+    bands: int,
+    shingle_len: int,
+    portable: bool,
+    max_tokens: int | None,
+    pin_signature: bool = False,
+) -> tuple[DataFrame, DataFrame]:
+    """(bands (band, bucket, id), shingles (id, shingles array<bigint>))
+    — a frame's minhash blocking rows and verify payload, in the
+    persisted index's layout. The one signing path of every minhash
+    operator: batch, recomputed corpus, index build and index append.
+    ``max_tokens`` caps BOTH the signature and the verify shingles, so
+    candidate space and verify space agree.
+
+    One tokenize pass: the shingle-array frame is lazily pinned and
+    feeds both the signature and the verify shingles. The verify
+    shingles are xxhash64 longs on both flavors (:func:`_hashed_attach`):
+    the fast flavor pins the hashed frame outright (bit-identical
+    signatures, ~3× smaller pin), the portable flavor pins strings (its
+    md5 signature needs them) and hashes at attach time.
+
+    ``pin_signature`` also pins the signature, for a self-join whose two
+    sides both read the bands: unpinned, AQE broadcasts one side of the
+    band self-join, no exchange is reused, and the k-min aggregate runs
+    twice. The pinned signatures are k longs per doc; at 100 TB both
+    pins are disk-backed caches, cheaper than re-running the dominant
+    map stages."""
+    rows_per_band = banding_geometry(num_hashes, bands)
+    hashed = not portable
+    arr = pin(
+        _shingle_array_frame(
+            df, id_col, text_col, shingle_len, max_tokens, hashed=hashed
+        ),
+        eager=False,
+    )
+    sig = _minhash_sig_from_arrays(arr, num_hashes, portable, hashed=hashed)
+    if pin_signature:
+        sig = pin(sig, eager=False)
+    return (
+        _band_buckets(sig, bands, rows_per_band, portable),
+        _hashed_attach(arr, hashed),
+    )
+
+
+def _candidate_pairs(
+    left: DataFrame,
+    right: DataFrame | None,
+    keys: list[str],
+    pair: tuple[str, str] = _SELF,
+    ids: tuple[str, str] = ("id", "id"),
+    ride: str | None = None,
+) -> DataFrame:
+    """Blocking: distinct ``pair`` = (a, b) id pairs whose ``left`` and
+    ``right`` rows agree on every equi-join ``keys`` column. ``right=
+    None`` joins ``left`` with itself and keeps a < b, so each unordered
+    pair is proposed once. ``ids`` names each side's id column.
+
+    Only keys and ids cross the join: the heavy verify payload is
+    re-attached to the (much smaller) candidate set afterwards
+    (:func:`_verify_pairs`), so the blocking shuffle is
+    bytes-per-row-bounded and AQE-skew-splittable; shipping the payload
+    through it would multiply shuffle volume by the number of bands.
+
+    ``ride`` names a payload column carried through the join instead, as
+    ``sh_a``/``sh_b`` — for a detector whose payload is its own 8-byte
+    blocking signature (simhash). The rows then come back once per key
+    collision, not deduplicated: the verify filters them before the pair
+    fold, so the fold's shuffle carries only true pairs."""
+    a, b = pair
+    ride_a = [F.col(ride).alias("sh_a")] if ride else []
+    ride_b = [F.col(ride).alias("sh_b")] if ride else []
+    rows = left.select(*keys, F.col(ids[0]).alias(a), *ride_a).join(
+        (left if right is None else right).select(
+            *keys, F.col(ids[1]).alias(b), *ride_b
+        ),
+        keys,
+    )
+    if right is None:
+        rows = rows.filter(F.col(a) < F.col(b))
+    return rows if ride else rows.select(a, b).dropDuplicates([a, b])
+
+
+def _verify_pairs(
+    rows: DataFrame,
+    pair: tuple[str, str],
+    scores: dict[str, Column],
+    fold: Callable[[str], Column],
+    keep: Column,
+    sides: tuple = (),
+) -> DataFrame:
+    """The verify-and-fold every near-dup detector ends in: attach each
+    side's payload by id, score each row, apply the threshold, fold to
+    one row per ``pair``.
+
+    ``sides`` holds, for a then b, ``(payload frame, its id column,
+    {alias: payload column})``, joined to ``rows`` on the pair's id
+    column; it is empty when the payload already rides the rows.
+    ``scores`` maps each output column to its expression over the
+    attached payload, ``keep`` is the threshold predicate over the
+    scores, and ``fold`` (``F.max`` or ``F.min``) picks the stronger of
+    two scores.
+
+    Multi-version contract: a duplicated id — or an index id re-appended
+    with changed content — has one signature and payload row per
+    distinct text or vector, so one candidate pair can verify once per
+    version pair. The fold leaves ONE row per pair carrying the
+    strongest evidence across versions (max jaccard, min hamming,
+    column-wise max containment, max cosine): callers see "near-dup if
+    ANY version matches", never duplicate pairs or an arbitrary
+    version's score. A single score is thresholded before the fold (the
+    two commute, and the fold's shuffle then carries only passing rows).
+    Several scores fold column-wise first and gate on the folded values:
+    a version failing the combined gate can still carry the strongest
+    one-sided evidence, so the reported maxima may come from different
+    versions."""
+    for name, (frame, id_col, cols) in zip(pair, sides):
+        rows = rows.join(
+            frame.select(
+                F.col(id_col).alias(name),
+                *[F.col(c).alias(alias) for alias, c in cols.items()],
+            ),
+            name,
+        )
+    for name, expr in scores.items():
+        rows = rows.withColumn(name, expr)
+    folded = [fold(name).alias(name) for name in scores]
+    if len(scores) == 1:
+        return rows.filter(keep).groupBy(*pair).agg(*folded)
+    return rows.groupBy(*pair).agg(*folded).filter(keep)
+
+
+def _jaccard_pairs(
+    bands: DataFrame,
+    shingles: DataFrame,
+    jaccard_threshold: float,
+    corpus: tuple[DataFrame, DataFrame] | None = None,
+) -> DataFrame:
+    """Minhash band candidates verified by true shingle Jaccard: within
+    one signed frame (``corpus=None``; id_a < id_b), or between a batch
+    and a corpus. Each side is the (bands, shingles) pair
+    :func:`_minhash_sign` returns — or the persisted index stores.
+
+    The verify runs in xxhash64 space: the intersect/union sizes equal
+    the string-space ones unless two distinct shingles of the compared
+    pair collide in 64 bits (S²/2⁶⁵ ≈ 10⁻⁹ — :func:`_hashed_attach`), so
+    the emitted doubles match the string-space DuckDB oracles w.o.p."""
+    pair = _SELF if corpus is None else _CROSS
+    corpus_bands, corpus_shingles = corpus or (None, shingles)
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    union = F.size(F.array_union("sh_a", "sh_b"))
+    return _verify_pairs(
+        _candidate_pairs(bands, corpus_bands, ["band", "bucket"], pair),
+        pair,
+        {"jaccard": F.try_divide(inter, union)},
+        F.max,
+        F.col("jaccard") >= jaccard_threshold,
+        sides=(
+            (shingles, "id", {"sh_a": "shingles"}),
+            (corpus_shingles, "id", {"sh_b": "shingles"}),
+        ),
+    )
 
 
 def minhash_lsh_pairs(
@@ -368,17 +535,7 @@ def minhash_lsh_pairs(
 
     banding: rows/band r = num_hashes/bands; a pair collides iff some
     band's r minhashes all agree → candidate. Verification computes true
-    shingle Jaccard only on candidates — in xxhash64 space (r14): the
-    intersect/union sizes equal the string-space ones unless two
-    distinct shingles of the compared pair collide in 64 bits
-    (S²/2⁶⁵ ≈ 10⁻⁹ — :func:`_hashed_attach`), so the emitted doubles
-    match the string-space DuckDB oracles w.o.p.
-
-    Scale shape: the band self-join carries ONLY (band, bucket, id) —
-    the heavy shingle arrays are re-attached to the (much smaller)
-    candidate-pair set by two keyed equi-joins afterward. At 100 TB the
-    banding shuffle is bytes-per-row-bounded and AQE-skew-splittable;
-    shipping shingles through it would multiply shuffle volume ×bands.
+    shingle Jaccard only on candidates (:func:`_jaccard_pairs`).
 
     Hot buckets are the quadratic flank AQE cannot fix (k co-bucketed
     docs → C(k, 2) join-output pairs): collapse exact duplicates FIRST
@@ -387,81 +544,13 @@ def minhash_lsh_pairs(
     :func:`lsh_bucket_profile`.
     """
     similarity_threshold(jaccard_threshold, "jaccard_threshold")
-    pairs = _self_candidate_pairs_with_shingles(
-        df, id_col, text_col, num_hashes, bands, shingle_len, portable,
-        max_tokens,
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    return (
-        pairs.withColumn("jaccard", F.try_divide(inter, union))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        # one row per pair, strongest version wins: a duplicated id has
-        # one signature + shingle row per distinct text, so the verify
-        # join emits one row per version pair — fold to max jaccard,
-        # the in-memory twin of dedup_index's multi-version contract
-        .groupBy("id_a", "id_b")
-        .agg(F.max("jaccard").alias("jaccard"))
-    )
-
-
-def _self_candidate_pairs_with_shingles(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int,
-    bands: int,
-    shingle_len: int,
-    portable: bool,
-    max_tokens: int | None = SIGNATURE_MAX_TOKENS,
-) -> DataFrame:
-    """Banding self-join candidates (id_a < id_b) with both shingle sets
-    re-attached — the shared front half of the verify-stage pair ops.
-    ``max_tokens`` caps BOTH the signature and the re-attached verify
-    shingle sets, so candidate space and verify space agree.
-
-    One tokenize pass, one signature pass (r13 optimization): the
-    shingle arrays and the signature frame are lazily pinned. Pre-pin,
-    AQE broadcast one side of the band self-join AND both verify
-    attaches, so no exchange was ever reused and the corpus was
-    re-tokenized 4× (signature ×2 + verify attach ×2) with the k-min
-    aggregate paid twice — the plan evidence is
-    plans/r13/q_dedup_minhash_portable_{before,after}.txt. Both pinned
-    frames are small relative to the corpus (arrays ≈ the text itself,
-    signatures = k longs per doc); at 100 TB they are disk-backed
-    caches, strictly cheaper than re-running the dominant map stages.
-
-    r14: the verify arrays are xxhash64 longs on BOTH flavors (see
-    :func:`_hashed_attach`); the fast flavor pins the hashed frame
-    outright (~3× smaller pin, bit-identical signatures), the portable
-    flavor pins strings (its md5 signature needs them) and hashes at
-    attach time."""
-    rows_per_band = banding_geometry(num_hashes, bands)
-    hashed = not portable
-    arr = pin(
-        _shingle_array_frame(
-            df, id_col, text_col, shingle_len, max_tokens, hashed=hashed
+    return _jaccard_pairs(
+        *_minhash_sign(
+            df, id_col, text_col, num_hashes, bands, shingle_len, portable,
+            max_tokens, pin_signature=True,
         ),
-        eager=False,
+        jaccard_threshold,
     )
-    sig = pin(
-        _minhash_sig_from_arrays(arr, num_hashes, portable, hashed=hashed),
-        eager=False,
-    )
-    banded = _band_buckets(sig, bands, rows_per_band, portable)
-
-    left = banded.select("band", "bucket", F.col("_id").alias("id_a"))
-    right = banded.select("band", "bucket", F.col("_id").alias("id_b"))
-    cand = (
-        left.join(right, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    hs = _hashed_attach(arr, hashed)
-    return cand.join(
-        hs.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a")), "id_a"
-    ).join(hs.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b")), "id_b")
 
 
 def containment_pairs(
@@ -517,17 +606,7 @@ def containment_pairs(
     string-space values with overwhelming probability, and the DuckDB
     string-space oracle stays green."""
     similarity_threshold(threshold, "threshold")
-    # lazily pin the hashed shingle sets: the postings, BOTH verify
-    # attaches, and the prefix all derive from this one frame, and
-    # pre-pin (r13) the tokenize+hash pass ran 3× per query (postings +
-    # each broadcast attach side —
-    # plans/r13/q_containment_before.txt shows all three parquet scans).
-    # The pinned frame is ~8 bytes per distinct shingle per doc — the
-    # same bytes the posting exchange already ships.
-    hs = pin(
-        hashed_shingle_sets(df, id_col, text_col, shingle_len, max_tokens),
-        eager=False,
-    )
+    hs = _hash_sets(df, id_col, text_col, shingle_len, max_tokens)
     post, pref = containment_postings(hs, threshold)
     index = post if max_df is None else post.filter(F.col("df") <= max_df)
     cand = (
@@ -543,26 +622,46 @@ def containment_pairs(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    pairs = cand.join(
-        hs.select(F.col("id").alias("id_a"), F.col("hs").alias("sh_a")), "id_a"
-    ).join(hs.select(F.col("id").alias("id_b"), F.col("hs").alias("sh_b")), "id_b")
+    return _containment_verify(
+        cand, _SELF, ("containment_a", "containment_b"), (hs, hs), threshold
+    )
+
+
+def _containment_verify(
+    cand: DataFrame,
+    pair: tuple[str, str],
+    names: tuple[str, str],
+    sets: tuple[DataFrame, DataFrame],
+    threshold: float,
+) -> DataFrame:
+    """Hash-space containment of each candidate pair in both directions,
+    ``names`` = (|a∩b|/|a|, |a∩b|/|b|), kept where either reaches
+    ``threshold``. ``sets`` are each side's :func:`hashed_shingle_sets`
+    frame (id, hs)."""
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    c_a = F.try_divide(inter, F.size("sh_a"))
-    c_b = F.try_divide(inter, F.size("sh_b"))
-    return (
-        pairs.withColumn("containment_a", c_a)
-        .withColumn("containment_b", c_b)
-        # column-wise max per pair BEFORE the gate: a duplicated id has
-        # one hash-set row per distinct text, and a version failing the
-        # combined gate can still carry the strongest one-sided
-        # evidence (the same fold containment_against_index uses). The
-        # surviving pair set is unchanged for unique-id corpora.
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.max("containment_a").alias("containment_a"),
-            F.max("containment_b").alias("containment_b"),
-        )
-        .filter(F.greatest("containment_a", "containment_b") >= threshold)
+    return _verify_pairs(
+        cand,
+        pair,
+        {
+            names[0]: F.try_divide(inter, F.size("sh_a")),
+            names[1]: F.try_divide(inter, F.size("sh_b")),
+        },
+        F.max,
+        F.greatest(*names) >= threshold,
+        sides=((sets[0], "id", {"sh_a": "hs"}), (sets[1], "id", {"sh_b": "hs"})),
+    )
+
+
+def _hash_sets(df, id_col, text_col, shingle_len, max_tokens) -> DataFrame:
+    """Lazily pinned :func:`hashed_shingle_sets`: the postings, the
+    prefixes and both verify attaches all derive from this one frame, so
+    the tokenize+hash pass runs once (unpinned it runs once for the
+    postings and once per broadcast attach side). The pin is ~8 bytes
+    per distinct shingle per doc — the bytes the posting exchange ships
+    anyway."""
+    return pin(
+        hashed_shingle_sets(df, id_col, text_col, shingle_len, max_tokens),
+        eager=False,
     )
 
 
@@ -647,10 +746,10 @@ def minhash_lsh_join(
     candidates generated ONLY across the two sides, never within either.
 
     This is the daily-ingest shape at 100 TB: the corpus side's
-    signatures/bands are a precomputed, incrementally-maintained index
-    (recompute here for self-containment; in production persist the
-    ``_band_buckets`` output partitioned by (band, bucket) and this
-    becomes a pruned equi-join touching only the new batch's buckets).
+    signatures/bands are a precomputed, incrementally-maintained index.
+    They are recomputed here; ``dedup_index.dedup_against_index`` runs
+    this same pair code with the corpus's (bands, shingles) read from a
+    persisted index clustered by (band, bucket).
     Cost scales with |new| × collision rate, not |corpus|² — re-running
     the full self-join dedup per ingest would be quadratic in corpus
     size over time.
@@ -661,61 +760,14 @@ def minhash_lsh_join(
     self-join's output (the property the DuckDB oracle checks).
     """
     similarity_threshold(jaccard_threshold, "jaccard_threshold")
-    rows_per_band = banding_geometry(num_hashes, bands)
-    hashed = not portable
-    # one tokenize pass PER SIDE (r13): each side's shingle arrays are
-    # lazily pinned and feed both its signature and its verify attach —
-    # pre-pin each side was tokenized twice (see
-    # _self_candidate_pairs_with_shingles for the mechanism and the
-    # at-scale cache argument). r14: long-hashed pins/attaches, same as
-    # _self_candidate_pairs_with_shingles.
-    arr_new = pin(
-        _shingle_array_frame(
-            new_df, id_col, text_col, shingle_len, max_tokens, hashed=hashed
-        ),
-        eager=False,
-    )
-    arr_corpus = pin(
-        _shingle_array_frame(
-            corpus_df, id_col, text_col, shingle_len, max_tokens, hashed=hashed
-        ),
-        eager=False,
-    )
-    sig_new = _minhash_sig_from_arrays(arr_new, num_hashes, portable, hashed=hashed)
-    sig_corpus = _minhash_sig_from_arrays(
-        arr_corpus, num_hashes, portable, hashed=hashed
-    )
-    banded_new = _band_buckets(sig_new, bands, rows_per_band, portable)
-    banded_corpus = _band_buckets(sig_corpus, bands, rows_per_band, portable)
-    cand = (
-        banded_new.select("band", "bucket", F.col("_id").alias("new_id"))
-        .join(
-            banded_corpus.select("band", "bucket", F.col("_id").alias("corpus_id")),
-            ["band", "bucket"],
+
+    def sign(side: DataFrame) -> tuple[DataFrame, DataFrame]:
+        return _minhash_sign(
+            side, id_col, text_col, num_hashes, bands, shingle_len, portable,
+            max_tokens,
         )
-        .select("new_id", "corpus_id")
-        .dropDuplicates(["new_id", "corpus_id"])
-    )
-    hs_new = _hashed_attach(arr_new, hashed)
-    hs_corpus = _hashed_attach(arr_corpus, hashed)
-    pairs = cand.join(
-        hs_new.select(F.col("_id").alias("new_id"), F.col("_sh").alias("sh_a")),
-        "new_id",
-    ).join(
-        hs_corpus.select(
-            F.col("_id").alias("corpus_id"), F.col("_sh").alias("sh_b")
-        ),
-        "corpus_id",
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    return (
-        pairs.withColumn("jaccard", F.try_divide(inter, union))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        # strongest version per cross-side pair (see minhash_lsh_pairs)
-        .groupBy("new_id", "corpus_id")
-        .agg(F.max("jaccard").alias("jaccard"))
-    )
+
+    return _jaccard_pairs(*sign(new_df), jaccard_threshold, corpus=sign(corpus_df))
 
 
 def connected_components(
@@ -740,13 +792,12 @@ def connected_components(
     (decimal — no bigint overflow at any corpus size), one scalar per
     round.
 
-    Degenerate edges (r11 probe): a pair with a NULL endpoint is
-    dropped at entry — an edge to an unknown document is no evidence
-    (the detectors never emit one post-r11, but a user-supplied pair
-    list can). Pre-fix the NULL endpoints fabricated a (NULL,
-    component) output row, since all NULL "nodes" collapse into one
-    groupBy key while the propagation join (NULL equality) never
-    reaches them. Self-loops (id_a == id_b) are harmless — the node
+    Degenerate edges: a pair with a NULL endpoint is dropped at entry —
+    an edge to an unknown document is no evidence (the detectors never
+    emit one, but a user-supplied pair list can). Kept, the NULL
+    endpoints would fabricate a (NULL, component) output row, since all
+    NULL "nodes" collapse into one groupBy key while the propagation
+    join (NULL equality) never reaches them. Self-loops (id_a == id_b) are harmless — the node
     labels itself — and pass through."""
     fwd = pairs.filter(
         F.col(id_a).isNotNull() & F.col(id_b).isNotNull()
@@ -815,7 +866,7 @@ def repeated_ngram_spans(
     distinct n-token spans per doc, how many of them appear in ≥
     ``min_docs`` distinct documents, and the widest such spread.
     NULL-text documents produce no spans and are absent from the
-    output (r9 NULL-shingle contract).
+    output (the NULL-shingle contract).
 
     Shape: distinct spans exploded per doc make the span's window
     count(*) EQUAL its distinct-doc frequency (no countDistinct), so the
@@ -826,9 +877,9 @@ def repeated_ngram_spans(
     # under) but their grams STAY in the cross-document window — a
     # boilerplate copy whose id was corrupted is still repetition
     # evidence, and filtering it before the window would silently
-    # LOWER clean documents' repeated_ratio/max_span_docs (r11 review:
-    # unlike the pair detectors, where NULL ids contribute nothing
-    # downstream, here they carry signal for OTHER rows). Per-document
+    # LOWER clean documents' repeated_ratio/max_span_docs (unlike the
+    # pair detectors, where NULL ids contribute nothing downstream,
+    # here they carry signal for OTHER rows). Per-document
     # metrics otherwise assume UNIQUE ids — run the corpus gate /
     # exact dedup first (the fused pipeline's ordering); a duplicated
     # id counts each of its rows as a document, the honest reading for
@@ -865,21 +916,20 @@ def keep_best_per_cluster(
     corpus dedup wants.
 
     Returns (comp, keeper_id, n_members, best_score) — one row per
-    cluster, ALWAYS. Eligibility contract (r11 probe): a member whose
-    score is NULL (the scoring stage failed for it) is as ineligible
-    as one missing from ``scores`` entirely — pre-fix a NULL-scored
-    member could "win" purely because it had a row while a better
-    member's row was absent, emitting a keeper with best_score NULL as
-    if chosen on merit. A cluster with NO eligible member keeps its
+    cluster, ALWAYS. Eligibility contract: a member whose score is NULL
+    (the scoring stage failed for it) is as ineligible as one missing
+    from ``scores`` entirely — otherwise a NULL-scored member could
+    "win" purely because it had a row while a better member's row was
+    absent, emitting a keeper with best_score NULL as if chosen on
+    merit. A cluster with NO eligible member keeps its
     row with NULL keeper_id/best_score (an explicit
     nothing-safe-to-keep signal, not a silent vanish) — route those to
     re-scoring, do not drop their members on a keeper that does not
     exist. n_members counts ALL labeled members, eligible or not.
-    NaN scores are as ineligible as NULL ones (r11 review pass 3):
-    Spark orders NaN ABOVE every finite double, so a failed-scoring
-    member with score=NaN would otherwise beat every legitimately
-    scored member — the same non-finite hazard the ANN family gates
-    (r10)."""
+    NaN scores are as ineligible as NULL ones: Spark orders NaN ABOVE
+    every finite double, so a failed-scoring member with score=NaN
+    would otherwise beat every legitimately scored member — the same
+    non-finite hazard the ANN family gates."""
     sc = F.col(score_col).cast("double")
     eligible = scores.where(sc.isNotNull() & ~F.isnan(sc))
     joined = labels.join(eligible, id_col)
@@ -920,25 +970,23 @@ def simhash(
     the identical bit math replays in any engine with md5 — the
     cross-engine-oracle path. Default xxhash64 stays the fast flavor.
 
-    Cold-vs-warm note (the round-2 "+1.24 s regression" explained): the
-    65-buffer hash aggregate compiles ~3 s of generated code, so a
+    Cold-vs-warm note: the 65-buffer hash aggregate compiles ~3 s of generated code, so a
     single cold run ≈ 2× the steady-state cost and small bench deltas
     on this query are compile noise. A lane-packed alternative (4×16-bit
     ones-counts per long, 17 buffers) was measured: ~4 s less compile
     but ~25 % more per-row map work — rejected, because at 100 TB the
-    plan compiles once and the map stage is the bill. The real win was
-    in the pair stage instead: filtering hamming BEFORE the pair dedup
-    (see simhash_near_pairs) halved the query's steady-state wall
-    (3.3 s → 1.85 s at sf0.1). bench.py reports warm timings for the
+    plan compiles once and the map stage is the bill. The pair stage's
+    hamming-before-fold filter (:func:`_hamming_pairs`) is what halves
+    the query's steady-state wall (3.3 s → 1.85 s at sf0.1). bench.py reports warm timings for the
     slowest queries so the scaling number stays readable."""
     toks = tokenize(text_col)
     if max_tokens is not None:
         # giant-document guard, same contract as token_ngrams(max_tokens)
         toks = F.slice(toks, 1, max_tokens)
     # one signature per (id, distinct text) and no NULL ids — the same
-    # degenerate-identity contract as minhash_signature (pre-fix the
-    # groupBy(id) summed BOTH versions' ±1 bit votes into one garbage
-    # signature that matched neither text)
+    # degenerate-identity contract as minhash_signature (a groupBy(id)
+    # would sum BOTH versions' ±1 bit votes into one signature that
+    # matches neither text)
     exploded = identified(df, id_col).select(
         F.col(id_col).alias("_id"),
         F.xxhash64(F.col(text_col)).alias("_ver"),
@@ -960,9 +1008,9 @@ def simhash(
             return f"getbit(_h, {i})"
     # ±1 as arithmetic (2*bit − 1), not CaseWhen: 64 fewer branch nodes
     # per row in the codegen'd aggregate. Each aggregate (and the whole
-    # 64-term packed fold below) is built as a parsed SQL string (r14):
-    # the Column-by-Column form cost ~8 Py4J driver roundtrips per bit
-    # — ~0.6 s of per-query/per-ingest constant on every simhash path —
+    # 64-term packed fold below) is built as a parsed SQL string: the
+    # Column-by-Column form costs ~8 Py4J driver roundtrips per bit —
+    # ~0.6 s of per-query/per-ingest constant on every simhash path —
     # and parses to the IDENTICAL expression tree.
     bit_sums = [
         F.expr(f"sum({bit_sql(i)} * 2 - 1) AS _b{i}")
@@ -986,6 +1034,17 @@ def simhash(
     )
 
 
+def hamming_radius(max_hamming: int) -> int:
+    """Validated simhash radius, shared by the batch detector and the
+    index probe so neither accepts a radius the other refuses."""
+    if not 0 <= max_hamming <= 31:
+        raise ValueError(
+            f"max_hamming={max_hamming}: need 0 <= max_hamming <= 31 "
+            "(chunks below 2 bits make LSH blocking meaningless)"
+        )
+    return max_hamming
+
+
 def signature_chunks(sh: DataFrame, max_hamming: int) -> DataFrame:
     """Explode a (_id, simhash) frame into its pigeonhole chunks:
     (_id, simhash, chunk, ck). The 64 signature bits split into
@@ -998,12 +1057,7 @@ def signature_chunks(sh: DataFrame, max_hamming: int) -> DataFrame:
     chunks identically whether it arrives in a batch or sits in the
     stored corpus index — the property the persisted-vs-recompute
     equivalence tests pin."""
-    if not 0 <= max_hamming <= 31:
-        raise ValueError(
-            f"max_hamming={max_hamming}: need 0 <= max_hamming <= 31 "
-            "(chunks below 2 bits make LSH blocking meaningless)"
-        )
-    n_chunks = max_hamming + 1
+    n_chunks = hamming_radius(max_hamming) + 1
     base, rem = divmod(64, n_chunks)
     widths = [base + 1] * rem + [base] * (n_chunks - rem)
     offsets = [sum(widths[:c]) for c in range(n_chunks)]
@@ -1056,33 +1110,38 @@ def simhash_near_pairs(
     """
     # lazily pin the signatures: 5-70 bytes per doc, but the frame is
     # the output of THE dominant stage (tokenize + 64-bit-sum
-    # aggregate). Pre-pin (r13), AQE broadcast one side of the chunk
-    # self-join, so no exchange was reused and that whole stage ran
-    # TWICE per query — plans/r13/q_dedup_simhash_portable_before.txt
-    # shows both 64-function HashAggregate subtrees.
+    # aggregate). Unpinned, AQE broadcasts one side of the chunk
+    # self-join, no exchange is reused and that whole stage runs TWICE
+    # per query.
     sh = pin(
         simhash(df, id_col, text_col, portable=portable, max_tokens=max_tokens),
         eager=False,
     )
-    chunks = signature_chunks(sh, max_hamming)
-    left = chunks.select("chunk", "ck", F.col("_id").alias("id_a"), F.col("simhash").alias("sh_a"))
-    right = chunks.select("chunk", "ck", F.col("_id").alias("id_b"), F.col("simhash").alias("sh_b"))
-    # hamming BEFORE the pair dedup: the signatures ride the join rows
-    # (nothing to re-attach, unlike minhash's shingle verify), and
-    # bit_count(xor) is a codegen'd two-instruction filter — so the
-    # dropDuplicates shuffle carries only TRUE pairs, not every
-    # multi-chunk candidate collision
-    return (
-        left.join(right, ["chunk", "ck"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
-        .filter(F.col("hamming") <= max_hamming)
-        # closest version wins deterministically (a duplicated id has
-        # one signature per distinct text; dropDuplicates kept an
-        # arbitrary version's distance — the same defect r10 fixed in
-        # dedup_against_simhash_index)
-        .groupBy("id_a", "id_b")
-        .agg(F.min("hamming").alias("hamming"))
+    return _hamming_pairs(signature_chunks(sh, max_hamming), None, max_hamming)
+
+
+def _hamming_pairs(
+    chunks: DataFrame,
+    corpus_chunks: DataFrame | None,
+    max_hamming: int,
+    pair: tuple[str, str] = _SELF,
+    ids: tuple[str, str] = ("_id", "_id"),
+) -> DataFrame:
+    """Simhash chunk candidates (:func:`signature_chunks` rows) verified
+    by hamming distance ≤ ``max_hamming``: within one frame
+    (``corpus_chunks=None``) or between a batch and a corpus. The
+    signature rides the chunk rows, so the hamming filter — a codegen'd
+    bit_count(xor) — runs BEFORE the pair fold, with nothing to
+    re-attach: the fold's shuffle carries only true pairs, not every
+    multi-chunk collision."""
+    return _verify_pairs(
+        _candidate_pairs(
+            chunks, corpus_chunks, ["chunk", "ck"], pair, ids, ride="simhash"
+        ),
+        pair,
+        {"hamming": F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))},
+        F.min,
+        F.col("hamming") <= max_hamming,
     )
 
 
@@ -1124,14 +1183,13 @@ def ngram_jaccard_pairs(
     # excluded; each (id, distinct text) VERSION keys the postings, so
     # a duplicated id cannot merge two texts' co-occurrence counts into
     # one incoherent sum (full-row duplicates collapse to one version
-    # row first — pre-fix a doubled row doubled its own intersection
+    # row first — a doubled row would double its own intersection
     # counts, pushing "jaccard" past 1.0). The collapse runs on the RAW
-    # text BEFORE shingling (r12 mover adjudication): collapsing after
-    # shingling shuffled the _sh arrays (~shingle_len× the text bytes)
-    # and computed n-grams once per duplicate row; collapsing first
-    # keeps the "no arrays cross a shuffle" property and shingles once
-    # per distinct version.
-    # duplicate collapse as a plain DISTINCT (r13): _ver = xxhash64(_txt)
+    # text BEFORE shingling: collapsing after shingling would shuffle
+    # the _sh arrays (~shingle_len× the text bytes) and compute n-grams
+    # once per duplicate row; collapsing first keeps the "no arrays
+    # cross a shuffle" property and shingles once per distinct version.
+    # duplicate collapse as a plain DISTINCT: _ver = xxhash64(_txt)
     # functionally determines _txt, so adding _txt to the key changes no
     # groups — but dropDuplicates on a SUBSET of columns plans as
     # first(_txt), and first() over a string demotes the whole dedup to
@@ -1147,8 +1205,8 @@ def ngram_jaccard_pairs(
         )
         .dropDuplicates([*block_cols, "_id", "_ver", "_txt"])
     )
-    # postings are xxhash64(shingle) longs (r14 — the containment
-    # pattern): the exploded posting frame, its df-window sort, the pin
+    # postings are xxhash64(shingle) longs (the containment pattern):
+    # the exploded posting frame, its df-window sort, the pin
     # materialization and the self-join keys all carry an 8-byte long
     # instead of the shingle string. |A∩B| / |A| counts in hash space
     # equal the string-space ones unless two distinct shingles of a
@@ -1170,8 +1228,7 @@ def ngram_jaccard_pairs(
     # the pair group key — _n is functionally determined by (_id, _ver),
     # so grouping on it adds no groups. The alternative (a separate
     # sizes frame joined back per side) costs two keyed join exchanges
-    # that dominated this operator's shuffle budget (r11: the
-    # version-keyed rewrite briefly did exactly that).
+    # that would dominate this operator's shuffle budget.
     inv = sh.select(
         *block_cols,
         "_id",
@@ -1186,10 +1243,9 @@ def ngram_jaccard_pairs(
             .filter(F.col("_df") <= max_df)
             .drop("_df")
         )
-    # lazily pin the postings: pre-pin (r13) AQE broadcast the right
-    # side of the self-join, so the ENTIRE posting subtree (scan, dedup,
-    # shingling, explode, df-window) executed twice per query
-    # (plans/r13/q_ngram_jaccard_before.txt shows both copies). The pin
+    # lazily pin the postings: unpinned, AQE broadcasts the right side
+    # of the self-join, so the ENTIRE posting subtree (scan, dedup,
+    # shingling, explode, df-window) executes twice per query. The pin
     # also preserves the window's (block, _s) partitioning and sort
     # order, which are exactly the self-join's keys — both join sides
     # read one cached materialization with no further exchange. The
@@ -1213,12 +1269,8 @@ def ngram_jaccard_pairs(
     jac = F.try_divide(
         F.col("_common"), F.col("_na") + F.col("_nb") - F.col("_common")
     )
-    return (
-        common.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= threshold)
-        # strongest version pair wins (multi-version contract)
-        .groupBy("id_a", "id_b")
-        .agg(F.max("jaccard").alias("jaccard"))
+    return _verify_pairs(
+        common, _SELF, {"jaccard": jac}, F.max, F.col("jaccard") >= threshold
     )
 
 

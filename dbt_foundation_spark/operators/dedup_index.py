@@ -51,18 +51,20 @@ On a real cluster, write the bands/chunks/postings datasets as bucketed
 tables (``bucketBy(n, key)``) so the per-ingest join is shuffle-free on
 the index side; path-based parquet keeps this module warehouse-free.
 
+Candidate generation and verify are the batch detectors' own pair
+kernel in operators/dedup.py (``_candidate_pairs``, ``_verify_pairs``
+and each detector's scoring helper); a probe differs from its
+recompute twin only in reading the corpus side from the index.
+
 Multi-version contract: ``append_to_*`` does NOT check whether an id
 is already live (an existence probe would anti-join the full index on
 every micro-batch). Re-appending an id with changed content therefore
 leaves SEVERAL live signature/payload rows for that id, all of which
-participate as candidates. Every ``*_against_index`` folds its verify
-output to ONE row per (new_id, corpus_id) carrying the strongest
-evidence across versions — max jaccard / min hamming / column-wise max
-containment / max cosine — so callers see a deterministic "near-dup if
-ANY stored version matches" verdict, never duplicate pairs or an
-arbitrary version's score. The supported content-REPLACE path is
-retract → clear_tombstones → append (or a rebuild); compaction's
-distinct-fold collapses byte-identical re-appends only.
+participate as candidates; the verify folds them to the strongest
+evidence per pair (``dedup._verify_pairs``). The supported
+content-REPLACE path is retract → clear_tombstones → append (or a
+rebuild); compaction's distinct-fold collapses byte-identical
+re-appends only.
 """
 
 from __future__ import annotations
@@ -70,17 +72,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dbt_foundation_spark.checkpoint import pin
 from dbt_foundation_spark.functions import vectors as V
 from dbt_foundation_spark.operators.dedup import (
     SIGNATURE_MAX_TOKENS,
-    _band_buckets,
-    _hashed_attach,
-    _minhash_sig_from_arrays,
-    _shingle_array_frame,
+    _CROSS,
+    _candidate_pairs,
+    _containment_verify,
+    _hamming_pairs,
+    _hash_sets,
+    _jaccard_pairs,
+    _minhash_sign,
+    _verify_pairs,
     banding_geometry,
     containment_postings,
-    hashed_shingle_sets,
+    hamming_radius,
     identified,
     signature_chunks,
     similarity_threshold,
@@ -112,25 +117,6 @@ def _minhash_params(num_hashes, bands, shingle_len, portable, max_tokens) -> dic
     }
 
 
-def _minhash_arrays(df, id_col, text_col, shingle_len, max_tokens, portable):
-    # one tokenize pass: the lazily pinned shingle-array frame feeds both
-    # the signature and the verify shingles. The stored verify shingles
-    # are xxhash64 longs for both flavors (dedup.py collision contract):
-    # the fast flavor pins the hashed frame outright (bit-identical
-    # signatures), the portable one hashes at write.
-    return pin(
-        _shingle_array_frame(
-            df, id_col, text_col, shingle_len, max_tokens, hashed=not portable
-        ),
-        eager=False,
-    )
-
-
-def _minhash_bands(arr, num_hashes, bands, portable) -> DataFrame:
-    sig = _minhash_sig_from_arrays(arr, num_hashes, portable, hashed=not portable)
-    return _band_buckets(sig, bands, banding_geometry(num_hashes, bands), portable)
-
-
 def build_minhash_index(
     df: DataFrame,
     id_col: str,
@@ -156,19 +142,17 @@ def build_minhash_index(
     # fewer splits than cores would serialize the shingling/signature
     # stage on those tasks; identity on a real many-file corpus
     df = fan_out(df)
-    arr = _minhash_arrays(df, id_col, text_col, shingle_len, max_tokens, portable)
+    banded, shingles = _minhash_sign(
+        df, id_col, text_col, num_hashes, bands, shingle_len, portable, max_tokens
+    )
     write_index(
         df,
         id_col,
         path,
         _minhash_params(num_hashes, bands, shingle_len, portable, max_tokens),
         {
-            "bands": _minhash_bands(arr, num_hashes, bands, portable)
-            .withColumnRenamed("_id", "id")
-            .repartition(index_partitions, "band", "bucket"),
-            "shingles": _hashed_attach(arr, not portable).select(
-                F.col("_id").alias("id"), F.col("_sh").alias("shingles")
-            ),
+            "bands": banded.repartition(index_partitions, "band", "bucket"),
+            "shingles": shingles,
         },
     )
 
@@ -201,37 +185,13 @@ def dedup_against_index(
     )
     similarity_threshold(jaccard_threshold, "jaccard_threshold")
     new_df = idx.conform(new_df, id_col)
-    arr_new = _minhash_arrays(
-        new_df, id_col, text_col, shingle_len, max_tokens, portable
-    )
-    banded_new = _minhash_bands(arr_new, num_hashes, bands, portable)
-    cand = (
-        banded_new.select("band", "bucket", F.col("_id").alias("new_id"))
-        .join(
-            idx.live("bands").select(
-                "band", "bucket", F.col("id").alias("corpus_id")
-            ),
-            ["band", "bucket"],
-        )
-        .select("new_id", "corpus_id")
-        .dropDuplicates(["new_id", "corpus_id"])
-    )
-    sh_new = _hashed_attach(arr_new, not portable).select(
-        F.col("_id").alias("new_id"), F.col("_sh").alias("sh_a")
-    )
-    sh_corpus = idx.live("shingles").select(
-        F.col("id").alias("corpus_id"), F.col("shingles").alias("sh_b")
-    )
-    pairs = cand.join(sh_new, "new_id").join(sh_corpus, "corpus_id")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    # one row per (new_id, corpus_id), strongest version wins
-    # (multi-version contract, module docstring)
-    return (
-        pairs.withColumn("jaccard", F.try_divide(inter, union))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .groupBy("new_id", "corpus_id")
-        .agg(F.max("jaccard").alias("jaccard"))
+    return _jaccard_pairs(
+        *_minhash_sign(
+            new_df, id_col, text_col, num_hashes, bands, shingle_len, portable,
+            max_tokens,
+        ),
+        jaccard_threshold,
+        corpus=(idx.live("bands"), idx.live("shingles")),
     )
 
 
@@ -259,18 +219,10 @@ def append_to_index(
         _minhash_params(num_hashes, bands, shingle_len, portable, max_tokens),
     )
     df = idx.conform(df, id_col)
-    arr = _minhash_arrays(df, id_col, text_col, shingle_len, max_tokens, portable)
-    idx.append(
-        {
-            "shingles": _hashed_attach(arr, not portable).select(
-                F.col("_id").alias("id"), F.col("_sh").alias("shingles")
-            ),
-            "bands": _minhash_bands(
-                arr, num_hashes, bands, portable
-            ).withColumnRenamed("_id", "id"),
-        },
-        owner,
+    banded, shingles = _minhash_sign(
+        df, id_col, text_col, num_hashes, bands, shingle_len, portable, max_tokens
     )
+    idx.append({"shingles": shingles, "bands": banded}, owner)
 
 
 # ---------- simhash chunk index ----------
@@ -349,6 +301,7 @@ def dedup_against_simhash_index(
     the equi-join lines up with the stored layout — any pair within the
     caller radius is within the build radius, so some chunk still
     matches — and the hamming filter applies the caller's radius."""
+    hamming_radius(max_hamming)
     idx = open_index(
         spark,
         path,
@@ -359,26 +312,8 @@ def dedup_against_simhash_index(
     new_chunks = _simhash_chunks(
         new_df, id_col, text_col, int(idx.params["max_hamming"]), portable, max_tokens
     )
-    return (
-        new_chunks.select(
-            "chunk", "ck", F.col("id").alias("new_id"), F.col("simhash").alias("sh_a")
-        )
-        .join(
-            idx.live("chunks").select(
-                "chunk",
-                "ck",
-                F.col("id").alias("corpus_id"),
-                F.col("simhash").alias("sh_b"),
-            ),
-            ["chunk", "ck"],
-        )
-        .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
-        .filter(F.col("hamming") <= max_hamming)
-        # min per pair, not dropDuplicates: a multi-version id has
-        # several signatures, and dropDuplicates would keep an ARBITRARY
-        # version's distance. Closest version wins, deterministically.
-        .groupBy("new_id", "corpus_id")
-        .agg(F.min("hamming").alias("hamming"))
+    return _hamming_pairs(
+        new_chunks, idx.live("chunks"), max_hamming, _CROSS, ("id", "id")
     )
 
 
@@ -422,15 +357,6 @@ def _containment_params(shingle_len, threshold, max_tokens) -> dict:
         "threshold": threshold,
         "max_tokens": max_tokens,
     }
-
-
-def _hash_sets(df, id_col, text_col, shingle_len, max_tokens) -> DataFrame:
-    # one tokenize+hash pass: postings, prefixes and the hash-set
-    # payload all read the lazily pinned frame
-    return pin(
-        hashed_shingle_sets(df, id_col, text_col, shingle_len, max_tokens),
-        eager=False,
-    )
 
 
 def build_containment_index(
@@ -512,30 +438,12 @@ def containment_against_index(
         .union(c2.select("new_id", "corpus_id"))
         .dropDuplicates(["new_id", "corpus_id"])
     )
-    sh_a = hs_new.select(F.col("id").alias("new_id"), F.col("hs").alias("sh_a"))
-    sh_b = idx.live("hashsets").select(
-        F.col("id").alias("corpus_id"), F.col("hs").alias("sh_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    return (
-        cand.join(sh_a, "new_id")
-        .join(sh_b, "corpus_id")
-        .withColumn("containment_new", F.try_divide(inter, F.size("sh_a")))
-        .withColumn("containment_corpus", F.try_divide(inter, F.size("sh_b")))
-        # column-wise max per pair BEFORE the threshold gate: a version
-        # that fails the combined gate can still carry the strongest
-        # one-sided evidence, so filtering first would understate the
-        # reported per-direction maximum. The surviving PAIR set is the
-        # same either way (greatest of the maxima >= t iff some version
-        # passed); the two maxima may come from different versions.
-        .groupBy("new_id", "corpus_id")
-        .agg(
-            F.max("containment_new").alias("containment_new"),
-            F.max("containment_corpus").alias("containment_corpus"),
-        )
-        .filter(
-            F.greatest("containment_new", "containment_corpus") >= threshold
-        )
+    return _containment_verify(
+        cand,
+        _CROSS,
+        ("containment_new", "containment_corpus"),
+        (hs_new, idx.live("hashsets")),
+        threshold,
     )
 
 
@@ -683,30 +591,27 @@ def dedup_against_embedding_index(
     )
     dim = _dim(idx, new_df, vec_col)
     new_df = idx.conform(new_df, id_col, vec_col)
-    banded_new = _embedding_bands(new_df, id_col, vec_col, m, bands, seed, dim)
-    cand = (
-        banded_new.select("band", "bucket", F.col("_id").alias("new_id"))
-        .join(
-            idx.live("bands").select(
-                "band", "bucket", F.col("id").alias("corpus_id")
-            ),
-            ["band", "bucket"],
-        )
-        .select("new_id", "corpus_id")
-        .dropDuplicates(["new_id", "corpus_id"])
+    cand = _candidate_pairs(
+        _embedding_bands(new_df, id_col, vec_col, m, bands, seed, dim),
+        idx.live("bands"),
+        ["band", "bucket"],
+        _CROSS,
+        ("_id", "id"),
     )
-    v_new = new_df.select(F.col(id_col).alias("new_id"), F.col(vec_col).alias("_va"))
-    v_corpus = idx.live("vectors").select(
-        F.col("id").alias("corpus_id"), F.col("vec").alias("_vb")
-    )
-    return (
-        cand.join(v_new, "new_id")
-        .join(v_corpus, "corpus_id")
-        .withColumn("cosine_sim", V.cosine("_va", "_vb"))
-        .filter(F.col("cosine_sim") >= threshold)
-        # strongest version wins (multi-version contract)
-        .groupBy("new_id", "corpus_id")
-        .agg(F.max("cosine_sim").alias("cosine_sim"))
+    # per-pair V.cosine, not embedding_near_pairs' per-side norms: a
+    # per-side norm here would run over every stored vector the live
+    # read scans, not over the candidates (the two forms are
+    # bit-identical)
+    return _verify_pairs(
+        cand,
+        _CROSS,
+        {"cosine_sim": V.cosine("_va", "_vb")},
+        F.max,
+        F.col("cosine_sim") >= threshold,
+        sides=(
+            (new_df, id_col, {"_va": vec_col}),
+            (idx.live("vectors"), "id", {"_vb": "vec"}),
+        ),
     )
 
 

@@ -25,6 +25,13 @@ from pyspark.sql import functions as F
 from dbt_foundation_spark.checkpoint import pin
 from dbt_foundation_spark.functions import vectors as V
 from dbt_foundation_spark.local_data import local_frame
+from dbt_foundation_spark.operators.dedup import (
+    _SELF,
+    _candidate_pairs,
+    _verify_pairs,
+    banding_geometry,
+    identified,
+)
 from dbt_foundation_spark.operators.index_core import (
     Index,
     ivf_id_col,
@@ -508,8 +515,6 @@ def embedding_near_pairs(
     job at plan-BUILD time — pass it explicitly in streaming /
     foreachBatch contexts or when the upstream plan is expensive.
     """
-    from dbt_foundation_spark.operators.dedup import banding_geometry
-
     banding_geometry(m, bands, "m")
     r = m // bands
     if dim is None:
@@ -518,35 +523,26 @@ def embedding_near_pairs(
     # NULL-id rows are excluded (no stable identity to pair — the
     # dedup-family degenerate-identity contract); a duplicated id with
     # different vectors keeps one banded row per version and the
-    # verify folds to the strongest cosine below
-    from dbt_foundation_spark.operators.dedup import identified
-
+    # verify folds to the strongest cosine
     df = identified(df, id_col)
     banded = hyperplane_banded(df, id_col, vec_col, planes, bands, r, block_col)
     # lazy (non-eager) checkpoint: materialized by the first action, then
     # shared by both self-join sides — the signature dot products run once
     banded = pin(banded, eager=False)
     keys = ["band", "bucket"] + ([block_col] if block_col else [])
-    left = banded.select(*keys, F.col("_id").alias("id_a"))
-    right = banded.select(*keys, F.col("_id").alias("id_b"))
-    cand = (
-        left.join(right, keys)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    # Per-SIDE squared norms ride the vector rows (guide §1.2: don't
-    # compute per pair what is a per-row quantity): the fused
-    # V.cosine re-derived |a|² and |b|² inside every candidate pair's
-    # verify lambda — 3 accumulator fields per element per PAIR. The
-    # norm is a property of the vector, so compute it once per id
-    # (one cheap pass over the input rows) and the per-pair work drops
-    # to the dot product alone — measured 2.3× faster on the verify
-    # stage at sf0.1 (3.51 → 1.52 s) with bit-identical output: each
-    # sum accumulates in the same array order as V.cosine's fused
-    # struct fields, and V.dot's finite_or_null gate fires on every
-    # input V.cosine's final gate would have caught (any non-finite
-    # element makes the dot accumulation non-finite).
+    cand = _candidate_pairs(banded, None, keys, ids=("_id", "_id"))
+    # Per-SIDE squared norms ride the vector rows (don't compute per
+    # pair what is a per-row quantity): the fused V.cosine re-derives
+    # |a|² and |b|² inside every candidate pair's verify lambda — 3
+    # accumulator fields per element per PAIR. Computed once per id
+    # (one cheap pass over the input rows), the per-pair work is the dot
+    # product alone — measured 2.3× faster on the verify stage at sf0.1
+    # (3.51 → 1.52 s) with bit-identical output: each sum accumulates
+    # in the same array order as V.cosine's fused struct fields, and
+    # V.dot's finite_or_null gate fires on every input V.cosine's final
+    # gate would catch (any non-finite element makes the dot
+    # accumulation non-finite). The index probe keeps V.cosine on
+    # purpose: there the per-side pass would scan every stored vector.
     sq_norm = F.aggregate(
         F.transform(V.to_double_array(vec_col), lambda x: x * x),
         F.lit(0.0),
@@ -557,36 +553,21 @@ def embedding_near_pairs(
         F.col(vec_col).alias("_v"),
         sq_norm.alias("_nsq"),
     )
-    return (
-        cand.join(
-            vecs.select(
-                F.col("_id").alias("id_a"),
-                F.col("_v").alias("_va"),
-                F.col("_nsq").alias("_na"),
-            ),
-            "id_a",
+    cosine = V.finite_or_null(
+        F.try_divide(
+            V.dot("_va", "_vb"), F.sqrt(F.col("_na")) * F.sqrt(F.col("_nb"))
         )
-        .join(
-            vecs.select(
-                F.col("_id").alias("id_b"),
-                F.col("_v").alias("_vb"),
-                F.col("_nsq").alias("_nb"),
-            ),
-            "id_b",
-        )
-        .withColumn(
-            "cosine_sim",
-            V.finite_or_null(
-                F.try_divide(
-                    V.dot("_va", "_vb"),
-                    F.sqrt(F.col("_na")) * F.sqrt(F.col("_nb")),
-                )
-            ),
-        )
-        .filter(F.col("cosine_sim") >= threshold)
-        # strongest version per pair (multi-version contract)
-        .groupBy("id_a", "id_b")
-        .agg(F.max("cosine_sim").alias("cosine_sim"))
+    )
+    return _verify_pairs(
+        cand,
+        _SELF,
+        {"cosine_sim": cosine},
+        F.max,
+        F.col("cosine_sim") >= threshold,
+        sides=(
+            (vecs, "_id", {"_va": "_v", "_na": "_nsq"}),
+            (vecs, "_id", {"_vb": "_v", "_nb": "_nsq"}),
+        ),
     )
 
 
@@ -1263,8 +1244,6 @@ def embedding_bucket_profile(
     exact-duplicate vectors first and check the residual bucket sizes
     before launching the pair join. One banding pass + a top-N
     aggregate, no self-join."""
-    from dbt_foundation_spark.operators.dedup import banding_geometry
-
     banding_geometry(m, bands, "m")
     if dim is None:
         dim = sniff_dim(df, vec_col)

@@ -110,13 +110,13 @@ def test_minhash_index_roundtrip(spark, sf_dir, tmp_path):
 
     build_minhash_index(corpus, "doc_id", "text", path, **kw)
     got = sorted(
-        (r["new_id"], r["corpus_id"])
+        (r["new_id"], r["corpus_id"], r["jaccard"])
         for r in dedup_against_index(
             spark, batch1, "doc_id", "text", path, jaccard_threshold=0.5, **kw
         ).collect()
     )
     want = sorted(
-        (r["new_id"], r["corpus_id"])
+        (r["new_id"], r["corpus_id"], r["jaccard"])
         for r in minhash_lsh_join(
             batch1, corpus, "doc_id", "text", jaccard_threshold=0.5, **kw
         ).collect()
@@ -125,13 +125,13 @@ def test_minhash_index_roundtrip(spark, sf_dir, tmp_path):
 
     append_to_index(batch1, "doc_id", "text", path, **kw)
     got2 = sorted(
-        (r["new_id"], r["corpus_id"])
+        (r["new_id"], r["corpus_id"], r["jaccard"])
         for r in dedup_against_index(
             spark, batch2, "doc_id", "text", path, jaccard_threshold=0.5, **kw
         ).collect()
     )
     want2 = sorted(
-        (r["new_id"], r["corpus_id"])
+        (r["new_id"], r["corpus_id"], r["jaccard"])
         for r in minhash_lsh_join(
             batch2,
             corpus.unionByName(batch1),
@@ -290,6 +290,12 @@ def test_index_manifest_validation(spark, sf_dir, tmp_path):
         dedup_against_simhash_index(
             spark, batch, "doc_id", "text", sh, max_hamming=12
         ).count()
+    # a negative radius is refused like the batch detector refuses it,
+    # not answered with zero pairs
+    with pytest.raises(ValueError, match="max_hamming=-1"):
+        dedup_against_simhash_index(
+            spark, batch, "doc_id", "text", sh, max_hamming=-1
+        ).count()
     # tighter query radius: legal, and exactly the radius-r subset of
     # the build-radius result (batch chunks at the BUILD radius)
     wide = {
@@ -378,12 +384,14 @@ def test_embedding_index_roundtrip(spark, sf_dir, tmp_path):
             a, b = r["id_a"], r["id_b"]
             if (a in batch_ids) != (b in batch_ids):
                 n, c = (a, b) if a in batch_ids else (b, a)
-                out.add((n, c))
+                out.add((n, c, r["cosine_sim"]))
         return sorted(out)
 
+    # cosine_sim compared exactly: the batch detector's per-side-norm
+    # form and the probe's fused V.cosine are bit-identical
     build_embedding_index(corpus, "vec_id", "embedding", path, threshold=thr)
     got = sorted(
-        (r["new_id"], r["corpus_id"])
+        (r["new_id"], r["corpus_id"], r["cosine_sim"])
         for r in dedup_against_embedding_index(
             spark, batch1, "vec_id", "embedding", path, threshold=thr
         ).collect()
@@ -394,7 +402,7 @@ def test_embedding_index_roundtrip(spark, sf_dir, tmp_path):
 
     append_to_embedding_index(batch1, "vec_id", "embedding", path)
     got2 = sorted(
-        (r["new_id"], r["corpus_id"])
+        (r["new_id"], r["corpus_id"], r["cosine_sim"])
         for r in dedup_against_embedding_index(
             spark, batch2, "vec_id", "embedding", path, threshold=thr
         ).collect()
@@ -428,17 +436,57 @@ def test_minhash_lsh_join_equals_cross_side_pairs(spark, sf_dir):
     kw = dict(num_hashes=16, bands=4, shingle_len=3, jaccard_threshold=0.5)
     full = minhash_lsh_pairs(docs, "doc_id", "text", **kw).collect()
     want = sorted(
-        (r["id_a"], r["id_b"])
+        (r["id_a"], r["id_b"], r["jaccard"])
         if r["id_a"] % 10 == 0
-        else (r["id_b"], r["id_a"])
+        else (r["id_b"], r["id_a"], r["jaccard"])
         for r in full
         if (r["id_a"] % 10 == 0) != (r["id_b"] % 10 == 0)
     )
     new_batch = docs.filter(F.col("doc_id") % 10 == 0)
     corpus = docs.filter(F.col("doc_id") % 10 != 0)
     inc = minhash_lsh_join(new_batch, corpus, "doc_id", "text", **kw).collect()
-    got = sorted((r["new_id"], r["corpus_id"]) for r in inc)
+    got = sorted((r["new_id"], r["corpus_id"], r["jaccard"]) for r in inc)
     assert got == want and len(got) > 0
+
+
+@pytest.mark.parametrize(
+    "flavor, shuffles",
+    [("minhash", 2), ("simhash", 2), ("containment", 2), ("embedding", 1)],
+)
+def test_index_probe_plan_shapes_pinned(spark, sf_dir, tmp_path, flavor, shuffles):
+    """Exact shuffle count of each index probe's plan — the probe runs on
+    every ingest op, so a refactor that adds an exchange or a Python row
+    UDF to it fails here. Counts are of the plan as built (before AQE):
+    the index's live reads plus the batch side's pinned signature
+    frames, which are RDD scans."""
+    from dbt_foundation_spark.operators import dedup_index as D
+    from dbt_foundation_spark.plans.inspect import plan_summary
+
+    path = str(tmp_path / flavor)
+    if flavor == "embedding":
+        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+        corpus, batch = (emb.filter(F.col("vec_id") % 10 != 0),
+                         emb.filter(F.col("vec_id") % 10 == 0))
+        D.build_embedding_index(corpus, "vec_id", "embedding", path)
+        probe = D.dedup_against_embedding_index(
+            spark, batch, "vec_id", "embedding", path
+        )
+    else:
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        corpus, batch = (docs.filter(F.col("doc_id") % 10 != 0),
+                         docs.filter(F.col("doc_id") % 10 == 0))
+        build, query = {
+            "minhash": (D.build_minhash_index, D.dedup_against_index),
+            "simhash": (D.build_simhash_index, D.dedup_against_simhash_index),
+            "containment": (
+                D.build_containment_index, D.containment_against_index,
+            ),
+        }[flavor]
+        build(corpus, "doc_id", "text", path)
+        probe = query(spark, batch, "doc_id", "text", path)
+    s = plan_summary(probe)
+    assert s["shuffles"] == shuffles, s
+    assert s["python_row_udfs"] == 0
 
 
 def test_budget_select_equals_naive_greedy(spark):
