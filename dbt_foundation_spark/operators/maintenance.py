@@ -12,6 +12,7 @@ partial table).
 from __future__ import annotations
 
 import math
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -253,11 +254,33 @@ def analyze_tables(
     return out
 
 
+def _listing(spark: SparkSession, path: str) -> tuple[list, list[str]]:
+    """``(healthy, torn)`` from one walk by the read rule: the statuses
+    of the non-empty data files a read scans (summary footers excluded)
+    and the sorted paths of the 0-byte tears (:func:`zero_byte_files`)."""
+    p, fs = _hadoop(spark, path)
+    healthy, torn = [], []
+    for st in _iter_visible_statuses(fs, p) if fs.exists(p) else ():
+        if st.getLen() == 0:
+            torn.append(st.getPath().toString())
+        elif not st.getPath().getName().startswith("_"):
+            healthy.append(st)
+    return healthy, sorted(torn)
+
+
+def _stats(healthy: list) -> dict:
+    n_bytes = sum(st.getLen() for st in healthy)
+    return {"n_files": len(healthy), "total_bytes": n_bytes}
+
+
 def parquet_path_stats(spark: SparkSession, path: str) -> dict:
-    """(n_files, total_bytes) for a path-based parquet dataset — the
-    persisted dedup/ANN indexes live outside the catalog (see
-    :func:`_file_stats`)."""
-    return _file_stats(spark.read.parquet(path))
+    """(n_files, total_bytes) of a path-based parquet dataset (the
+    persisted indexes live outside the catalog) from one file listing,
+    no Spark job: the visible, non-zero-byte data files by the
+    hidden-path rule reads use (``_SUCCESS``, ``_temporary/``, dot-files
+    are not data). Footer-only 0-row files count, unlike in
+    :func:`table_file_stats`, whose aggregate sees only files with rows."""
+    return _stats(_listing(spark, path)[0])
 
 
 def _has_data_files(spark: SparkSession, path: str) -> bool:
@@ -265,22 +288,6 @@ def _has_data_files(spark: SparkSession, path: str) -> bool:
     a pure FileSystem listing, no Spark job. Delegates to the single
     shared probe (tombstones._has_data_file) so the two can't drift."""
     return _has_data_file(spark, path)
-
-
-def _has_healthy_data_file(
-    spark: SparkSession, path: str, torn: set[str]
-) -> bool:
-    """True if ``path`` holds at least one visible data file NOT in the
-    ``torn`` set — the all-torn guard for index_stats' per-dataset
-    stats read (a directory whose only footers are 0-byte tears dies
-    at schema inference)."""
-    p, fs = _hadoop(spark, path)
-    if not fs.exists(p):
-        return False
-    return any(
-        st.getPath().toString() not in torn
-        for st in _iter_visible_statuses(fs, p)
-    )
 
 
 def compact_parquet_path(
@@ -292,7 +299,7 @@ def compact_parquet_path(
     partition_by: tuple[str, ...] = (),
     distinct_rows: bool = False,
     minus_ids: DataFrame | None = None,
-    minus_col: str | None = None,
+    minus_col: str | Callable | None = None,
 ) -> dict:
     """Rewrite a path-based parquet dataset into ceil(total/target)
     files, preserving key clustering when ``cluster_by`` is given (the
@@ -313,6 +320,11 @@ def compact_parquet_path(
     carries the same window for its catalog swap and the same
     restore-on-rerun recovery). Returns before/after
     stats so callers can assert the shrink.
+
+    ``minus_col`` may be a function of the read schema. The stats are
+    listings by :func:`parquet_path_stats`' rule (footer-only 0-row
+    files count, 0-byte tears do not); the ``before`` listing also finds
+    the tears, which the rewrite names in a warning and does not read.
 
     Crash recovery: a run that died between its two renames leaves the
     dataset parked at ``{path}__compact_old`` and nothing at ``path`` —
@@ -340,8 +352,10 @@ def compact_parquet_path(
     # but the fold must be loud (the no-silent-caps rule): the operator
     # has to be able to notice data may have been lost. Non-empty torn
     # files are not detectable from metadata; they fail the read below
-    # with parquet's magic-number error naming the file.
-    torn = zero_byte_files(spark, base)
+    # with parquet's magic-number error naming the file. The same
+    # listing sizes the rewrite: no stats job.
+    healthy, torn = _listing(spark, base)
+    reader, sources = spark.read, [path]
     if torn:
         import logging
 
@@ -354,9 +368,18 @@ def compact_parquet_path(
             len(torn),
             ", ".join(torn),
         )
-    before = parquet_path_stats(spark, path)
+        if not healthy:
+            raise RuntimeError(f"{base}: every data file is torn; no schema left")
+        # schema inference samples the FIRST file in path order, and a
+        # 0-byte footer kills it: read the healthy files only, with
+        # basePath so hive partition columns survive
+        reader = reader.option("basePath", base)
+        sources = [st.getPath().toString() for st in healthy]
+    before = _stats(healthy)
     n_out = max(1, math.ceil(before["total_bytes"] / target_file_bytes))
-    df = spark.read.parquet(path)
+    df = reader.parquet(*sources)
+    if callable(minus_col):
+        minus_col = minus_col(df.schema)
     if distinct_rows:
         # set-semantic datasets (e.g. the IVF lists): fold away
         # byte-identical rows left by a crash-window batch replay
@@ -575,12 +598,8 @@ def compact_index(
         # stream-maintained indexes) are skipped, not errors — but a
         # sub-dataset PARKED at __compact_old by a crashed swap is NOT
         # absent: skipping it here would leave the index permanently
-        # half-missing while this re-run "succeeds". The restore runs
-        # HERE, before anything reads sub_path (the doc-id schema read
-        # below would otherwise hit the still-missing directory on a
-        # tombstone-holding index and the documented heal would loop
-        # forever); compact_parquet_path's own restore-on-entry then
-        # no-ops.
+        # half-missing while this re-run "succeeds". So the restore runs
+        # HERE; compact_parquet_path's own restore-on-entry then no-ops.
         sub_p = jvm.org.apache.hadoop.fs.Path(sub_path)
         old_p = jvm.org.apache.hadoop.fs.Path(f"{sub_path}__compact_old")
         if not fs.exists(sub_p):
@@ -591,12 +610,9 @@ def compact_index(
                     f"could not restore parked {sub_path}__compact_old "
                     f"to {sub_path}"
                 )
-        # the id column only matters when there is a log to fold — and
-        # deriving it for the IVF lists costs a schema-inference read,
-        # so skip it entirely on the common no-takedown compaction
+        # the id column only matters when there is a log to fold; a
+        # schema-dependent one (IVF lists) resolves on the rewrite's read
         doc_col = sub.doc_id if tomb is not None else None
-        if callable(doc_col):
-            doc_col = doc_col(spark.read.parquet(sub_path).schema)
         return compact_parquet_path(
             spark,
             sub_path,
@@ -644,7 +660,8 @@ def index_stats(spark: SparkSession, index_path: str) -> dict:
     manifest, per-sub-dataset file stats (the compaction signal: file
     count grows by one set per ingest), and the live tombstone count
     (the fold-pending signal). Metadata-only: file listings plus the
-    one-row manifest and the takedown-sized log — no corpus scan.
+    one-row manifest and the takedown-sized log — no corpus scan;
+    dataset stats follow :func:`parquet_path_stats`' listing rule.
 
     Returns ``{"flavor", "params", "datasets": {sub: {"n_files",
     "total_bytes"}}, "missing_datasets": [...], "tombstones": n,
@@ -682,46 +699,25 @@ def index_stats(spark: SparkSession, index_path: str) -> dict:
         )
     subs = [sub.name for sub in idx.subs]
     root, fs = _hadoop(spark, index_path)
-    # zero-byte data files are tears a read treats as silently empty —
-    # the query paths REFUSE on them (guarded_sub_read / read_tombstones
-    # name the file and the heal); the describe tool reports them
-    # without raising. Computed BEFORE the stats reads: a sub-dataset
-    # whose ONLY files are torn would make parquet_path_stats die at
-    # schema inference — such a sub is reported torn + missing, never
-    # read. Torn files with leftover bytes are not metadata-detectable
-    # and surface as loud parquet magic-number errors at read time.
-    torn_entries: list[str] = []
-    sub_torn: dict[str, list[str]] = {}
-    for sub in subs:
-        sub_torn[sub] = zero_byte_files(spark, f"{index_path}/{sub}")
-        torn_entries.extend(
-            f"{sub}/{f.rsplit('/', 1)[-1]} (0-byte torn file)"
-            for f in sub_torn[sub]
-        )
-    tomb_torn = zero_byte_files(spark, f"{index_path}/tombstones")
-    torn_entries.extend(
-        f"tombstones/{f.rsplit('/', 1)[-1]} (0-byte torn file)"
-        for f in tomb_torn
-    )
-
+    # one listing per sub-dataset gives its stats and its zero-byte
+    # tears, which a read treats as silently empty: the query paths
+    # REFUSE on them (guarded_sub_read / read_tombstones); the describe
+    # tool reports them. A sub with no healthy file (absent, an empty
+    # husk, torn throughout) is named in missing_datasets.
     datasets: dict[str, dict] = {}
+    torn: dict[str, list[str]] = {}
     for sub in subs:
-        # data-FILE probe, not a read + caught AnalysisException (Spark
-        # logs the JVM stack even for caught exceptions and buries the
-        # bench/driver tail) and not bare fs.exists (an
-        # existing-but-empty dir from a crashed write would make the
-        # read raise — and index_stats' whole job is describing damaged
-        # indexes)
-        if not _has_data_files(spark, f"{index_path}/{sub}"):
-            continue  # optional sub-dataset not present (or empty husk)
-        if sub_torn[sub] and not _has_healthy_data_file(
-            spark, f"{index_path}/{sub}", set(sub_torn[sub])
-        ):
-            # every visible file is a 0-byte tear: a stats read would
-            # die at schema inference — report via torn_entries +
-            # missing_datasets instead
-            continue
-        datasets[sub] = parquet_path_stats(spark, f"{index_path}/{sub}")
+        healthy, torn[sub] = _listing(spark, f"{index_path}/{sub}")
+        if healthy:
+            datasets[sub] = _stats(healthy)
+    tomb_torn = torn["tombstones"] = zero_byte_files(
+        spark, f"{index_path}/tombstones"
+    )
+    torn_entries = [
+        f"{sub}/{f.rsplit('/', 1)[-1]} (0-byte torn file)"
+        for sub, files in torn.items()
+        for f in files
+    ]
     if tomb_torn:
         # the log is damaged: its id count is unknowable (the torn
         # file's retractions may be lost) — None, never a silent 0

@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbt_foundation_spark.checkpoint import pin
+from dbt_foundation_spark.local_data import local_frame
 
 _UNSET = object()  # sentinel: subtract_tombstones should read the log
 
@@ -340,9 +341,13 @@ def subtract_tombstones(
     )
 
 
-def _as_id_df(spark: SparkSession, ids: DataFrame | Iterable) -> DataFrame | None:
+def _as_id_df(
+    spark: SparkSession, ids: DataFrame | Iterable
+) -> tuple[DataFrame | None, int | None]:
     """Normalize a DataFrame-or-iterable of ids to a single distinct
-    ``id`` column, or None for an empty iterable. A caller DataFrame is
+    ``id`` column (None for an empty iterable) and its row count when
+    the driver knows it: Python ints or strings, whose equality is
+    SQL's, are counted as values (None otherwise). A caller DataFrame is
     pinned eagerly (``checkpoint.pin``): the count and the write that
     follow must see the SAME rows even when the plan is
     nondeterministic (``suspect_docs.sample(...)``) — the hazard
@@ -355,22 +360,19 @@ def _as_id_df(spark: SparkSession, ids: DataFrame | Iterable) -> DataFrame | Non
         # NULL ids can never match a row (NULL equality) — logging them
         # would inflate the reported count and bloat the log for nothing
         norm = ids.toDF("id").where(F.col("id").isNotNull()).distinct()
-        return pin(norm, eager=True)
+        return pin(norm, eager=True), None
     vals = [v for v in ids if v is not None]
     if not vals:
-        return None
+        return None, 0
     # Arrow-route the two id types takedown batches actually carry
     # (local_data.py: the classic list path costs ~0.5 s of slice
     # fetches per action on local[32]); anything exotic keeps the
     # classic inference path.
-    from dbt_foundation_spark.local_data import local_frame
-
     rows = [(v,) for v in vals]
-    if all(isinstance(v, int) and not isinstance(v, bool) for v in vals):
-        return local_frame(spark, rows, "id bigint").distinct()
-    if all(isinstance(v, str) for v in vals):
-        return local_frame(spark, rows, "id string").distinct()
-    return spark.createDataFrame(rows, ["id"]).distinct()
+    for kind, ddl in ((int, "id bigint"), (str, "id string")):
+        if all(isinstance(v, kind) and not isinstance(v, bool) for v in vals):
+            return local_frame(spark, rows, ddl).distinct(), len(set(vals))
+    return spark.createDataFrame(rows, ["id"]).distinct(), None
 
 
 def _type_category(t: str) -> str:
@@ -469,10 +471,9 @@ def retract_from_index(
             f"{base} does not exist — refusing to start a tombstone log "
             "at a path that holds no index (typo guard)"
         )
-    tomb = _as_id_df(spark, ids)
-    if tomb is None:
-        return 0
-    n = tomb.count()
+    tomb, n = _as_id_df(spark, ids)
+    if n is None:
+        n = tomb.count()
     if n == 0:
         return 0
     tomb = _conform_id_type(spark, base, tomb)
@@ -883,7 +884,7 @@ def clear_tombstones(
     # normalize/validate ids BEFORE any marker goes down: a typo'd or
     # empty revive must fail/return without leaving a false
     # crashed-revive guard blocking compactions
-    revive = _as_id_df(spark, ids) if ids is not None else None
+    revive = _as_id_df(spark, ids)[0] if ids is not None else None
     if ids is not None and revive is None:
         return 0
     compacting = jvm.org.apache.hadoop.fs.Path(
@@ -939,39 +940,35 @@ def clear_tombstones(
 
 
 def _clear_impl(spark, index_path, ids, revive, tp, fs, jvm) -> int:
-    if ids is None:
-        files = _log_files(spark, index_path)
-        if not files:
-            return 0
-        n = spark.read.parquet(*files).select("id").distinct().count()
-        for f in files:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f), False)
-        return n
     files = _log_files(spark, index_path)
     if not files:
         return 0
-    # pin the listed files' content: the count, the collect and the
-    # survivor write below must see the same rows while those files
-    # are later deleted out from under the plan
-    snap = pin(
-        spark.read.parquet(*files).select("id").distinct(), eager=True
-    )
-    keep = snap.join(F.broadcast(revive), "id", "left_anti")
-    kept_rows = keep.collect()  # bounded: takedown-sized log
-    removed = snap.count() - len(kept_rows)
-    if removed == 0:
-        return 0  # nothing leaves the log — no rewrite, no deletes
+    log = spark.read.parquet(*files).select("id")
+    kept_rows: list = []
+    if ids is None:
+        removed = log.distinct().count()
+    else:
+        # ONE collect of the listed files' distinct ids, each marked by
+        # a broadcast left join against the revive set (id equality
+        # stays SQL's): survivors and the removed count come from the
+        # same rows, while those files are later deleted under the plan
+        rows = (
+            log.join(F.broadcast(revive.withColumn("__hit", F.lit(True))), "id", "left")
+            .groupBy("id")
+            .agg(F.max("__hit").alias("__hit"))
+            .collect()  # bounded: takedown-sized log
+        )
+        kept_rows = [(r["id"],) for r in rows if not r["__hit"]]
+        removed = len(rows) - len(kept_rows)
+        if removed == 0:
+            return 0  # nothing leaves the log — no rewrite, no deletes
     if kept_rows:
         # survivors enter the live log BEFORE any old file is deleted,
         # so no read between the two steps can miss a surviving id
-        import uuid
-
         tmp = f"{tp}__revive_tmp"
         tmp_p = jvm.org.apache.hadoop.fs.Path(tmp)
         fs.delete(tmp_p, True)  # stale residue from a crashed attempt
-        from dbt_foundation_spark.local_data import local_frame
-
-        local_frame(spark, kept_rows, snap.schema).coalesce(1).write.mode(
+        local_frame(spark, kept_rows, log.schema).coalesce(1).write.mode(
             "overwrite"
         ).parquet(tmp)
         moved = False

@@ -1899,3 +1899,170 @@ def test_concurrent_retractions_never_lose_a_batch(spark, tmp_path):
     # the compaction fold still consumes the uniquely-named files
     compact_index(spark, idx)
     assert read_tombstones(spark, idx) is None
+
+
+def _disk_stats(root):
+    """(n_files, total_bytes) of the visible, non-zero-byte data files
+    under ``root`` by an os.walk: any path component starting with
+    ``.``, or with ``_`` and no ``=`` (``_SUCCESS``, ``_temporary/``,
+    ``.crc`` checksums), is not data; hive dirs like ``_ivf_list=0``
+    are."""
+    import os
+
+    def hidden(seg):
+        return seg.startswith(".") or (seg.startswith("_") and "=" not in seg)
+
+    sizes = []
+    for d, dirs, files in os.walk(root):
+        dirs[:] = [x for x in dirs if not hidden(x)]
+        sizes += [
+            os.path.getsize(os.path.join(d, f)) for f in files if not hidden(f)
+        ]
+    sizes = [n for n in sizes if n > 0]
+    return {"n_files": len(sizes), "total_bytes": sum(sizes)}
+
+
+def test_first_sorting_tear_does_not_break_stats_or_heal(spark, tmp_path, caplog):
+    """Spark's parquet schema inference samples the FIRST file in path
+    order, so a zero-byte tear sorting before every healthy file must
+    not kill index_stats (the describe tool) or compact_index (the
+    documented heal): stats report the tear, and the heal reads only
+    the healthy files — on the flat minhash layout and on the
+    hive-partitioned IVF lists, whose partition column and tombstone
+    fold must both survive — warns naming the tear, and clears its
+    __compacting marker."""
+    import logging
+    import os
+
+    from dbt_foundation_spark.operators.dedup_index import (
+        build_minhash_index,
+        dedup_against_index,
+    )
+    from dbt_foundation_spark.operators.maintenance import compact_index, index_stats
+    from dbt_foundation_spark.operators.similarity import build_ivf_index
+    from dbt_foundation_spark.operators.tombstones import compaction_marker_path
+
+    corpus = spark.createDataFrame(
+        [(i, f"alpha beta gamma doc {i} delta epsilon") for i in range(8)],
+        ["doc_id", "text"],
+    )
+    mh = str(tmp_path / "mh")
+    build_minhash_index(corpus, "doc_id", "text", mh, num_hashes=16, bands=4)
+    batch = spark.createDataFrame(
+        [(100, "alpha beta gamma doc 3 delta epsilon")], ["doc_id", "text"]
+    )
+
+    def hits():
+        return _pairs(
+            dedup_against_index(
+                spark, batch, "doc_id", "text", mh,
+                num_hashes=16, bands=4, jaccard_threshold=0.9,
+            ).select("new_id", "corpus_id")
+        )
+
+    assert hits() == [(100, 3)]
+    ivf = str(tmp_path / "ivf")
+    build_ivf_index(_ivf_corpus(spark), "doc_id", "embedding", ivf, n_lists=2)
+    retract_from_index(spark, ivf, [1])
+    lists = tmp_path / "ivf" / "lists"
+    first_list = sorted(p.name for p in lists.iterdir() if p.is_dir())[0]
+
+    tears = {
+        mh: tmp_path / "mh" / "bands" / "part-0-torn.snappy.parquet",
+        ivf: lists / first_list / "part-0-torn.snappy.parquet",
+    }
+    for path, tear in tears.items():
+        tear.touch()
+        s = index_stats(spark, path)  # must not raise
+        assert any(
+            "part-0-torn" in e and "0-byte" in e for e in s["crash_leftovers"]
+        )
+        sub = tear.relative_to(path).parts[0]
+        assert s["datasets"][sub] == _disk_stats(f"{path}/{sub}")
+        with caplog.at_level(logging.WARNING, logger="dbt_foundation_spark"):
+            compact_index(spark, path)
+        assert any(
+            "zero-byte torn" in r.getMessage() and "part-0-torn" in r.getMessage()
+            for r in caplog.records
+        )
+        assert not tear.exists()
+        assert not _exists(spark, compaction_marker_path(path))
+        assert index_stats(spark, path)["crash_leftovers"] == []
+
+    assert hits() == [(100, 3)]
+    stored = spark.read.parquet(f"{ivf}/lists")
+    assert "_ivf_list" in stored.columns
+    assert sorted(r["doc_id"] for r in stored.collect()) == list(range(2, 13))
+    assert read_tombstones(spark, ivf) is None
+    assert os.path.isdir(lists / first_list)
+
+
+def test_path_stats_equal_files_on_disk(spark, tmp_path):
+    """parquet_path_stats and index_stats count exactly the visible,
+    non-zero-byte data files an os.walk finds, with their summed
+    lengths — a ``_SUCCESS`` marker, ``_temporary/`` residue and a
+    zero-byte tear are not data — for a flat minhash sub-dataset and
+    the hive-partitioned IVF lists."""
+    from dbt_foundation_spark.operators.dedup_index import build_minhash_index
+    from dbt_foundation_spark.operators.maintenance import (
+        index_stats,
+        parquet_path_stats,
+    )
+    from dbt_foundation_spark.operators.similarity import build_ivf_index
+
+    corpus = spark.createDataFrame(
+        [(i, f"document number {i} with words {i % 3}") for i in range(20)],
+        ["doc_id", "text"],
+    )
+    mh = tmp_path / "mh"
+    build_minhash_index(corpus, "doc_id", "text", str(mh), num_hashes=16, bands=4)
+    ivf = tmp_path / "ivf"
+    build_ivf_index(_ivf_corpus(spark), "doc_id", "embedding", str(ivf), n_lists=2)
+
+    for root, sub in ((mh, "bands"), (ivf, "lists")):
+        d = root / sub
+        leaf = next(p for p in sorted(d.rglob("part-*")) if p.is_file()).parent
+        (d / "_SUCCESS").touch()
+        scratch = d / "_temporary" / "0"
+        scratch.mkdir(parents=True)
+        (scratch / "part-00000-inflight.snappy.parquet").write_bytes(b"PAR1 x")
+        (leaf / "part-99999-torn.snappy.parquet").touch()
+        want = _disk_stats(d)
+        assert want["n_files"] >= 1
+        assert parquet_path_stats(spark, str(d)) == want
+        assert index_stats(spark, str(root))["datasets"][sub] == want
+
+
+def test_compact_index_job_count_pinned(spark, tmp_path):
+    """Pins how many Spark jobs one compact_index of a small minhash
+    index with a pending retraction runs: stats and sizing come from
+    file listings and the tombstone clear is one collect, so only the
+    rewrites and the log fold run jobs. Job ids are sequential per
+    SparkContext, and the sub-dataset folds run on pool threads with
+    no job group, so the count is the id gap between two marker jobs."""
+    from dbt_foundation_spark.operators.dedup_index import build_minhash_index
+    from dbt_foundation_spark.operators.maintenance import compact_index
+
+    sc = spark.sparkContext
+    assert not spark.streams.active  # a live stream would run jobs between marks
+
+    def marker_job() -> int:
+        sc.setJobGroup("compact_job_count_marker", "marker")
+        try:
+            sc.parallelize([1], 1).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return max(sc.statusTracker().getJobIdsForGroup("compact_job_count_marker"))
+
+    corpus = spark.createDataFrame(
+        [(i, f"document number {i} with shared words {i % 7}") for i in range(40)],
+        ["doc_id", "text"],
+    )
+    path = str(tmp_path / "mh")
+    build_minhash_index(corpus, "doc_id", "text", path, num_hashes=16, bands=4)
+    retract_from_index(spark, path, [1, 2, 3])
+    before = marker_job()
+    compact_index(spark, path)
+    ran = marker_job() - before - 1
+    assert ran == 21, ran
+    assert read_tombstones(spark, path) is None
