@@ -609,6 +609,16 @@ def containment_pairs(
     hs = _hash_sets(df, id_col, text_col, shingle_len, max_tokens)
     post, pref = containment_postings(hs, threshold)
     index = post if max_df is None else post.filter(F.col("df") <= max_df)
+    return _containment_self_pairs(hs, pref, index, threshold)
+
+
+def _containment_self_pairs(
+    hs: DataFrame, pref: DataFrame, index: DataFrame, threshold: float
+) -> DataFrame:
+    """Within-frame containment pairs (id_a < id_b) from one frame's
+    hash sets, prefix postings and (id, n, s) postings: each prefix
+    joined against the postings of a document at least as large, then
+    verified in hash space (:func:`containment_pairs`)."""
     cand = (
         pref.select(F.col("id").alias("_pid"), F.col("n").alias("_pn"), "s")
         .join(
@@ -1124,16 +1134,17 @@ def _hamming_pairs(
     chunks: DataFrame,
     corpus_chunks: DataFrame | None,
     max_hamming: int,
-    pair: tuple[str, str] = _SELF,
     ids: tuple[str, str] = ("_id", "_id"),
 ) -> DataFrame:
     """Simhash chunk candidates (:func:`signature_chunks` rows) verified
     by hamming distance ≤ ``max_hamming``: within one frame
-    (``corpus_chunks=None``) or between a batch and a corpus. The
+    (``corpus_chunks=None``; id_a < id_b) or between a batch and a
+    corpus (new_id, corpus_id). The
     signature rides the chunk rows, so the hamming filter — a codegen'd
     bit_count(xor) — runs BEFORE the pair fold, with nothing to
     re-attach: the fold's shuffle carries only true pairs, not every
     multi-chunk collision."""
+    pair = _SELF if corpus_chunks is None else _CROSS
     return _verify_pairs(
         _candidate_pairs(
             chunks, corpus_chunks, ["chunk", "ck"], pair, ids, ride="simhash"

@@ -20,8 +20,14 @@ cross-side pairs — pytest pins that equivalence per flavor. Each
 the index one incremental write per ingest instead of a corpus-wide
 rebuild. The manifest, batch conform, append marker, write order and
 tombstone-subtracted reads every flavor shares live in
-operators/index_core.py; a flavor here is its parameter dict plus its
-signature and candidate/verify code.
+operators/index_core.py. A flavor here is three pieces, listed in
+:data:`DETECTORS`: its parameter dict (``_*_params``), ``sign`` (a
+conformed frame → its rows in the index layout, one frame per
+sub-dataset) and ``pairs`` (the pair kernel over signed frames: within
+one frame, or against the index's live rows). Build, append and probe
+all sign through it, and so does the streaming ingest
+(``streaming.run_dedup_ingest``), which signs each micro-batch once for
+its probe, its within-batch pairs and its append.
 
 Minhash layout:
 
@@ -69,6 +75,9 @@ re-appends only.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from dataclasses import dataclass, field
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -76,7 +85,9 @@ from dbt_foundation_spark.functions import vectors as V
 from dbt_foundation_spark.operators.dedup import (
     SIGNATURE_MAX_TOKENS,
     _CROSS,
+    _SELF,
     _candidate_pairs,
+    _containment_self_pairs,
     _containment_verify,
     _hamming_pairs,
     _hash_sets,
@@ -91,7 +102,7 @@ from dbt_foundation_spark.operators.dedup import (
     similarity_threshold,
     simhash,
 )
-from dbt_foundation_spark.operators.index_core import open_index, write_index
+from dbt_foundation_spark.operators.index_core import Index, open_index, write_index
 from dbt_foundation_spark.operators.similarity import (
     hyperplane_banded,
     random_hyperplanes,
@@ -115,6 +126,24 @@ def _minhash_params(num_hashes, bands, shingle_len, portable, max_tokens) -> dic
         "portable": portable,
         "max_tokens": max_tokens,
     }
+
+
+def _minhash_frames(df, id_col, text_col, p) -> dict[str, DataFrame]:
+    banded, shingles = _minhash_sign(
+        df, id_col, text_col, p["num_hashes"], p["bands"], p["shingle_len"],
+        p["portable"], p["max_tokens"],
+    )
+    return {"shingles": shingles, "bands": banded}
+
+
+def _minhash_pairs(signed, jaccard_threshold, idx: Index | None = None):
+    similarity_threshold(jaccard_threshold, "jaccard_threshold")
+    return _jaccard_pairs(
+        signed["bands"],
+        signed["shingles"],
+        jaccard_threshold,
+        corpus=None if idx is None else (idx.live("bands"), idx.live("shingles")),
+    )
 
 
 def build_minhash_index(
@@ -142,19 +171,10 @@ def build_minhash_index(
     # fewer splits than cores would serialize the shingling/signature
     # stage on those tasks; identity on a real many-file corpus
     df = fan_out(df)
-    banded, shingles = _minhash_sign(
-        df, id_col, text_col, num_hashes, bands, shingle_len, portable, max_tokens
-    )
-    write_index(
-        df,
-        id_col,
-        path,
-        _minhash_params(num_hashes, bands, shingle_len, portable, max_tokens),
-        {
-            "bands": banded.repartition(index_partitions, "band", "bucket"),
-            "shingles": shingles,
-        },
-    )
+    p = _minhash_params(num_hashes, bands, shingle_len, portable, max_tokens)
+    frames = _minhash_frames(df, id_col, text_col, p)
+    frames["bands"] = frames["bands"].repartition(index_partitions, "band", "bucket")
+    write_index(df, id_col, path, p, frames)
 
 
 def dedup_against_index(
@@ -183,16 +203,8 @@ def dedup_against_index(
         path,
         _minhash_params(num_hashes, bands, shingle_len, portable, max_tokens),
     )
-    similarity_threshold(jaccard_threshold, "jaccard_threshold")
-    new_df = idx.conform(new_df, id_col)
-    return _jaccard_pairs(
-        *_minhash_sign(
-            new_df, id_col, text_col, num_hashes, bands, shingle_len, portable,
-            max_tokens,
-        ),
-        jaccard_threshold,
-        corpus=(idx.live("bands"), idx.live("shingles")),
-    )
+    signed = _minhash_frames(idx.conform(new_df, id_col), id_col, text_col, idx.params)
+    return _minhash_pairs(signed, jaccard_threshold, idx)
 
 
 def append_to_index(
@@ -218,11 +230,9 @@ def append_to_index(
         path,
         _minhash_params(num_hashes, bands, shingle_len, portable, max_tokens),
     )
-    df = idx.conform(df, id_col)
-    banded, shingles = _minhash_sign(
-        df, id_col, text_col, num_hashes, bands, shingle_len, portable, max_tokens
+    idx.append(
+        _minhash_frames(idx.conform(df, id_col), id_col, text_col, idx.params), owner
     )
-    idx.append({"shingles": shingles, "bands": banded}, owner)
 
 
 # ---------- simhash chunk index ----------
@@ -237,18 +247,22 @@ def _simhash_params(max_hamming, portable, max_tokens) -> dict:
     }
 
 
-def _simhash_chunks(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_hamming: int,
-    portable: bool,
-    max_tokens: int | None = SIGNATURE_MAX_TOKENS,
-) -> DataFrame:
-    sh = simhash(df, id_col, text_col, portable=portable, max_tokens=max_tokens)
-    return signature_chunks(sh, max_hamming).select(
-        "chunk", "ck", F.col("_id").alias("id"), "simhash"
+def _simhash_frames(df, id_col, text_col, p) -> dict[str, DataFrame]:
+    """Chunked at ``p["max_hamming"]``: the BUILD radius wherever an
+    index exists, so the equi-join lines up with the stored layout."""
+    sh = simhash(
+        df, id_col, text_col, portable=p["portable"], max_tokens=p["max_tokens"]
     )
+    return {
+        "chunks": signature_chunks(sh, p["max_hamming"]).select(
+            "chunk", "ck", F.col("_id").alias("id"), "simhash"
+        )
+    }
+
+
+def _simhash_pairs(signed, max_hamming, idx: Index | None = None):
+    corpus = None if idx is None else idx.live("chunks")
+    return _hamming_pairs(signed["chunks"], corpus, max_hamming, ("id", "id"))
 
 
 def build_simhash_index(
@@ -267,17 +281,10 @@ def build_simhash_index(
     ``max_hamming`` fixes the chunking — queries may use the same or a
     TIGHTER radius (the manifest enforces caller ≤ build)."""
     assert_literal_path(path, "index path")
-    write_index(
-        df,
-        id_col,
-        path,
-        _simhash_params(max_hamming, portable, max_tokens),
-        {
-            "chunks": _simhash_chunks(
-                df, id_col, text_col, max_hamming, portable, max_tokens
-            ).repartition(index_partitions, "chunk", "ck")
-        },
-    )
+    p = _simhash_params(max_hamming, portable, max_tokens)
+    frames = _simhash_frames(df, id_col, text_col, p)
+    frames["chunks"] = frames["chunks"].repartition(index_partitions, "chunk", "ck")
+    write_index(df, id_col, path, p, frames)
 
 
 def dedup_against_simhash_index(
@@ -308,13 +315,8 @@ def dedup_against_simhash_index(
         _simhash_params(max_hamming, portable, max_tokens),
         ranges={"max_hamming": "lte"},
     )
-    new_df = idx.conform(new_df, id_col)
-    new_chunks = _simhash_chunks(
-        new_df, id_col, text_col, int(idx.params["max_hamming"]), portable, max_tokens
-    )
-    return _hamming_pairs(
-        new_chunks, idx.live("chunks"), max_hamming, _CROSS, ("id", "id")
-    )
+    signed = _simhash_frames(idx.conform(new_df, id_col), id_col, text_col, idx.params)
+    return _simhash_pairs(signed, max_hamming, idx)
 
 
 def append_to_simhash_index(
@@ -336,14 +338,8 @@ def append_to_simhash_index(
     idx = open_index(
         df.sparkSession, path, _simhash_params(max_hamming, portable, max_tokens)
     )
-    df = idx.conform(df, id_col)
     idx.append(
-        {
-            "chunks": _simhash_chunks(
-                df, id_col, text_col, max_hamming, portable, max_tokens
-            )
-        },
-        owner,
+        _simhash_frames(idx.conform(df, id_col), id_col, text_col, idx.params), owner
     )
 
 
@@ -357,6 +353,42 @@ def _containment_params(shingle_len, threshold, max_tokens) -> dict:
         "threshold": threshold,
         "max_tokens": max_tokens,
     }
+
+
+def _containment_frames(df, id_col, text_col, p) -> dict[str, DataFrame]:
+    """Hash sets, full postings and prefix postings at ``p["threshold"]``
+    (prefixes ordered by this frame's own df — any ordering preserves
+    the pigeonhole bound)."""
+    threshold = similarity_threshold(p["threshold"], "threshold")
+    hs = _hash_sets(df, id_col, text_col, p["shingle_len"], p["max_tokens"])
+    post, pref = containment_postings(hs, threshold)
+    return {"hashsets": hs, "postings": post.select("id", "n", "s"), "prefixes": pref}
+
+
+def _containment_pairs(signed, threshold, idx: Index | None = None):
+    """Within one signed frame, or cross-side against the index with
+    candidates from both directions (:func:`containment_against_index`)."""
+    hs, post, pref = signed["hashsets"], signed["postings"], signed["prefixes"]
+    if idx is None:
+        return _containment_self_pairs(hs, pref, post, threshold)
+    c1 = pref.select(F.col("id").alias("new_id"), "s").join(
+        idx.live("postings").select(F.col("id").alias("corpus_id"), "s"), "s"
+    )
+    c2 = post.select(F.col("id").alias("new_id"), "s").join(
+        idx.live("prefixes").select(F.col("id").alias("corpus_id"), "s"), "s"
+    )
+    cand = (
+        c1.select("new_id", "corpus_id")
+        .union(c2.select("new_id", "corpus_id"))
+        .dropDuplicates(["new_id", "corpus_id"])
+    )
+    return _containment_verify(
+        cand,
+        _CROSS,
+        ("containment_new", "containment_corpus"),
+        (hs, idx.live("hashsets")),
+        threshold,
+    )
 
 
 def build_containment_index(
@@ -375,21 +407,10 @@ def build_containment_index(
     same or a higher threshold — a longer prefix than required only adds
     candidates, never loses one), and the hash-set verify payload."""
     assert_literal_path(path, "index path")
-    hs = _hash_sets(df, id_col, text_col, shingle_len, max_tokens)
-    post, pref = containment_postings(hs, threshold)
-    write_index(
-        df,
-        id_col,
-        path,
-        _containment_params(shingle_len, threshold, max_tokens),
-        {
-            "postings": post.select("id", "n", "s").repartition(
-                index_partitions, "s"
-            ),
-            "prefixes": pref,
-            "hashsets": hs,
-        },
-    )
+    p = _containment_params(shingle_len, threshold, max_tokens)
+    frames = _containment_frames(df, id_col, text_col, p)
+    frames["postings"] = frames["postings"].repartition(index_partitions, "s")
+    write_index(df, id_col, path, p, frames)
 
 
 def containment_against_index(
@@ -423,28 +444,13 @@ def containment_against_index(
         _containment_params(shingle_len, threshold, max_tokens),
         ranges={"threshold": "gte"},
     )
-    similarity_threshold(threshold, "threshold")
-    new_df = idx.conform(new_df, id_col)
-    hs_new = _hash_sets(new_df, id_col, text_col, shingle_len, max_tokens)
-    post_new, pref_new = containment_postings(hs_new, threshold)
-    c1 = pref_new.select(F.col("id").alias("new_id"), "s").join(
-        idx.live("postings").select(F.col("id").alias("corpus_id"), "s"), "s"
+    # the batch's own prefixes at the CALLER's threshold (idx.params
+    # holds the build value)
+    signed = _containment_frames(
+        idx.conform(new_df, id_col), id_col, text_col,
+        {**idx.params, "threshold": threshold},
     )
-    c2 = post_new.select(F.col("id").alias("new_id"), "s").join(
-        idx.live("prefixes").select(F.col("id").alias("corpus_id"), "s"), "s"
-    )
-    cand = (
-        c1.select("new_id", "corpus_id")
-        .union(c2.select("new_id", "corpus_id"))
-        .dropDuplicates(["new_id", "corpus_id"])
-    )
-    return _containment_verify(
-        cand,
-        _CROSS,
-        ("containment_new", "containment_corpus"),
-        (hs_new, idx.live("hashsets")),
-        threshold,
-    )
+    return _containment_pairs(signed, threshold, idx)
 
 
 def append_to_containment_index(
@@ -466,11 +472,8 @@ def append_to_containment_index(
     idx = open_index(
         df.sparkSession, path, _containment_params(shingle_len, threshold, max_tokens)
     )
-    df = idx.conform(df, id_col)
-    hs = _hash_sets(df, id_col, text_col, shingle_len, max_tokens)
-    post, pref = containment_postings(hs, threshold)
     idx.append(
-        {"hashsets": hs, "postings": post.select("id", "n", "s"), "prefixes": pref},
+        _containment_frames(idx.conform(df, id_col), id_col, text_col, idx.params),
         owner,
     )
 
@@ -485,23 +488,51 @@ def _embedding_params(m, bands, seed, dim, **extra) -> dict:
     return params
 
 
-def _embedding_bands(df, id_col, vec_col, m, bands, seed, dim) -> DataFrame:
-    return hyperplane_banded(
+def _embedding_frames(df, id_col, vec_col, p) -> dict[str, DataFrame]:
+    """Vectors and hyperplane-band rows at the recorded (or
+    caller-validated) ``p["dim"]``; the dim is sniffed from the frame
+    only for pre-manifest indexes — sniffing risks a silent plane
+    mismatch if the batch's vectors drifted, which the recorded dim
+    prevents."""
+    dim = p.get("dim")
+    dim = sniff_dim(df, vec_col) if dim is None else int(dim)
+    m, bands = p["m"], p["bands"]
+    banded = hyperplane_banded(
         df,
         id_col,
         vec_col,
-        random_hyperplanes(dim, m, seed),
+        random_hyperplanes(dim, m, p["seed"]),
         bands,
         banding_geometry(m, bands, "m"),
     )
+    return {
+        "vectors": df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
+        "bands": banded.withColumnRenamed("_id", "id"),
+    }
 
 
-def _dim(idx, df: DataFrame, vec_col: str) -> int:
-    """The recorded (or caller-validated) dim; sniffed from the batch only
-    for pre-manifest indexes — sniffing risks a silent plane mismatch if
-    the batch's vectors drifted, which the recorded dim prevents."""
-    dim = idx.params.get("dim")
-    return sniff_dim(df, vec_col) if dim is None else int(dim)
+def _embedding_pairs(signed, threshold, idx: Index | None = None):
+    """Per-pair V.cosine, not embedding_near_pairs' per-side norms: a
+    per-side norm against the index would run over every stored vector
+    the live read scans, not over the candidates (the two forms are
+    bit-identical)."""
+    pair = _SELF if idx is None else _CROSS
+    bands, vecs = (
+        (None, signed["vectors"])
+        if idx is None
+        else (idx.live("bands"), idx.live("vectors"))
+    )
+    return _verify_pairs(
+        _candidate_pairs(signed["bands"], bands, ["band", "bucket"], pair),
+        pair,
+        {"cosine_sim": V.cosine("_va", "_vb")},
+        F.max,
+        F.col("cosine_sim") >= threshold,
+        sides=(
+            (signed["vectors"], "id", {"_va": "vec"}),
+            (vecs, "id", {"_vb": "vec"}),
+        ),
+    )
 
 
 def build_embedding_index(
@@ -540,27 +571,17 @@ def build_embedding_index(
     df = identified(df, id_col)
     if dim is None:
         dim = sniff_dim(df, vec_col)
-    write_index(
-        df,
-        id_col,
-        path,
-        _embedding_params(
-            m,
-            bands,
-            seed,
-            dim,
-            threshold=threshold,
-            vec_type=df.schema[vec_col].dataType.simpleString(),
-        ),
-        {
-            "bands": _embedding_bands(df, id_col, vec_col, m, bands, seed, dim)
-            .withColumnRenamed("_id", "id")
-            .repartition(index_partitions, "band", "bucket"),
-            "vectors": df.select(
-                F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
-            ),
-        },
+    p = _embedding_params(
+        m,
+        bands,
+        seed,
+        dim,
+        threshold=threshold,
+        vec_type=df.schema[vec_col].dataType.simpleString(),
     )
+    frames = _embedding_frames(df, id_col, vec_col, p)
+    frames["bands"] = frames["bands"].repartition(index_partitions, "band", "bucket")
+    write_index(df, id_col, path, p, frames)
 
 
 def dedup_against_embedding_index(
@@ -589,30 +610,10 @@ def dedup_against_embedding_index(
         _embedding_params(m, bands, seed, dim, threshold=threshold),
         ranges={"threshold": "gte"},
     )
-    dim = _dim(idx, new_df, vec_col)
-    new_df = idx.conform(new_df, id_col, vec_col)
-    cand = _candidate_pairs(
-        _embedding_bands(new_df, id_col, vec_col, m, bands, seed, dim),
-        idx.live("bands"),
-        ["band", "bucket"],
-        _CROSS,
-        ("_id", "id"),
+    signed = _embedding_frames(
+        idx.conform(new_df, id_col, vec_col), id_col, vec_col, idx.params
     )
-    # per-pair V.cosine, not embedding_near_pairs' per-side norms: a
-    # per-side norm here would run over every stored vector the live
-    # read scans, not over the candidates (the two forms are
-    # bit-identical)
-    return _verify_pairs(
-        cand,
-        _CROSS,
-        {"cosine_sim": V.cosine("_va", "_vb")},
-        F.max,
-        F.col("cosine_sim") >= threshold,
-        sides=(
-            (new_df, id_col, {"_va": vec_col}),
-            (idx.live("vectors"), "id", {"_vb": "vec"}),
-        ),
-    )
+    return _embedding_pairs(signed, threshold, idx)
 
 
 def append_to_embedding_index(
@@ -634,17 +635,71 @@ def append_to_embedding_index(
     idx = open_index(df.sparkSession, path, _embedding_params(m, bands, seed, dim))
     # identity gate before any dim resolution sniffs the frame (see
     # build_embedding_index)
-    df = identified(df, id_col)
-    dim = _dim(idx, df, vec_col)
-    df = idx.conform(df, id_col, vec_col)
-    idx.append(
-        {
-            "vectors": df.select(
-                F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
-            ),
-            "bands": _embedding_bands(
-                df, id_col, vec_col, m, bands, seed, dim
-            ).withColumnRenamed("_id", "id"),
-        },
-        owner,
-    )
+    df = idx.conform(identified(df, id_col), id_col, vec_col)
+    idx.append(_embedding_frames(df, id_col, vec_col, idx.params), owner)
+
+
+# ---------- the detector table ----------
+
+
+@dataclass(frozen=True)
+class Detector:
+    """One dedup flavor as an ingest drives it.
+
+    ``params`` maps the ingest's options (``run_dedup_ingest``'s
+    keywords, ``max_tokens`` resolved) to the flavor's manifest keys,
+    validated by equality except where ``ranges`` allows a range (a key
+    only a query checks); ``threshold`` names the option holding the
+    query threshold; ``vector``: the signed column is ``vec_col``,
+    conformed as a vector, else ``text_col``.
+    ``sign(frame, id_col, col, params)`` → ``{sub: rows}`` in the index
+    layout; ``pairs(signed, threshold)`` → the within-frame pairs
+    (id_a < id_b, score), ``pairs(signed, threshold, idx)`` → the
+    (new_id, corpus_id, score) pairs against the index's live rows."""
+
+    params: Callable[[dict], dict]
+    threshold: str
+    sign: Callable[..., dict[str, DataFrame]]
+    pairs: Callable[..., DataFrame]
+    ranges: dict = field(default_factory=dict)
+    vector: bool = False
+
+
+DETECTORS: dict[str, Detector] = {
+    "minhash": Detector(
+        lambda o: _minhash_params(
+            o["num_hashes"], o["bands"], o["shingle_len"], o["portable"],
+            o["max_tokens"],
+        ),
+        "jaccard_threshold",
+        _minhash_frames,
+        _minhash_pairs,
+    ),
+    "simhash": Detector(
+        lambda o: _simhash_params(o["max_hamming"], o["portable"], o["max_tokens"]),
+        "max_hamming",
+        _simhash_frames,
+        _simhash_pairs,
+    ),
+    "containment": Detector(
+        lambda o: _containment_params(
+            o["shingle_len"], o["containment_threshold"], o["max_tokens"]
+        ),
+        "containment_threshold",
+        _containment_frames,
+        _containment_pairs,
+    ),
+    # the stored bands and vectors do not depend on the threshold: it
+    # is the build's recall design point, which queries may raise
+    "embedding": Detector(
+        lambda o: _embedding_params(
+            o["m"], o["embed_bands"], o["seed"], o["dim"],
+            threshold=o["cosine_threshold"],
+        ),
+        "cosine_threshold",
+        _embedding_frames,
+        _embedding_pairs,
+        ranges={"threshold": "gte"},
+        vector=True,
+    ),
+}

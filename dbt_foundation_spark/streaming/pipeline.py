@@ -33,8 +33,8 @@ from dbt_foundation_spark.operators.index_core import open_index
 #: Sentinel default for ``run_dedup_ingest(max_tokens=...)`` so that an
 #: explicit ``None`` keeps its batch-operator meaning (UNCAPPED) while an
 #: omitted argument resolves to the engine default cap. A plain ``None``
-#: default conflated the two: a stream could never run against an index
-#: built uncapped (r11 advice).
+#: default would conflate the two, and a stream could never run against
+#: an index built uncapped.
 _DEFAULT_CAP = object()
 
 EVENT_SCHEMA = T.StructType(
@@ -563,20 +563,19 @@ def _checkpoint_generation(spark: SparkSession, checkpoint_dir: str) -> str:
     NEW when the checkpoint was deleted or relocated.
 
     The exactly-once batch markers must be namespaced by THIS, not by
-    the checkpoint PATH (r12 probe, verdict #6): batch ids restart at 0
-    under a wiped checkpoint, so path-keyed markers from the previous
-    generation matched the new run's (app, 0..N) keys and every
-    replayed batch was SILENTLY SKIPPED — survivors admitted to the
-    index but never installed to the output (dedup ingest), or new
-    vectors never appended at all (IVF ingest). Read lazily inside the
+    the checkpoint PATH: batch ids restart at 0 under a wiped
+    checkpoint, so path-keyed markers from the previous generation
+    would match the new run's (app, 0..N) keys and every replayed batch
+    would be SILENTLY SKIPPED — survivors admitted to the index but
+    never installed to the output (dedup ingest), or new vectors never
+    appended at all (IVF ingest). Read lazily inside the
     sink (the file exists once the query has started); a checkpoint
     without readable metadata fails loudly — guessing a namespace
     would resurrect the silent skip.
 
-    One-time migration caveat (r12 review): markers written by the
-    pre-generation code are keyed by the checkpoint PATH and are
-    orphaned by this change — harmless except for a batch that crashed
-    BETWEEN its install and its checkpoint commit exactly at the
+    Migration caveat: markers written by releases that keyed them by
+    the checkpoint PATH are orphaned — harmless except for a batch that
+    crashed BETWEEN its install and its checkpoint commit exactly at the
     upgrade boundary, whose replay re-installs under the new name
     (duplicated survivors for that one batch). Consulting the legacy
     path-keyed markers instead would resurrect the wipe bug (same
@@ -619,7 +618,7 @@ def _install_batch_output(
     lesson); callers pass the checkpoint GENERATION id
     (:func:`_checkpoint_generation`), not the checkpoint path — a
     wiped checkpoint restarts batch ids at 0 and path-keyed markers
-    silently skipped every replayed install (r12 probe).
+    would silently skip every replayed install.
     One file per micro-batch is the normal streaming-sink
     shape — micro-batches are trigger-bounded — and
     ``compact_parquet_path(out_path)`` folds them like any other
@@ -640,13 +639,13 @@ def _install_batch_output(
     checkpoint would otherwise reproduce the old dest_names, match the
     orphaned markers, and silently skip every batch while the output
     stayed empty. The wipe is evidence-gated, not a bare existence
-    probe (round-7 advice): it fires only on THIS STREAM'S FIRST batch
+    probe: it fires only on THIS STREAM'S FIRST batch
     (``batch_id == 0`` — a fresh checkpoint, exactly the rebuild
     state) with ``out_path`` absent, and sweeps EVERY ``ingest-*``
-    marker, not just this stream's app-hash prefix (r12 advice: the
-    app_id is the checkpoint generation, new per wipe, so an
-    own-prefix sweep could never reclaim a dead generation's markers
-    and they grew without bound). The wider sweep is still safe for
+    marker, not just this stream's app-hash prefix (the app_id is the
+    checkpoint generation, new per wipe, so an own-prefix sweep could
+    never reclaim a dead generation's markers and they would grow
+    without bound). The wider sweep is still safe for
     sibling streams: markers are written only after their data file
     installs and installing creates ``out_path``, so a sibling with
     any committed batch implies ``out_path`` exists and the heal never
@@ -676,11 +675,11 @@ def _install_batch_output(
     # fresh-start self-heal — evidence-gated (see docstring): only on
     # this stream's FIRST batch (fresh checkpoint == the rebuild state)
     # with out_path gone. The sweep covers ALL ingest-* markers, not
-    # just this stream's app-hash prefix (r12 advice): the app_id here
-    # is the checkpoint GENERATION, new per wipe, so an own-prefix
-    # sweep could never match the dead generation's markers and every
-    # wipe permanently orphaned them — unbounded growth nothing could
-    # reclaim. Any marker is definitionally stale when out_path is
+    # just this stream's app-hash prefix: the app_id here is the
+    # checkpoint GENERATION, new per wipe, so an own-prefix sweep could
+    # never match the dead generation's markers and every wipe would
+    # orphan them for good — unbounded growth nothing could reclaim.
+    # Any marker is definitionally stale when out_path is
     # absent (markers are written only AFTER their data file installs,
     # and installing creates out_path), so the wider sweep cannot
     # destroy a live sibling stream's state: a sibling with any
@@ -759,8 +758,8 @@ def run_dedup_ingest(
     micro-batch sees them as corpus.
 
     ``detector`` selects the near-dup notion — each rides its own
-    persisted index flavor (operators/dedup_index) and batch pair
-    operator, with identical admission semantics:
+    persisted index flavor (``operators.dedup_index.DETECTORS``), with
+    identical admission semantics:
 
     - ``"minhash"``: Jaccard ≥ ``jaccard_threshold`` over the band
       index (``num_hashes``/``bands``/``shingle_len``/``portable``).
@@ -771,9 +770,8 @@ def run_dedup_ingest(
       admitted one, or vice versa) that symmetric Jaccard under-scores.
     - ``"embedding"``: cosine ≥ ``cosine_threshold`` over the banded
       hyperplane-LSH index — semantic near-dups that share no surface
-      n-grams. Needs ``vec_col`` (``text_col`` is ignored); ``dim`` is
-      resolved ONCE from the index manifest at setup so no per-batch
-      sniff job runs.
+      n-grams. Needs ``vec_col`` (``text_col`` is ignored); ``dim``
+      comes from the index manifest, so no per-batch sniff job runs.
 
     This is the streaming flank of operators/dedup_index: the 100 TB
     daily-ingest loop (build index once → dedup each ingest → admit)
@@ -781,6 +779,22 @@ def run_dedup_ingest(
     cost is |batch| × collision rate — the corpus is touched only
     through the join-key-clustered index files, never recomputed or
     rescanned.
+
+    One admission path serves every detector. Per micro-batch the sink
+    opens the index once, conforms the pinned batch to the stored id
+    (and vector) type, and signs it ONCE with the flavor's ``sign``:
+    the same signed frames feed the probe against the index, the
+    within-batch pairs and the append. Survivors are the batch's own
+    rows minus the drops (the output keeps the batch schema); the
+    append writes the signed rows of the survivor ids.
+
+    Setup-time refusal: the stream's parameters are validated against
+    the index manifest before the query starts, with the append's
+    equality rule (the embedding threshold, which no append records,
+    keeps the query rule: ≥ the build design point). A simhash radius
+    or containment threshold that a probe would accept but an append
+    refuses therefore fails the call, before any output exists — not
+    every trigger after the first batch's survivors were installed.
 
     Admission policy (documented contract, pinned by the parity test):
     a doc is DROPPED iff it matches an already-admitted corpus doc at
@@ -808,134 +822,50 @@ def run_dedup_ingest(
     matches the corpus), and byte-identical rows from a partial admit
     fold away at the next ``compact_index``.
 
-    Checkpoint LOSS (r12 probe, verdict #6): if the checkpoint dir is
-    deleted but the index/output/markers survive, a restart at the
-    same path replays the whole source with batch ids starting at 0.
-    The install markers are keyed by the checkpoint GENERATION (the
-    persisted query id — new per wipe, :func:`_checkpoint_generation`),
-    so replayed batches install fresh while previously-admitted docs
-    fold away through the admission gate — exactly-once output either
-    way (pre-fix, the dead generation's path-keyed markers silently
-    swallowed the new survivors). A stale ``__appending`` claim from
-    the SAME checkpoint path is reclaimed (the owner is the path,
-    stable across generations); one from a FOREIGN checkpoint fails
-    the first trigger loudly naming the holder and the manual heal."""
+    Checkpoint LOSS: if the checkpoint dir is deleted but the
+    index/output/markers survive, a restart at the same path replays
+    the whole source with batch ids starting at 0. The install markers
+    are keyed by the checkpoint GENERATION (the persisted query id —
+    new per wipe, :func:`_checkpoint_generation`), so replayed batches
+    install fresh while previously-admitted docs fold away through the
+    admission gate — exactly-once output either way (path-keyed
+    markers would match the dead generation's and silently swallow
+    the new survivors). A stale ``__appending`` claim from the SAME
+    checkpoint path is reclaimed (the owner is the path, stable across
+    generations); one from a FOREIGN checkpoint fails the first trigger
+    loudly naming the holder and the manual heal."""
+    from dbt_foundation_spark.operators import dedup
+    from dbt_foundation_spark.operators.dedup_index import DETECTORS
     from dbt_foundation_spark.operators.tombstones import assert_literal_path
 
     assert_literal_path(index_path, "index path")
     assert_literal_path(out_path, "survivor output path")
-    from dbt_foundation_spark.operators import dedup, dedup_index
-
-    # the giant-document cap is manifest-enforced: an index built with
-    # a non-default max_tokens would otherwise make every trigger raise
-    # with no workaround (r11 review pass 3) — resolve the stream-level
-    # knob once and pass it to every index/batch operator so corpus and
-    # batch sides always sign in the same token window. The sentinel
-    # default (not None) keeps max_tokens=None meaning UNCAPPED, the
-    # batch operators' convention — a stream CAN run against an index
-    # built uncapped (r11 advice: conflating default with uncapped
-    # either raised every trigger or silently signed capped).
-    cap = dedup.SIGNATURE_MAX_TOKENS if max_tokens is _DEFAULT_CAP else max_tokens
-
-    if detector == "minhash":
-        def vs_corpus(spark, batch):
-            return dedup_index.dedup_against_index(
-                spark, batch, id_col, text_col, index_path,
-                num_hashes=num_hashes, bands=bands, shingle_len=shingle_len,
-                jaccard_threshold=jaccard_threshold, portable=portable,
-                max_tokens=cap,
-            )
-
-        def within(batch):
-            return dedup.minhash_lsh_pairs(
-                batch, id_col, text_col,
-                num_hashes=num_hashes, bands=bands, shingle_len=shingle_len,
-                jaccard_threshold=jaccard_threshold, portable=portable,
-                max_tokens=cap,
-            )
-
-        def admit(batch):
-            dedup_index.append_to_index(
-                batch, id_col, text_col, index_path,
-                num_hashes=num_hashes, bands=bands, shingle_len=shingle_len,
-                portable=portable, owner=checkpoint_dir, max_tokens=cap,
-            )
-    elif detector == "simhash":
-        def vs_corpus(spark, batch):
-            return dedup_index.dedup_against_simhash_index(
-                spark, batch, id_col, text_col, index_path,
-                max_hamming=max_hamming, portable=portable, max_tokens=cap,
-            )
-
-        def within(batch):
-            return dedup.simhash_near_pairs(
-                batch, id_col, text_col,
-                max_hamming=max_hamming, portable=portable, max_tokens=cap,
-            )
-
-        def admit(batch):
-            dedup_index.append_to_simhash_index(
-                batch, id_col, text_col, index_path,
-                max_hamming=max_hamming, portable=portable,
-                owner=checkpoint_dir, max_tokens=cap,
-            )
-    elif detector == "containment":
-        def vs_corpus(spark, batch):
-            return dedup_index.containment_against_index(
-                spark, batch, id_col, text_col, index_path,
-                shingle_len=shingle_len, threshold=containment_threshold,
-                max_tokens=cap,
-            )
-
-        def within(batch):
-            return dedup.containment_pairs(
-                batch, id_col, text_col,
-                shingle_len=shingle_len, threshold=containment_threshold,
-                max_tokens=cap,
-            )
-
-        def admit(batch):
-            dedup_index.append_to_containment_index(
-                batch, id_col, text_col, index_path,
-                shingle_len=shingle_len, threshold=containment_threshold,
-                owner=checkpoint_dir, max_tokens=cap,
-            )
-    elif detector == "embedding":
-        if vec_col is None:
-            raise ValueError("detector='embedding' needs vec_col=")
-        if dim is None:
-            dim = open_index(stream_docs.sparkSession, index_path).params.get("dim")
-            dim = None if dim is None else int(dim)
-
-        def vs_corpus(spark, batch):
-            return dedup_index.dedup_against_embedding_index(
-                spark, batch, id_col, vec_col, index_path,
-                threshold=cosine_threshold, m=m, bands=embed_bands,
-                seed=seed, dim=dim,
-            )
-
-        def within(batch):
-            from dbt_foundation_spark.operators.similarity import (
-                embedding_near_pairs,
-            )
-
-            return embedding_near_pairs(
-                batch, id_col, vec_col,
-                threshold=cosine_threshold, m=m, bands=embed_bands,
-                seed=seed, dim=dim,
-            )
-
-        def admit(batch):
-            dedup_index.append_to_embedding_index(
-                batch, id_col, vec_col, index_path,
-                m=m, bands=embed_bands, seed=seed, dim=dim,
-                owner=checkpoint_dir,
-            )
-    else:
+    entry = DETECTORS.get(detector)
+    if entry is None:
         raise ValueError(
-            f"unknown detector {detector!r}: use "
-            "minhash/simhash/containment/embedding"
+            f"unknown detector {detector!r}: use {'/'.join(DETECTORS)}"
         )
+    col = vec_col if entry.vector else text_col
+    if col is None:
+        raise ValueError(f"detector={detector!r} needs vec_col=")
+    # the giant-document cap is manifest-enforced, so the stream-level
+    # knob resolves once and every signing uses it: corpus and batch
+    # sides always sign in the same token window. The sentinel default
+    # (not None) keeps max_tokens=None meaning UNCAPPED, the batch
+    # operators' convention, so a stream can run against an index
+    # built uncapped.
+    cap = dedup.SIGNATURE_MAX_TOKENS if max_tokens is _DEFAULT_CAP else max_tokens
+    opts = dict(
+        num_hashes=num_hashes, bands=bands, shingle_len=shingle_len,
+        portable=portable, jaccard_threshold=jaccard_threshold,
+        max_hamming=max_hamming, containment_threshold=containment_threshold,
+        cosine_threshold=cosine_threshold, m=m, embed_bands=embed_bands,
+        seed=seed, dim=dim, max_tokens=cap,
+    )
+    params, threshold = entry.params(opts), opts[entry.threshold]
+    # setup-time refusal (see the docstring): the rule every batch's
+    # append will apply, checked before the stream starts
+    open_index(stream_docs.sparkSession, index_path, params, entry.ranges)
 
     gate_state: dict = {}
 
@@ -943,22 +873,33 @@ def run_dedup_ingest(
         spark = batch_df.sparkSession
         # the install-marker namespace is the checkpoint GENERATION
         # (query id), not the checkpoint path: a wiped checkpoint
-        # restarts batch ids at 0, and path-keyed markers made every
-        # replayed batch silently skip its install while still
-        # admitting to the index (r12 probe, verdict #6)
+        # restarts batch ids at 0, and path-keyed markers would make
+        # every replayed batch skip its install while still admitting
+        # to the index
         gen = gate_state.get("generation")
         if gen is None:
             gen = gate_state["generation"] = _checkpoint_generation(
                 spark, checkpoint_dir
             )
         batch_df = pin(batch_df)  # pin: file batches re-list lazily
-        corpus_hits = vs_corpus(spark, batch_df).select(
-            F.col("new_id").alias("_drop_id")
+        idx = open_index(spark, index_path, params, entry.ranges)
+        conformed = idx.conform(batch_df, id_col, col if entry.vector else None)
+        # lazily pinned: the probe, the within-batch pairs and the
+        # append all read these rows, so the signing stages run once
+        signed = {
+            sub: pin(rows, eager=False)
+            for sub, rows in entry.sign(conformed, id_col, col, idx.params).items()
+        }
+        drops = (
+            entry.pairs(signed, threshold, idx)
+            .select(F.col("new_id").alias("_drop_id"))
+            .union(
+                entry.pairs(signed, threshold).select(
+                    F.greatest("id_a", "id_b").alias("_drop_id")
+                )
+            )
+            .distinct()
         )
-        within_hits = within(batch_df).select(
-            F.greatest("id_a", "id_b").alias("_drop_id")
-        )
-        drops = corpus_hits.union(within_hits).distinct()
         survivors = batch_df.join(
             drops, batch_df[id_col] == drops._drop_id, "left_anti"
         )
@@ -969,19 +910,24 @@ def run_dedup_ingest(
         survivors = pin(survivors)  # two consumers below
         # exactly-once OUTPUT across crash replays (see the helper):
         # install-if-absent, keyed by (stream, batch). Crash between
-        # install and admit -> replay recomputes the SAME survivors
-        # (index unchanged), skips the install, admits once. Crash
-        # after admit -> replay's survivors are EMPTY (the batch now
-        # matches the corpus) and the pre-crash install already holds
-        # the output. Crash MID-admit: replayed docs whose verify
-        # still fails (their doc-keyed dataset rows are missing) are
-        # re-admitted in full and the byte-identical duplicates fold
-        # at compact_index (every dedup dataset is distinct_on_compact
-        # in index_core.FLAVORS); the single-dataset simhash flavor can
-        # instead keep a partially-chunked doc until the next rebuild
-        # — bounded to the one crashed batch.
+        # install and append -> replay recomputes the SAME survivors
+        # (index unchanged), skips the install, appends once. Crash
+        # after the append -> replay's survivors are EMPTY (the batch
+        # now matches the corpus) and the pre-crash install already
+        # holds the output. Crash MID-append: replayed docs whose
+        # verify still fails (their doc-keyed dataset rows are
+        # missing) are re-admitted in full and the byte-identical
+        # duplicates fold at compact_index (every dedup dataset is
+        # distinct_on_compact in index_core.FLAVORS); the
+        # single-dataset simhash flavor can instead keep a
+        # partially-chunked doc until the next rebuild — bounded to
+        # the one crashed batch.
         _install_batch_output(survivors, out_path, gen, int(batch_id))
-        admit(survivors)
+        ids = survivors.select(F.col(id_col).alias("id"))
+        idx.append(
+            {sub: rows.join(ids, "id", "left_semi") for sub, rows in signed.items()},
+            checkpoint_dir,
+        )
 
     writer = stream_docs.writeStream.foreachBatch(sink).option(
         "checkpointLocation", checkpoint_dir
@@ -1013,11 +959,10 @@ def _ivf_ingest_sink(
     :func:`_checkpoint_generation`): bare (``app_id`` None) it IS the
     generation id; with an explicit ``app_id`` it is
     ``<app_id>@<generation>`` — NOT the bare app_id and NOT the
-    checkpoint path, because any wipe-stable namespace resurrects the
-    r12 silent-skip: a wiped checkpoint restarts batch ids at 0, and a
-    stable namespace matched the dead generation's markers so every
-    replayed batch was silently dropped from the index (r12 probe,
-    verdict #6; r12 advice extended the fix to explicit app_ids). Under
+    checkpoint path, because any wipe-stable namespace silently skips
+    replays: a wiped checkpoint restarts batch ids at 0, and a stable
+    namespace would match the dead generation's markers so every
+    replayed batch would be dropped from the index. Under
     a fresh generation the whole source replays INTO the index once;
     previously-appended rows land byte-identical and fold away at the
     next ``compact_index`` (the same fold that heals the append∥marker
@@ -1040,22 +985,20 @@ def _ivf_ingest_sink(
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # The marker namespace ALWAYS carries the checkpoint generation
-        # (r12 advice): with a bare explicit app_id the namespace was
-        # stable across checkpoint wipes, so a wiped checkpoint
-        # restarting batch ids at 0 matched the dead run's
-        # (app_id, 0..N) markers and silently skipped every replayed
-        # batch — the exact bug verdict r12 #6 fixed for the default
-        # path. An explicit app_id now namespaces WITHIN a generation
-        # (multi-stream separation) as `<app_id>@<generation>`; the
-        # generation id provides wipe-freshness for both forms.
-        # Migration caveat (same shape as the r12 path→generation
-        # move): markers written by pre-fix explicit-app_id runs are
-        # orphaned; a kept checkpoint never replays committed batches
-        # anyway (the checkpoint itself is the first line of
-        # exactly-once), so the orphan only matters on the one crashed
-        # batch straddling the upgrade — replay appends byte-identical
-        # rows that fold at the next compact_index.
+        # The marker namespace ALWAYS carries the checkpoint generation:
+        # a bare explicit app_id would be stable across checkpoint
+        # wipes, so a wiped checkpoint restarting batch ids at 0 would
+        # match the dead run's (app_id, 0..N) markers and silently skip
+        # every replayed batch. An explicit app_id namespaces WITHIN a
+        # generation (multi-stream separation) as
+        # `<app_id>@<generation>`; the generation id provides
+        # wipe-freshness for both forms. Migration caveat: markers
+        # written by releases that keyed explicit-app_id runs without
+        # the generation are orphaned; a kept checkpoint never replays
+        # committed batches anyway (the checkpoint itself is the first
+        # line of exactly-once), so the orphan only matters on the one
+        # crashed batch straddling the upgrade — replay appends
+        # byte-identical rows that fold at the next compact_index.
         if checkpoint_dir is None:
             # direct-call mode (no streaming checkpoint): there is no
             # generation to key by AND no wipe hazard — replays only
@@ -1191,16 +1134,14 @@ def run_ivf_ingest(
     appended batch under ``{index_path}/ingest_log`` keyed by
     ``(namespace, batch_id)`` where the namespace is the checkpoint
     GENERATION (the persisted query id), prefixed ``<app_id>@`` when an
-    explicit ``app_id`` is given (r12: the checkpoint PATH was the old
-    default and a bare explicit app_id kept the same hazard — any
-    wipe-stable namespace means a wiped checkpoint restarting batch ids
-    at 0 silently drops every replayed batch against the dead
-    generation's markers), giving each stream its own marker namespace
-    (batch ids are per-checkpoint, so a bare-id key would make a
-    SECOND stream into the same index collide with old markers and
-    silently drop its batches). The remaining window is a crash
-    BETWEEN append and
-    marker write: a replay there appends byte-identical (id, vector)
+    explicit ``app_id`` is given (not the checkpoint PATH or a bare
+    app_id: any wipe-stable namespace means a wiped checkpoint
+    restarting batch ids at 0 silently drops every replayed batch
+    against the dead generation's markers), giving each stream its own
+    marker namespace (batch ids are per-checkpoint, so a bare-id key
+    would make a SECOND stream into the same index collide with old
+    markers and silently drop its batches). The remaining window is a
+    crash BETWEEN append and marker write: a replay there appends byte-identical (id, vector)
     rows again, which inflates those lists' candidate counts but
     cannot change which vectors exist or their assignments;
     ``compact_index`` drops such exact-duplicate rows at the next

@@ -453,14 +453,24 @@ def test_minhash_lsh_join_equals_cross_side_pairs(spark, sf_dir):
     "flavor, shuffles",
     [("minhash", 2), ("simhash", 2), ("containment", 2), ("embedding", 1)],
 )
-def test_index_probe_plan_shapes_pinned(spark, sf_dir, tmp_path, flavor, shuffles):
+def test_index_probe_plan_shapes_pinned(
+    spark, sf_dir, tmp_path, monkeypatch, flavor, shuffles
+):
     """Exact shuffle count of each index probe's plan — the probe runs on
     every ingest op, so a refactor that adds an exchange or a Python row
     UDF to it fails here. Counts are of the plan as built (before AQE):
     the index's live reads plus the batch side's pinned signature
-    frames, which are RDD scans."""
+    frames, which are RDD scans.
+
+    The streaming ingest's append frames are pinned the same way: one
+    micro-batch through ``run_dedup_ingest``, each frame handed to the
+    index append recorded. Each is a signed frame (a lazily pinned RDD
+    scan) semi-joined to the pinned survivor ids: a broadcast join, no
+    shuffle."""
     from dbt_foundation_spark.operators import dedup_index as D
+    from dbt_foundation_spark.operators import index_core
     from dbt_foundation_spark.plans.inspect import plan_summary
+    from dbt_foundation_spark.streaming.pipeline import run_dedup_ingest
 
     path = str(tmp_path / flavor)
     if flavor == "embedding":
@@ -487,6 +497,31 @@ def test_index_probe_plan_shapes_pinned(spark, sf_dir, tmp_path, flavor, shuffle
     s = plan_summary(probe)
     assert s["shuffles"] == shuffles, s
     assert s["python_row_udfs"] == 0
+
+    shapes = {}
+    real_append = index_core.Index.append
+
+    def recording_append(self, frames, owner=None):
+        for sub, frame in frames.items():
+            summary = plan_summary(frame)
+            shapes[sub] = (summary["shuffles"], summary["python_row_udfs"])
+        return real_append(self, frames, owner)
+
+    monkeypatch.setattr(index_core.Index, "append", recording_append)
+    stream_dir = str(tmp_path / "stream")
+    batch.write.parquet(stream_dir)
+    run_dedup_ingest(
+        spark.readStream.schema(batch.schema).parquet(stream_dir),
+        "vec_id" if flavor == "embedding" else "doc_id",
+        "text",
+        path,
+        str(tmp_path / "out"),
+        str(tmp_path / "ckpt"),
+        detector=flavor,
+        vec_col="embedding" if flavor == "embedding" else None,
+    )
+    want = {sub.name: (0, 0) for sub in index_core.FLAVORS[flavor]}
+    assert shapes == want, shapes
 
 
 def test_budget_select_equals_naive_greedy(spark):

@@ -918,6 +918,188 @@ def test_dedup_ingest_stream_detector_flavors(spark, sf_dir, staging):
         )
 
 
+@pytest.mark.parametrize(
+    "detector, build_kw, stream_kw",
+    [
+        ("containment", dict(threshold=0.8), dict(containment_threshold=0.9)),
+        ("simhash", dict(max_hamming=3), dict(max_hamming=2)),
+    ],
+    ids=["containment", "simhash"],
+)
+def test_dedup_ingest_refuses_append_mismatch_at_setup(
+    spark, sf_dir, staging, detector, build_kw, stream_kw
+):
+    """A probe accepts a higher containment threshold or a tighter
+    simhash radius than the build's (range rule); an append does not
+    (equality rule). The stream must refuse before it starts: installing
+    a batch's survivors and then failing the append would leave output
+    rows the index never sees, and every restart would skip the install
+    and fail the append again."""
+    from dbt_foundation_spark.operators import dedup_index as D
+    from dbt_foundation_spark.streaming.pipeline import (
+        read_document_stream,
+        run_dedup_ingest,
+    )
+
+    root = staging["root"] / f"setup_refusal_{detector}"
+    texts = [
+        r["text"]
+        for r in t(spark, sf_dir, "documents").orderBy("doc_id").limit(22).collect()
+    ]
+
+    def docs(rows):
+        return spark.createDataFrame(
+            [(i, tx, "en", "src0", len(tx)) for i, tx in rows],
+            "doc_id long, text string, lang string, source string, n_chars long",
+        )
+
+    build = {
+        "containment": D.build_containment_index,
+        "simhash": D.build_simhash_index,
+    }[detector]
+    idx = str(root / "idx")
+    build(docs(list(enumerate(texts[:20]))), "doc_id", "text", idx, **build_kw)
+    stream_dir = root / "stream"
+    docs([(1000, texts[20]), (1001, texts[21])]).coalesce(1).write.parquet(
+        str(stream_dir)
+    )
+    out = root / "out"
+    with pytest.raises(ValueError, match="need caller == build"):
+        run_dedup_ingest(
+            read_document_stream(spark, str(stream_dir), max_files_per_trigger=1),
+            "doc_id", "text", idx, str(out), _ckpt(staging),
+            detector=detector, **stream_kw,
+        )
+    assert not out.exists()
+    assert not Path(f"{out}__ingest_markers").exists()
+    shutil.rmtree(root, ignore_errors=True)
+
+
+@pytest.mark.parametrize(
+    "detector", ["minhash", "simhash", "containment", "embedding"]
+)
+def test_dedup_ingest_signs_each_batch_once(
+    spark, sf_dir, staging, monkeypatch, detector
+):
+    """One signing pass per micro-batch: the flavor's ``sign`` runs once
+    per batch and its frames feed the probe, the within-batch pairs and
+    the append. What the sink appends must equal what
+    ``append_to_<flavor>(survivors)`` writes, per sub-dataset as a set.
+    Containment prefixes are the exception: the sink orders them by the
+    whole batch's df, the batch append by the survivors' df (any order
+    keeps the pigeonhole bound), so each survivor's prefix is checked by
+    its length, ⌊(1−t)·n⌋+1 capped at n, and by membership in that
+    doc's postings."""
+    import dataclasses
+    import math
+    import random
+
+    from dbt_foundation_spark.operators import dedup_index as D
+    from dbt_foundation_spark.operators.index_core import FLAVORS
+    from dbt_foundation_spark.streaming.pipeline import (
+        read_event_stream,
+        run_dedup_ingest,
+    )
+
+    root = staging["root"] / f"sign_once_{detector}"
+    if detector == "embedding":
+        rng = random.Random(7)
+
+        def unit(dim=16):
+            v = [rng.gauss(0.0, 1.0) for _ in range(dim)]
+            n = math.sqrt(sum(x * x for x in v)) or 1.0
+            return [x / n for x in v]
+
+        items = [unit() for _ in range(26)]
+        schema = "vec_id long, embedding array<float>"
+        id_col, col = "vec_id", "embedding"
+        kw = dict(detector="embedding", vec_col="embedding")
+    else:
+        items = [
+            r["text"]
+            for r in t(spark, sf_dir, "documents").orderBy("doc_id").limit(26).collect()
+        ]
+        schema, id_col, col = "doc_id long, text string", "doc_id", "text"
+        kw = dict(detector=detector)
+
+    def frame(rows):
+        return spark.createDataFrame([(i, items[j]) for i, j in rows], schema)
+
+    build, append = {
+        "minhash": (D.build_minhash_index, D.append_to_index),
+        "simhash": (D.build_simhash_index, D.append_to_simhash_index),
+        "containment": (D.build_containment_index, D.append_to_containment_index),
+        "embedding": (D.build_embedding_index, D.append_to_embedding_index),
+    }[detector]
+    corpus = frame([(i, i) for i in range(20)])
+    batches = [
+        # 1005 duplicates corpus item 0; 1006~1007 in-batch pair
+        frame([(1000, 20), (1001, 21), (1005, 0), (1006, 23), (1007, 23)]),
+        # 1100 duplicates 1006, admitted by the first batch
+        frame([(1100, 23), (1101, 24)]),
+    ]
+    s_idx, q_idx = str(root / "s_idx"), str(root / "q_idx")
+    build(corpus, id_col, col, s_idx)
+    build(corpus, id_col, col, q_idx)
+    stream_dir, out = root / "stream", str(root / "out")
+    for i, b in enumerate(batches):
+        b.coalesce(1).write.mode("append").parquet(str(stream_dir))
+        if i < len(batches) - 1:
+            distinct_mtime(stream_dir)
+
+    entry = D.DETECTORS[detector]
+    calls = []
+
+    def counting_sign(*a, **k):
+        calls.append(1)
+        return entry.sign(*a, **k)
+
+    monkeypatch.setitem(
+        D.DETECTORS, detector, dataclasses.replace(entry, sign=counting_sign)
+    )
+    run_dedup_ingest(
+        read_event_stream(
+            spark, str(stream_dir), schema=spark.createDataFrame([], schema).schema,
+            max_files_per_trigger=1,
+        ),
+        id_col, col if detector != "embedding" else "_unused_text",
+        s_idx, out, _ckpt(staging), **kw,
+    )
+    monkeypatch.undo()
+    assert len(list(Path(f"{out}__ingest_markers").glob("ingest-*"))) == len(batches)
+    assert len(calls) == len(batches)
+
+    survivors = spark.read.parquet(out)
+    admitted = {r[id_col] for r in survivors.collect()}
+    assert {1006, 1101} <= admitted and not admitted & {1005, 1007, 1100}
+    append(survivors, id_col, col, q_idx)
+
+    def rows(path, sub):
+        df = spark.read.parquet(f"{path}/{sub}")
+        return {
+            tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in df.select(sorted(df.columns)).collect()
+        }
+
+    subs = [s.name for s in FLAVORS[detector]]
+    for sub in subs:
+        if sub != "prefixes":
+            assert rows(s_idx, sub) == rows(q_idx, sub), sub
+    if "prefixes" in subs:
+        got, ref = rows(s_idx, "prefixes"), rows(q_idx, "prefixes")
+        # columns sorted: (id, n, s)
+        assert {r for r in got if r[0] not in admitted} == {
+            r for r in ref if r[0] not in admitted
+        }
+        postings = rows(s_idx, "postings")
+        for doc in admitted:
+            mine = [r for r in got if r[0] == doc]
+            n = mine[0][1]
+            assert len(mine) == min(n, math.floor((1 - 0.8) * n + 1e-9) + 1), doc
+            assert all(r in postings for r in mine), doc
+    shutil.rmtree(root, ignore_errors=True)
+
+
 def test_tws_sessionization_matches_state_api(spark, sf_dir, staging):
     """The transformWithStateInPandas sessionizer must close the same
     sessions as the applyInPandasWithState one on the same ordered
@@ -1482,19 +1664,25 @@ def test_ingest_gate_rejects_row_udf(spark, staging, monkeypatch):
     Python UDF into the dedup sink's plan kills the stream on the FIRST
     trigger with the scale gate's finding in the failure chain, instead
     of shipping a 10-100x-slower plan silently."""
+    import dataclasses
     import uuid as _uuid
 
-    from dbt_foundation_spark.operators import dedup as dedup_ops
+    from dbt_foundation_spark.operators import dedup_index
     from dbt_foundation_spark.operators.dedup_index import build_minhash_index
     from dbt_foundation_spark.streaming.pipeline import run_dedup_ingest
 
-    real_pairs = dedup_ops.minhash_lsh_pairs
+    # the rogue UDF rides the sink's within-batch pairs (the minhash
+    # entry's pairs called without an index)
+    entry = dedup_index.DETECTORS["minhash"]
     rogue = F.udf(lambda x: x, "bigint")
 
-    def bad_pairs(*a, **kw):
-        return real_pairs(*a, **kw).withColumn("id_a", rogue("id_a"))
+    def bad_pairs(signed, threshold, idx=None):
+        pairs = entry.pairs(signed, threshold, idx)
+        return pairs if idx is not None else pairs.withColumn("id_a", rogue("id_a"))
 
-    monkeypatch.setattr(dedup_ops, "minhash_lsh_pairs", bad_pairs)
+    monkeypatch.setitem(
+        dedup_index.DETECTORS, "minhash", dataclasses.replace(entry, pairs=bad_pairs)
+    )
 
     corpus = spark.createDataFrame(
         [(1, "a corpus document for the negative scale gate test words")],
@@ -1530,7 +1718,7 @@ def test_dedup_ingest_crash_replay_exactly_once(spark, staging, monkeypatch):
     the replay completes the admit."""
     import uuid as _uuid
 
-    from dbt_foundation_spark.operators import dedup_index
+    from dbt_foundation_spark.operators import index_core
     from dbt_foundation_spark.operators.dedup_index import build_minhash_index
     from dbt_foundation_spark.streaming.pipeline import run_dedup_ingest
 
@@ -1555,9 +1743,9 @@ def test_dedup_ingest_crash_replay_exactly_once(spark, staging, monkeypatch):
     out = str(staging["root"] / f"cr_out_{_uuid.uuid4().hex[:6]}")
     ckpt = _ckpt(staging)
 
-    # crash injection: the admit dies on its first call, AFTER the
-    # survivor output was installed
-    real_append = dedup_index.append_to_index
+    # crash injection: the admit (the sink's index append) dies on its
+    # first call, AFTER the survivor output was installed
+    real_append = index_core.Index.append
     armed = {"on": True}
 
     def exploding_append(*a, **kws):
@@ -1566,7 +1754,7 @@ def test_dedup_ingest_crash_replay_exactly_once(spark, staging, monkeypatch):
             raise RuntimeError("injected crash between install and admit")
         return real_append(*a, **kws)
 
-    monkeypatch.setattr(dedup_index, "append_to_index", exploding_append)
+    monkeypatch.setattr(index_core.Index, "append", exploding_append)
 
     def run():
         stream = spark.readStream.schema("doc_id bigint, text string").parquet(
@@ -1724,6 +1912,7 @@ def test_online_retraction_during_running_ingest(spark, sf_dir, staging, monkeyp
     that batch's index read) does not disturb the in-flight batch and
     takes effect at the next. The admitted corpus must equal the
     sequential loop with the same retractions at the same points."""
+    import dataclasses
     import time as _time
 
     import dbt_foundation_spark.operators.dedup_index as dix
@@ -1776,21 +1965,29 @@ def test_online_retraction_during_running_ingest(spark, sf_dir, staging, monkeyp
     out = str(root / "ret_out")
 
     seen = {"n": 0}
-    real_vs = dix.dedup_against_index
+    entry = dix.DETECTORS["minhash"]
 
-    def vs_with_between_retractions(spark_arg, batch, *a, **kw):
+    # the sink's probe is the minhash entry's pairs called with the
+    # opened index; its live reads are the batch's index read
+    def vs_with_between_retractions(signed, threshold, idx=None):
+        if idx is None:
+            return entry.pairs(signed, threshold)
         n = seen["n"]
         seen["n"] += 1
         for rid in between.get(n, []):
-            retract_from_index(spark_arg, s_index, [rid])
-        hits = real_vs(spark_arg, batch, *a, **kw)
+            retract_from_index(idx.spark, s_index, [rid])
+        hits = entry.pairs(signed, threshold, idx)
         # racing: lands AFTER this batch's index read, while the batch
-        # is still being processed (localCheckpoint pins the read)
+        # is still being processed (the read's file listing is fixed)
         for rid in racing.get(n, []):
-            retract_from_index(spark_arg, s_index, [rid])
+            retract_from_index(idx.spark, s_index, [rid])
         return hits
 
-    monkeypatch.setattr(dix, "dedup_against_index", vs_with_between_retractions)
+    monkeypatch.setitem(
+        dix.DETECTORS,
+        "minhash",
+        dataclasses.replace(entry, pairs=vs_with_between_retractions),
+    )
     run_dedup_ingest(
         read_document_stream(spark, str(stream_dir), max_files_per_trigger=1),
         "doc_id", "text", s_index, out, _ckpt(staging),
