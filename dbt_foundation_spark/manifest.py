@@ -8,6 +8,10 @@ Reference semantics re-expressed:
   §3 step 2 of SURVEY.md);
 - ``ref`` resolves to a 2-part ``schema.alias`` name, never 3-part
   (macros/overrides/ref.sql:20-25 strips the database for clone-safety).
+
+The manifest holds the graph; it does not schedule it. ``Project.run``
+releases each node to its thread pool when the node's last parent has
+finished, so a build has no generation barriers.
 """
 
 from __future__ import annotations
@@ -75,7 +79,8 @@ class Node:
 
 
 class Manifest:
-    """Node registry + DAG with topological scheduling order."""
+    """Node registry + DAG: ref resolution, downstream closure and
+    topological layers."""
 
     _AMBIGUOUS = "!ambiguous"
 
@@ -163,9 +168,10 @@ class Manifest:
         return out
 
     def topo_generations(self, subset: set[str] | None = None) -> list[list[Node]]:
-        """Kahn's algorithm in generations — each generation's nodes are
-        independent and run concurrently on the scheduler thread pool
-        (reference: 16 threads, profiles.example.yml:15)."""
+        """Kahn's algorithm in generations: each generation's nodes depend
+        only on nodes of earlier generations. A layered view of the DAG
+        (perfbench's per-layer figures read it); builds do not run by
+        generation. Raises ``ValueError`` on a dependency cycle."""
         names = set(subset) if subset is not None else set(self.nodes)
         indeg = {
             n: len(self.nodes[n].depends_on & names) for n in names

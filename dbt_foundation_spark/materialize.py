@@ -93,25 +93,26 @@ def _any_null(keys: list[str]):
     return cond
 
 
-def materialize(project: Project, node: Node, df: DataFrame) -> tuple[int | None, bool]:
-    """Execute one node's materialization. Returns (rows, persisted)."""
+def materialize(project: Project, node: Node, df: DataFrame) -> bool:
+    """Execute one node's materialization. Returns whether it persisted
+    a relation (False: the node stays a virtual, lazily recomputed
+    frame)."""
     mat = node.config.materialized
     if node.resource_type == "snapshot":
         mat = "snapshot"
     if mat == "ephemeral":
-        return None, False
+        return False
     if mat == "view":
         return _view(project, node, df)
     if mat == "table":
         _table(project, node, df)
-        return None, True
-    if mat == "incremental":
+    elif mat == "incremental":
         _incremental(project, node, df)
-        return None, True
-    if mat == "snapshot":
+    elif mat == "snapshot":
         _snapshot(project, node, df)
-        return None, True
-    raise ValueError(f"unknown materialization: {mat}")
+    else:
+        raise ValueError(f"unknown materialization: {mat}")
+    return True
 
 
 def _clear_stale_location(project: Project, rel: str) -> None:
@@ -201,7 +202,7 @@ def _writer(node: Node, df: DataFrame):
     return w
 
 
-def _view(project: Project, node: Node, df: DataFrame) -> tuple[int | None, bool]:
+def _view(project: Project, node: Node, df: DataFrame) -> bool:
     """Persistent catalog view for SQL-string models whose refs are all
     persisted relations (the compiled text is then self-contained —
     the reference's default materialization, dbt_project.yml:36).
@@ -215,8 +216,8 @@ def _view(project: Project, node: Node, df: DataFrame) -> tuple[int | None, bool
         project.spark.sql(
             f"CREATE OR REPLACE VIEW {project.relation_name(node)} AS {text}"
         )
-        return None, True
-    return None, False
+        return True
+    return False
 
 
 def _table(project: Project, node: Node, df: DataFrame) -> None:

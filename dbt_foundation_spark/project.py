@@ -10,8 +10,9 @@ Semantics preserved from the reference:
   to ``schema.alias`` in the session catalog, never a 3-part name.
 - schema-name policy (macros/overrides/generate_schema_name.sql:11-22):
   exactly ``config.schema or target.schema``, trimmed — no env prefixing.
-- DAG-parallel builds (profiles.example.yml:15): independent nodes run
-  on a thread pool (Spark schedules concurrent jobs from many threads).
+- DAG-parallel builds (profiles.example.yml:15): one thread pool per
+  invocation; a node starts as soon as its last parent has finished
+  (Spark schedules concurrent jobs from many threads).
 - per-query metadata tagging (yuki_snowflake_dbt_tags, packages.yml:2-3):
   every materialization action carries a JSON job description.
 """
@@ -23,8 +24,9 @@ import logging
 import re
 import time
 import uuid
-from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass, field
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
+from dataclasses import dataclass
+from graphlib import CycleError, TopologicalSorter
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,6 +35,7 @@ from dbt_foundation_spark.manifest import Manifest, Node, NodeConfig
 from dbt_foundation_spark.materialize import materialize
 from dbt_foundation_spark.session import check_codegen_cache, codegen_compiles
 from dbt_foundation_spark.sources.registry import SourceRegistry
+from dbt_foundation_spark.testing import declared_tests, evaluate
 
 logger = logging.getLogger("dbt_foundation_spark")
 
@@ -127,12 +130,11 @@ def _ephemeral_view(key: str) -> str:
 class Context:
     """Per-node execution context passed to model functions."""
 
-    def __init__(self, project: Project, node: Node, capture: bool = False):
+    def __init__(self, project: Project, node: Node):
         self.project = project
         self.node = node
         self.spark = project.spark
         self.target = project.target
-        self._capture = capture
 
     def ref(self, *args: str, version: int | None = None, v: int | None = None) -> DataFrame:
         """Resolve an upstream model by logical name (2-part semantics).
@@ -214,7 +216,7 @@ class Project:
         self.target = target or Target()
         self.vars = dict(vars or {})
         # dbt_project.yml on-run-start/end: SQL run once per invocation,
-        # before the first generation / after the last. ``{schema}``
+        # before the first node / after the last. ``{schema}``
         # resolves to the target schema (the common audit-table use).
         self.on_run_start = tuple(on_run_start)
         self.on_run_end = tuple(on_run_end)
@@ -312,11 +314,11 @@ class Project:
             if zorder_by:
                 cfg.extra["zorder_by"] = tuple(zorder_by)
             if not count_excluded_rows:
-                # r12 advice: node-level opt-out of the exclusion
-                # accounting pass for hot incremental models whose
-                # upstream plan is an expensive join/agg
-                # (materialize._drop_rows_loudly) — the contract
-                # filter still applies, only the count job is skipped
+                # node-level opt-out of the exclusion accounting pass,
+                # for hot incremental models whose upstream plan is an
+                # expensive join/agg (materialize._drop_rows_loudly) —
+                # the contract filter still applies, only the count job
+                # is skipped
                 cfg.extra["count_excluded_rows"] = False
             if event_time is not None:
                 # dbt 1.9 microbatch configs (materialize._microbatch)
@@ -339,6 +341,9 @@ class Project:
             )
             if node.sql is not None:
                 node.sql_refs = _parse_sql_refs(node.sql)
+            # a declared test build() cannot run fails here, before any
+            # model is materialized
+            declared_tests(node)
             self.manifest.add(node)
             if version is not None and latest_version:
                 self.manifest.set_latest_version(base, version, package)
@@ -365,10 +370,9 @@ class Project:
 
         ``encoding`` declares a non-UTF-8 file encoding (e.g.
         ``UTF-16``). Without it a UTF-16 seed parses as NUL-riddled
-        garbage that the loader's encoding gate refuses loudly
-        (r13 probe)."""
+        garbage that the loader's encoding gate refuses loudly."""
         # seeds are loader-managed exact files, so the write-literal/
-        # read-glob asymmetry applies (r13 review): a checked-in
+        # read-glob asymmetry applies: a checked-in
         # 'rates[2024].csv' would silently load sibling files as
         # configuration. External SOURCES and the streaming readers
         # deliberately keep glob semantics — they are read-only inputs
@@ -450,9 +454,12 @@ class Project:
         node = self.manifest[name]
         if name in self._materialized and node.config.materialized != "ephemeral":
             return self.spark.table(self.relation_name(node))
-        if name not in self._frames:
-            self._frames[name] = self.build_frame(node)
-        return self._frames[name]
+        # one lookup: the scheduling thread may drop a memoized frame
+        # while a pool thread reads it
+        df = self._frames.get(name)
+        if df is None:
+            df = self._frames[name] = self.build_frame(node)
+        return df
 
     def resolve_sql(self, node: Node) -> str:
         """Compile a SQL-string model: every ref() shape the function
@@ -514,7 +521,7 @@ class Project:
     def build_frame(self, node: Node) -> DataFrame:
         """Compile one node to a DataFrame (records edges as a side effect)."""
         if node.resource_type == "seed":
-            # mode=FAILFAST (r11 dirty-seed probe): seeds are small,
+            # mode=FAILFAST: seeds are small,
             # checked-in configuration tables that drive joins and
             # tests, and Spark's default PERMISSIVE parse silently
             # NULLs every malformed cell — a ragged line lost its
@@ -522,7 +529,7 @@ class Project:
             # relationship test (or nothing at all). A malformed seed
             # LINE is a source-control error and must fail the run
             # naming the record, matching dbt's own seed-parse
-            # behavior. Scope (r12 advice): on the no-column_types path
+            # behavior. Scope: on the no-column_types path
             # FAILFAST catches RAGGED lines only — inferSchema runs
             # first and WIDENS a mixed column ("three" in an int id
             # column) to string, so type errors there load silently as
@@ -531,10 +538,10 @@ class Project:
             # cell too. (This is a deliberate divergence from external
             # SOURCES, where dirty rows are expected at scale and
             # Source.options lets the declaration choose its mode.)
-            # multiLine (r13 probe): quoted newlines are LEGAL CSV, but
-            # the line-splitting parser hands FAILFAST half a record and
-            # a valid seed failed opaquely; multiLine parses the quoted
-            # field and ragged lines STILL fail loud (probed). Seeds are
+            # multiLine: quoted newlines are LEGAL CSV, but the
+            # line-splitting parser hands FAILFAST half a record and a
+            # valid seed fails opaquely; multiLine parses the quoted
+            # field and ragged lines STILL fail loud. Seeds are
             # small checked-in tables, so multiLine's single-split parse
             # costs nothing.
             reader = (
@@ -548,14 +555,14 @@ class Project:
             overrides = node.config.extra.get("column_types") or {}
 
             def _encoding_gate(df: DataFrame) -> DataFrame:
-                # r13 probe: a UTF-16 seed read as UTF-8 "succeeds" with
+                # a UTF-16 seed read as UTF-8 "succeeds" with
                 # NUL-riddled column names and values — silent garbage
                 # in a configuration table that drives joins and tests.
                 # Wide encodings surface in the HEADER (NULs), so the
                 # first check is driver-side on the column names; but a
                 # single-byte encoding (cp1252 'Müller' read as UTF-8)
-                # leaves ASCII headers clean and mangles only VALUES
-                # (r13 review), so string columns also get one
+                # leaves ASCII headers clean and mangles only VALUES, so
+                # string columns also get one
                 # replacement-char probe — seeds are small checked-in
                 # tables, the probe is one cheap filter+limit job.
                 bad = [
@@ -625,9 +632,16 @@ class Project:
             return self.spark.sql(self.resolve_sql(node))
         return node.fn(ctx)
 
-    def _capture_edges(self) -> None:
-        """Parse phase: build every model frame once so ref()/source()
-        calls register DAG edges (dbt's Jinja capture render)."""
+    def _parse(self) -> None:
+        """Parse phase: bind every SQL-string model's refs, then build
+        every model frame once so ref()/source() calls in Python models
+        register DAG edges (dbt's Jinja capture render)."""
+        for node in self.manifest.nodes.values():
+            if node.sql is not None:
+                try:
+                    self._bind_sql_refs(node)  # edges exist even if capture fails
+                except PermissionError:
+                    pass  # access violation re-raises attributed at execute
         for node in self.manifest.nodes.values():
             if node.name not in self._frames and node.resource_type not in (
                 "test",
@@ -676,7 +690,7 @@ class Project:
                 from dbt_foundation_spark import contracts
 
                 contracts.enforce(node, df)
-            rows, persisted = materialize(self, node, df)
+            persisted = materialize(self, node, df)
             for hook in node.config.post_hook:
                 self.spark.sql(hook.replace("{this}", self.relation_name(node)))
             if persisted:
@@ -684,10 +698,19 @@ class Project:
                 self._frames.pop(node.name, None)  # consumers read the relation
             else:
                 self._frames[node.name] = df  # virtual: lazy recompute-on-read
-            return RunResult(node.name, "success", rows, time.perf_counter() - t0)
+            return RunResult(node.name, "success", None, time.perf_counter() - t0)
         except Exception as e:  # noqa: BLE001 — attributed per-node like dbt
             logger.exception("node %s failed", node.name)
             return RunResult(node.name, "error", None, time.perf_counter() - t0, str(e))
+
+    def _step(self, node: Node, gate_tests: bool) -> list[RunResult]:
+        """One pool task: the node, then, under ``build``, its declared
+        tests on the same thread — so the tests' jobs carry the node's
+        job group, and they run while unrelated nodes build."""
+        res = self._execute_node(node)
+        if gate_tests and res.status == "success":
+            return [res, *self._run_node_tests(node)]
+        return [res]
 
     def run(
         self,
@@ -699,7 +722,12 @@ class Project:
         event_time_end: str | None = None,
         gate_tests: bool = False,
     ) -> list[RunResult]:
-        """Build the DAG: topo generations, each on a thread pool.
+        """Build the DAG on one pool of ``target.threads`` threads: each
+        node is submitted as soon as its last selected parent has
+        finished (dbt-core's graph queue). A node that fails — or, under
+        ``build``, whose declared test fails — skips every selected node
+        downstream of it. A dependency cycle is refused before any node
+        runs.
 
         ``select`` (a literal node-name set) keeps its historical
         contract: the named nodes AND their downstream run. ``selector``
@@ -722,13 +750,7 @@ class Project:
         for hook in self.on_run_start:
             # dbt: an on-run-start failure aborts the invocation
             self.spark.sql(hook.replace("{schema}", self.target.schema))
-        for node in self.manifest.nodes.values():
-            if node.sql is not None:
-                try:
-                    self._bind_sql_refs(node)  # edges exist even if capture fails
-                except PermissionError:
-                    pass  # access violation re-raises attributed at execute
-        self._capture_edges()
+        self._parse()
         runnable = {
             n.name
             for n in self.manifest.nodes.values()
@@ -742,54 +764,50 @@ class Project:
             from dbt_foundation_spark.selectors import select_nodes
 
             runnable &= select_nodes(self, selector, exclude=exclude, state=state)
+        graph = TopologicalSorter(
+            {n: self.manifest[n].depends_on & runnable for n in runnable}
+        )
+        try:
+            graph.prepare()  # before any node runs
+        except CycleError as e:
+            raise ValueError(f"dependency cycle among: {sorted(set(e.args[1]))}") from None
         results: list[RunResult] = []
         failed: set[str] = set()
-        for gen in self.manifest.topo_generations(runnable):
-            todo = [n for n in gen if not (n.depends_on & failed)]
-            results.extend(
-                RunResult(n.name, "skipped", message="upstream failure")
-                for n in gen
-                if n.depends_on & failed
-            )
-            failed.update(r.node for r in results if r.status == "skipped")
-            if not todo:
-                continue
-            gen_res: list[RunResult] = []
-            with ThreadPoolExecutor(max_workers=self.target.threads) as pool:
-                for res in pool.map(self._execute_node, todo):
-                    results.append(res)
-                    gen_res.append(res)
-                    if res.status == "error":
-                        failed.add(res.node)
-            # Capture-phase frames downstream of a node persisted this
-            # generation embed a STALE view of it: on first
-            # materialization, its pre-materialization frame (an
-            # incremental's delta batch, a snapshot's raw input without
-            # dbt_valid_* columns); on a REBUILD, a resolved scan whose
-            # file index points at the swapped-away files (the staging
-            # swap deletes them → FAILED_READ_FILE). Invalidate
-            # downstream of every node persisted this generation, new
-            # or rebuilt, so later generations re-resolve the relation.
-            persisted_now = {
-                r.node
-                for r in gen_res
-                if r.status == "success" and r.node in self._materialized
-            }
-            if persisted_now:
-                for name in self.manifest.downstream(persisted_now) - persisted_now:
-                    self._frames.pop(name, None)
-            if gate_tests:
-                # dbt build: a model's declared tests run right after it
-                # builds; a failing test poisons the node so dependents
-                # skip — bad data never propagates down the DAG
-                ok = {r.node for r in results if r.status == "success"}
-                for n in todo:
-                    if n.name not in ok:
-                        continue
-                    for res in self._run_node_tests(n):
-                        results.append(res)
-                        if res.status == "test_fail":
-                            failed.add(n.name)
+        with ThreadPoolExecutor(max_workers=self.target.threads) as pool:
+            running: dict[Future, str] = {}
+            while graph.is_active():
+                for name in sorted(graph.get_ready()):
+                    node = self.manifest[name]
+                    if node.depends_on & failed:
+                        failed.add(name)
+                        results.append(RunResult(name, "skipped", message="upstream failure"))
+                        graph.done(name)
+                    else:
+                        running[pool.submit(self._step, node, gate_tests)] = name
+                done, _ = wait(running, return_when=FIRST_COMPLETED)
+                for fut in done:
+                    name = running.pop(fut)
+                    step = fut.result()
+                    results.extend(step)
+                    if step[0].status == "success" and name in self._materialized:
+                        # Capture-phase frames downstream of a persisted
+                        # node embed a STALE view of it: on first
+                        # materialization, its pre-materialization frame
+                        # (an incremental's delta batch, a snapshot's raw
+                        # input without dbt_valid_* columns); on a
+                        # REBUILD, a resolved scan whose file index points
+                        # at the swapped-away files (the staging swap
+                        # deletes them → FAILED_READ_FILE). Drop them
+                        # before any consumer is released, so consumers
+                        # re-resolve the relation.
+                        for d in self.manifest.downstream({name}) - {name}:
+                            self._frames.pop(d, None)
+                    if any(r.status in ("error", "test_fail") for r in step):
+                        # dbt build: a failing test poisons the node like
+                        # an error, so bad data never propagates down the
+                        # DAG
+                        failed.add(name)
+                    graph.done(name)
         for hook in self.on_run_end:
             self.spark.sql(hook.replace("{schema}", self.target.schema))
         compiled, compile_ms = codegen_compiles(self.spark)
@@ -803,13 +821,7 @@ class Project:
         """``dbt ls``: resource names matching a selector expression
         (full --select grammar, selectors.py), sorted; all models/
         seeds/snapshots when no selector is given."""
-        for node in self.manifest.nodes.values():
-            if node.sql is not None:
-                try:
-                    self._bind_sql_refs(node)
-                except PermissionError:
-                    pass
-        self._capture_edges()  # graph selectors need edges; builds nothing
+        self._parse()  # graph selectors need edges; builds nothing
         names = {
             n.name
             for n in self.manifest.nodes.values()
@@ -824,34 +836,21 @@ class Project:
     def _run_node_tests(self, node: Node) -> list[RunResult]:
         """Declared column tests for one node (``dbt build``'s
         interleaved test step). Returns one RunResult per test:
-        ``test_pass`` or ``test_fail`` with the violation count."""
-        from dbt_foundation_spark.testing import not_null, unique
-
-        core = {"unique": unique, "not_null": not_null}
+        ``test_pass``, or ``test_fail`` with the violation count (or
+        the error message)."""
         out: list[RunResult] = []
-        for col, meta in node.columns.items():
-            for tname in meta.get("tests", ()):
-                fn = core.get(tname)
-                if fn is None:
-                    continue  # non-core names run via run_tests/specs
-                t0 = time.perf_counter()
-                label = f"{node.name}.{tname}({col})"
-                try:
-                    violations = fn(col)(self._node_frame(node.name))
-                    n = 0 if violations.isEmpty() else violations.count()
-                    out.append(
-                        RunResult(
-                            label,
-                            "test_fail" if n else "test_pass",
-                            n or None,
-                            time.perf_counter() - t0,
-                        )
-                    )
-                except Exception as e:  # noqa: BLE001
-                    out.append(
-                        RunResult(label, "test_fail", None,
-                                  time.perf_counter() - t0, str(e))
-                    )
+        for label, fn in declared_tests(node):
+            t0 = time.perf_counter()
+            res, _ = evaluate(self, node.name, label, fn)
+            out.append(
+                RunResult(
+                    f"{node.name}.{label}",
+                    "test_pass" if res.status == "pass" else "test_fail",
+                    res.failures or None,
+                    time.perf_counter() - t0,
+                    res.message,
+                )
+            )
         return out
 
     def build(self, **kwargs) -> list[RunResult]:

@@ -12,6 +12,7 @@ user) can inspect failures, and ``.isEmpty()`` is the pass check
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass
 from typing import Callable
 
@@ -248,6 +249,59 @@ class TestResult:
     message: str = ""
 
 
+_CORE_TESTS = {"unique": unique, "not_null": not_null}
+
+
+def declared_tests(node) -> list[tuple[str, TestFn]]:
+    """A model's column-declared tests (``columns={col: {"tests": [...]}}``)
+    as ``(label, test)`` pairs, labelled ``name(col)``.
+
+    Only the argument-free core tests can be declared on a column; any
+    other entry raises ``ValueError`` naming the model, the column and
+    the test. A parameterized test (``accepted_values``, ...) needs its
+    arguments, so it runs as a :class:`TestSpec` through
+    :func:`run_configured_tests`."""
+    out: list[tuple[str, TestFn]] = []
+    for col, meta in node.columns.items():
+        for t in meta.get("tests") or ():
+            fn = _CORE_TESTS.get(t) if isinstance(t, str) else None
+            if fn is None:
+                raise ValueError(
+                    f"model {node.name}, column {col}: declared test {t!r} is "
+                    f"not one of {sorted(_CORE_TESTS)}; declare a parameterized "
+                    "test as a TestSpec and run it with run_configured_tests"
+                )
+            out.append((f"{t}({col})", fn(col)))
+    return out
+
+
+def evaluate(
+    project, model: str, label: str, fn: TestFn, limit: int | None = None
+) -> tuple[TestResult, DataFrame | None]:
+    """Run one test: ``fn``'s violations over ``model``'s frame, counted.
+
+    ``model`` is a node key, or ``source:<source_name>.<table>`` for
+    dbt tests on SOURCES (schema.yml under sources:), which resolves
+    through the registry instead of the model DAG. ``isEmpty()`` stops
+    at the first violating row, so a passing test never pays
+    ``count()``. Returns the result (``pass``/``fail`` with the
+    violation count, or ``error`` with the message of whatever raised)
+    and the violations frame (None on error)."""
+    try:
+        if model.startswith("source:"):
+            src, tbl = model[len("source:"):].split(".", 1)
+            df = project.sources.load(project.spark, src, tbl)
+        else:
+            df = project._node_frame(model)
+        violations = fn(df)
+        if limit is not None:
+            violations = violations.limit(limit)
+        n = 0 if violations.isEmpty() else violations.count()
+    except Exception as e:  # noqa: BLE001 — reported per test like dbt
+        return TestResult(model, label, "error", message=str(e)), None
+    return TestResult(model, label, "fail" if n else "pass", n), violations
+
+
 def run_tests(
     project,
     tests: dict[str, dict[str, list[TestFn]]] | None = None,
@@ -255,47 +309,28 @@ def run_tests(
     """Execute declared column tests against materialized relations.
 
     ``tests``: {model_name: {test_label: [TestFn, ...]}}; when None, uses
-    tests attached via ``Node.columns`` metadata.
+    every model's :func:`declared_tests`.
     """
-    results: list[TestResult] = []
-    plan: list[tuple[str, str, TestFn]] = []
     if tests:
-        for model, by_label in tests.items():
-            for label, fns in by_label.items():
-                for fn in fns:
-                    plan.append((model, label, fn))
+        plan = [
+            (model, label, fn)
+            for model, by_label in tests.items()
+            for label, fns in by_label.items()
+            for fn in fns
+        ]
     else:
-        for node in project.manifest.models():
-            for col, meta in node.columns.items():
-                for tname in meta.get("tests", ()):  # names of core tests
-                    fn = {"unique": unique, "not_null": not_null}[tname](col)
-                    plan.append((node.name, f"{tname}({col})", fn))
-
-    for model, label, fn in plan:
-        try:
-            if model.startswith("source:"):
-                # dbt tests on SOURCES (schema.yml under sources:) —
-                # key 'source:<source_name>.<table>' resolves through
-                # the registry instead of the model DAG
-                src, tbl = model[len("source:"):].split(".", 1)
-                df = project.sources.load(project.spark, src, tbl)
-            else:
-                df = project._node_frame(model)
-            violations = fn(df)
-            failed = not violations.isEmpty()
-            n = violations.count() if failed else 0
-            results.append(
-                TestResult(model, label, "fail" if failed else "pass", n)
-            )
-        except Exception as e:  # noqa: BLE001
-            results.append(TestResult(model, label, "error", message=str(e)))
-    return results
+        plan = [
+            (node.name, label, fn)
+            for node in project.manifest.models()
+            for label, fn in declared_tests(node)
+        ]
+    return [evaluate(project, model, label, fn)[0] for model, label, fn in plan]
 
 
 # ---------- configured runs: severity / thresholds / store_failures ----------
 
 
-_CMP_RE = __import__("re").compile(r"^\s*(!=|>=|<=|>|<|=)\s*(\d+)\s*$")
+_CMP_RE = re.compile(r"^\s*(!=|>=|<=|>|<|=)\s*(\d+)\s*$")
 
 
 def _threshold_met(condition: str, failures: int) -> bool:
@@ -338,29 +373,26 @@ def run_configured_tests(project, specs: list[TestSpec]) -> list[TestResult]:
     """Execute TestSpecs with dbt severity semantics: count violations,
     then status = error if (severity=error and error_if met), else warn
     if warn_if met, else pass."""
-    import re as _re
-
     results: list[TestResult] = []
     for s in specs:
-        try:
-            violations = s.fn(project._node_frame(s.model))
-            if s.limit is not None:
-                violations = violations.limit(s.limit)
-            n = 0 if violations.isEmpty() else violations.count()
-            if s.severity == "error" and _threshold_met(s.error_if, n):
-                status = "fail"
-            elif _threshold_met(s.warn_if, n):
-                status = "warn"
-            else:
-                status = "pass"
-            if s.store_failures and n:
-                safe = _re.sub(r"\W+", "_", f"{s.model}__{s.label}")
-                rel = f"{project.target.schema}.test_failures__{safe}"
-                project.spark.sql(
-                    f"CREATE DATABASE IF NOT EXISTS {project.target.schema}"
-                )
-                violations.write.mode("overwrite").saveAsTable(rel)
-            results.append(TestResult(s.model, s.label, status, n))
-        except Exception as e:  # noqa: BLE001
-            results.append(TestResult(s.model, s.label, "error", message=str(e)))
+        res, violations = evaluate(project, s.model, s.label, s.fn, s.limit)
+        if res.status != "error":
+            n = res.failures
+            try:
+                if s.severity == "error" and _threshold_met(s.error_if, n):
+                    res.status = "fail"
+                elif _threshold_met(s.warn_if, n):
+                    res.status = "warn"
+                else:
+                    res.status = "pass"
+                if s.store_failures and n:
+                    safe = re.sub(r"\W+", "_", f"{s.model}__{s.label}")
+                    rel = f"{project.target.schema}.test_failures__{safe}"
+                    project.spark.sql(
+                        f"CREATE DATABASE IF NOT EXISTS {project.target.schema}"
+                    )
+                    violations.write.mode("overwrite").saveAsTable(rel)
+            except Exception as e:  # noqa: BLE001
+                res = TestResult(s.model, s.label, "error", message=str(e))
+        results.append(res)
     return results

@@ -3,6 +3,7 @@ ops — the reference's behavioral contract (SURVEY.md §2.A/§2.I/§5)."""
 
 from __future__ import annotations
 
+import sys
 import uuid
 
 import pytest
@@ -1620,6 +1621,117 @@ def test_retry_after_build_regates_tests(project, spark):
     assert spark.table(
         project.relation_name(project.manifest["rb_down"])
     ).count() == 2
+
+
+@pytest.mark.parametrize(
+    "declared", ["accepted_values", {"accepted_values": {"values": [1, 2]}}]
+)
+def test_declared_parameterized_test_refused_at_registration(project, spark, declared):
+    """A column can declare only unique/not_null: any other test (string
+    or dict form) is refused when the model registers, naming the model,
+    the column and the test — never skipped by build() or left to crash
+    run_tests() after the model was materialized."""
+    with pytest.raises(
+        ValueError, match=r"model pv_bad, column id: .*accepted_values.*TestSpec"
+    ):
+
+        @project.model(
+            materialized="table",
+            columns={"id": {"tests": ["unique", declared]}},
+        )
+        def pv_bad(ctx):
+            return spark.sql("SELECT 1 AS id")
+
+    assert "pv_bad" not in project.manifest
+    assert T.run_tests(project) == []
+
+
+def test_build_runs_declared_tests_in_node_job_group(project, spark):
+    """build() runs a node's declared tests on the node's pool thread,
+    so their jobs carry the invocation's job group; the calling thread's
+    group gets no job (these models run none while planning)."""
+
+    @project.model(
+        materialized="table",
+        columns={"id": {"tests": ["unique", "not_null"]}},
+    )
+    def jg_a(ctx):
+        return spark.sql("SELECT 1 AS id UNION ALL SELECT 2")
+
+    @project.model(materialized="table", columns={"id": {"tests": ["unique"]}})
+    def jg_b(ctx):
+        return ctx.ref("jg_a")
+
+    sc = spark.sparkContext
+    sentinel = f"sentinel_{uuid.uuid4().hex[:8]}"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup(sentinel, "calling thread")
+    try:
+        res = project.build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    assert {r.node: r.status for r in res} == {
+        "jg_a": "success",
+        "jg_a.unique(id)": "test_pass",
+        "jg_a.not_null(id)": "test_pass",
+        "jg_b": "success",
+        "jg_b.unique(id)": "test_pass",
+    }
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    st = sc.statusTracker()
+    assert list(st.getJobIdsForGroup(sentinel)) == []
+    # two table writes and three tests, each at least one job
+    assert len(st.getJobIdsForGroup(project.invocation_id)) >= 5
+
+
+def test_run_refuses_dependency_cycle(project, spark):
+    """Two models that ref() each other: run() refuses the cycle, naming
+    both, before any node runs."""
+    project.model("SELECT * FROM ref('cy_b')", name="cy_a", materialized="table")
+    project.model("SELECT * FROM ref('cy_a')", name="cy_b", materialized="table")
+    with pytest.raises(ValueError, match=r"dependency cycle among: \['cy_a', 'cy_b'\]"):
+        project.run()
+    for name in ("cy_a", "cy_b"):
+        assert not spark.catalog.tableExists(project.relation_name(project.manifest[name]))
+
+
+def test_build_ready_queue_under_thread_churn(project, spark):
+    """A wide fan-out/fan-in DAG on more pool threads than cores, with
+    rapid thread switching: every node runs exactly once, after its
+    parents, and the fan-in sees every branch's rows."""
+    project.target.threads = 16
+
+    @project.model(materialized="table")
+    def rq_src(ctx):
+        return spark.range(40)
+
+    for i in range(12):
+
+        @project.model(name=f"rq_branch_{i:02d}")
+        def rq_branch(ctx, i=i):
+            return ctx.ref("rq_src").filter(F.col("id") % 12 == i)
+
+    @project.model(materialized="table", columns={"id": {"tests": ["unique", "not_null"]}})
+    def rq_sink(ctx):
+        frames = [ctx.ref(f"rq_branch_{i:02d}") for i in range(12)]
+        out = frames[0]
+        for f in frames[1:]:
+            out = out.unionByName(f)
+        return out
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        res = project.build()
+    finally:
+        sys.setswitchinterval(interval)
+    nodes = [r.node for r in res]
+    assert len(nodes) == len(set(nodes)) == 16  # 14 nodes + 2 tests
+    assert all(r.status in ("success", "test_pass") for r in res)
+    assert nodes.index("rq_src") < min(nodes.index(f"rq_branch_{i:02d}") for i in range(12))
+    assert nodes.index("rq_sink") > max(nodes.index(f"rq_branch_{i:02d}") for i in range(12))
+    rel = project.relation_name(project.manifest["rq_sink"])
+    assert spark.table(rel).count() == 40
 
 
 def test_source_level_tests(project, spark):
