@@ -1,7 +1,17 @@
 """Materialization strategies on plain Parquet tables (no Delta in env).
 
 The reference's surface (SURVEY.md §2.A B1-B5): view, table, ephemeral,
-incremental (append / insert_overwrite / merge), snapshot (SCD2).
+incremental (append / insert_overwrite / merge / delete+insert /
+microbatch), snapshot (SCD2).
+
+Every strategy runs one write path (:func:`materialize`):
+
+1. resolve the existing relation once, dropping one of the other kind
+   first (a view where a table goes, or the reverse), as dbt does —
+   Spark refuses to replace one kind with the other;
+2. apply the node's identity gate once (:func:`_identity_gate`);
+3. with no table yet, bootstrap through :func:`_create`;
+4. otherwise run the strategy's update.
 
 Scale notes:
 - ``table`` is CTAS: one write job, partitioned by ``config.partition_by``
@@ -26,53 +36,41 @@ if TYPE_CHECKING:  # pragma: no cover
 
 SNAPSHOT_META = ("dbt_scd_id", "dbt_valid_from", "dbt_valid_to")
 
+BATCH_COL = "dbt_event_batch"
+
+_BATCH_FMT = {  # lexicographic == chronological within each unit
+    "hour": "yyyy-MM-dd HH",
+    "day": "yyyy-MM-dd",
+    "month": "yyyy-MM",
+    "year": "yyyy",
+}
+
 
 def _drop_rows_loudly(
-    df: DataFrame, cond, node_name: str, what: str,
-    probe_cols: list[str] | None = None,
-    accounted: bool = True,
+    df: DataFrame, cond, node_name: str, what: str, probe_cols: list[str]
 ) -> DataFrame:
-    """Exclude contract-violating rows (NULL unique keys, NULL event
-    times) with ACCOUNTING: the excluded count is measured and logged
-    as a warning when non-zero, mirroring the IVF quarantine
-    accounting — the repo's no-silent-caps rule (r12, from the r11
-    advice). Pre-fix these filters shrank the model silently: an
-    upstream bug emitting many NULL keys looked like a successful run.
+    """Exclude the rows matching ``cond`` (contract violations: NULL
+    unique keys, NULL event times), counting them first and logging a
+    warning when any were excluded — the no-silent-caps rule the dedup
+    operators follow with their quarantine counts. Without the count an
+    upstream bug emitting many NULL keys would look like a successful
+    run that merely shrank the model.
 
-    Cost (honest version, r12 review; measured r13): the count
-    RE-EXECUTES the upstream model plan once — IsNull pushdown prunes
-    the final scan, not upstream joins/aggregations. ``probe_cols``
-    prunes that second execution to the condition's columns (Catalyst
-    column pruning trims every upstream projection to what the keys
-    need). Measured on idle at sf0.1 (r13 adjudication, SCALING.md):
-    ~9% of q_snapshot_scd2's warm wall, unmeasurable on
-    q_incremental_microbatch — the accepted price of never shrinking a
-    model silently. The write path already executes the model 2-3×
-    (the merge plan reads the batch twice); the alternatives each fail
-    worse: ``observe()`` metrics double-count when the batch subtree
-    appears twice in one plan (exactly the merge shape), and pinning
-    the batch materializes day-scale data per run. Streaming-bridge
-    batches arrive pinned, so there the pass is batch-sized regardless.
-
-    ``accounted=False`` (node config ``count_excluded_rows: false``,
-    r12 advice) skips the count for hot incremental models whose
-    upstream plan is an expensive join/agg: the contract filter still
-    applies, but exclusions are no longer counted — the node opts back
-    into silent shrinkage knowingly, and the opt-out itself is logged
-    once per run so a reader of the logs knows counting was off, not
-    zero."""
+    Cost: the count re-executes the model plan once; IsNull pushdown
+    prunes the final scan, not upstream joins or aggregations.
+    ``probe_cols`` prunes that second execution to the condition's
+    columns (Catalyst trims every upstream projection to what the keys
+    need). Measured on an idle machine at sf0.1 (SCALING.md): ~9 % of
+    q_snapshot_scd2's warm wall, unmeasurable on
+    q_incremental_microbatch — the price of never shrinking a model
+    silently. The alternatives cost more: ``observe()`` metrics
+    double-count when the batch subtree appears twice in one plan
+    (exactly the merge shape), and pinning the batch materializes
+    day-scale data per run. Streaming-bridge batches arrive pinned, so
+    there the pass is batch-sized regardless."""
     import logging
 
-    if not accounted:
-        logging.getLogger("dbt_foundation_spark").info(
-            "%s: count_excluded_rows=false — %s row(s) are excluded "
-            "WITHOUT accounting on this node",
-            node_name,
-            what,
-        )
-        return df.filter(~cond)
-    probe = df.select(*probe_cols) if probe_cols else df
-    dropped = probe.filter(cond).count()
+    dropped = df.select(*probe_cols).filter(cond).count()
     if dropped:
         logging.getLogger("dbt_foundation_spark").warning(
             "%s: excluded %d %s row(s) — no stable identity/time means "
@@ -86,6 +84,11 @@ def _drop_rows_loudly(
     return df.filter(~cond)
 
 
+def _keys(node: Node) -> list[str]:
+    keys = node.config.unique_key
+    return [keys] if isinstance(keys, str) else list(keys or ())
+
+
 def _any_null(keys: list[str]):
     cond = F.lit(False)
     for k in keys:
@@ -93,25 +96,64 @@ def _any_null(keys: list[str]):
     return cond
 
 
+def _identity_gate(node: Node, strategy: str, df: DataFrame) -> DataFrame:
+    """Step 2 of the write path: exclude, loudly, the rows the strategy
+    cannot place, at the bootstrap as on every later run (a row let in
+    once at the bootstrap is never removed by a later run's filter).
+
+    - merge, delete+insert, snapshot: rows with a NULL unique key.
+      NULL never equals NULL, so MERGE semantics re-insert such a row on
+      every run (unbounded growth that looks successful), and each
+      snapshot run opens another version for the same unknown entity,
+      breaking the one-open-row-per-key invariant later runs build on.
+    - microbatch: rows with a NULL (or uncastable) event time. A row at
+      an unknown time belongs to no batch, the contract the stateful
+      sessionizers follow; let in, it lands in
+      ``__HIVE_DEFAULT_PARTITION__`` when no ``begin`` bounds the build,
+      and no later window can rebuild or clear it (NULL fails every
+      window comparison).
+
+    Route such rows explicitly upstream (e.g. an append-strategy
+    dead-letter model) if they must be kept."""
+    if strategy == "microbatch":
+        event_time = node.config.extra.get("event_time")
+        if not event_time:
+            raise ValueError(f"{node.name}: microbatch requires event_time=")
+        return _drop_rows_loudly(
+            df, F.col(event_time).cast("timestamp").isNull(), node.name,
+            f"NULL/uncastable {event_time} event-time", [event_time],
+        )
+    keys = _keys(node)
+    if strategy in ("merge", "delete+insert", "snapshot") and keys:
+        return _drop_rows_loudly(df, _any_null(keys), node.name, "NULL unique-key", keys)
+    return df
+
+
 def materialize(project: Project, node: Node, df: DataFrame) -> bool:
-    """Execute one node's materialization. Returns whether it persisted
-    a relation (False: the node stays a virtual, lazily recomputed
-    frame)."""
-    mat = node.config.materialized
-    if node.resource_type == "snapshot":
-        mat = "snapshot"
+    """Execute one node's materialization through the one write path
+    (module docstring). Returns whether it persisted a relation (False:
+    the node stays a virtual, lazily recomputed frame)."""
+    mat = "snapshot" if node.resource_type == "snapshot" else node.config.materialized
     if mat == "ephemeral":
         return False
-    if mat == "view":
-        return _view(project, node, df)
-    if mat == "table":
-        _table(project, node, df)
-    elif mat == "incremental":
-        _incremental(project, node, df)
-    elif mat == "snapshot":
-        _snapshot(project, node, df)
-    else:
+    if mat not in ("view", "table", "incremental", "snapshot"):
         raise ValueError(f"unknown materialization: {mat}")
+    rel = project.relation_name(node)
+    exists = project._drop_relation(rel, keep="VIEW" if mat == "view" else "TABLE")
+    if mat == "view":
+        return _view(project, node, rel)
+    strategy = node.config.incremental_strategy if mat == "incremental" else mat
+    df = _identity_gate(node, strategy, df)
+    if strategy == "microbatch":
+        _microbatch(project, node, rel, df, exists)
+    elif strategy == "snapshot":
+        _snapshot(project, node, rel, df, exists)
+    elif not exists:
+        _create(project, node, rel, df)
+    elif strategy == "table":
+        _swap_in(project, rel, df, node)
+    else:
+        _incremental(project, node, rel, df)
     return True
 
 
@@ -126,12 +168,11 @@ def _clear_stale_location(project: Project, rel: str) -> None:
     trustworthy when the catalog itself is ephemeral): act only for the
     in-memory catalog — against Hive/persistent metastores a transient
     catalog miss, an external table parked at the default managed
-    location, or another catalog's table would make this destructive —
-    unless the user explicitly opts in via
-    ``spark.dbt_foundation.clearStaleLocations=true``. And never
-    delete: the orphan directory is renamed aside (``<name>._stale_*``)
-    so a wrong call is recoverable, and rename failures surface instead
-    of being swallowed. No-ops for non-local warehouses."""
+    location, or another catalog's table would make this destructive.
+    And never delete: the orphan directory is renamed aside
+    (``<name>._stale_*``) so a wrong call is recoverable, and rename
+    failures surface instead of being swallowed. No-ops for non-local
+    warehouses."""
     import uuid
     from pathlib import Path
     from urllib.parse import urlparse
@@ -144,8 +185,7 @@ def _clear_stale_location(project: Project, rel: str) -> None:
         except Exception:
             return default
 
-    opted_in = _conf("spark.dbt_foundation.clearStaleLocations", "false") == "true"
-    if _conf("spark.sql.catalogImplementation", "in-memory") != "in-memory" and not opted_in:
+    if _conf("spark.sql.catalogImplementation", "in-memory") != "in-memory":
         return
     uri = urlparse(_conf("spark.sql.warehouse.dir", ""))
     if uri.scheme not in ("", "file") or not uri.path:
@@ -158,19 +198,39 @@ def _clear_stale_location(project: Project, rel: str) -> None:
         loc.rename(loc.with_name(f"{loc.name}._stale_{uuid.uuid4().hex[:8]}"))
 
 
+def _create(project: Project, node: Node, rel: str, rows: DataFrame) -> None:
+    """Bootstrap ``rel`` from ``rows`` in the node's layout (CTAS): the
+    one table creation of every strategy, the staging write of
+    :func:`_swap_in` and ``Project.clone_from(full_copy=True)``."""
+    _clear_stale_location(project, rel)
+    _writer(node, rows).mode("overwrite").saveAsTable(rel)
+
+
+def _partition_cols(node: Node) -> tuple[str, ...]:
+    """The node's table partitioning: ``partition_by``, then the batch
+    column for microbatch models (a period rebuild is partition DDL)."""
+    cols = tuple(node.config.partition_by)
+    if (node.config.materialized, node.config.incremental_strategy) == (
+        "incremental", "microbatch"
+    ):
+        cols += (BATCH_COL,)
+    return cols
+
+
 def _writer(node: Node, df: DataFrame):
-    if node.config.partition_by and not node.config.bucket_by:
+    part = _partition_cols(node)
+    if part and not node.config.bucket_by:
         # hash-cluster by the partition columns before a partitioned
         # write (guide §6: REBALANCE before the write): without it every
         # writer task opens a file in EVERY partition directory it sees
         # — locally a single-split model wrote all N directories from
-        # one task, serially (measured r13: the microbatch CTAS spent
-        # 0.5 s in a 1-task write); at 100 TB the same shape is the
-        # classic tasks×partitions small-files explosion. REBALANCE is
+        # one task, serially (a microbatch CTAS spent 0.5 s in a 1-task
+        # write); at 100 TB the same shape is the classic
+        # tasks×partitions small-files explosion. REBALANCE is
         # AQE-managed: it targets the advisory size and SPLITS a skewed
         # partition value across tasks, so one giant day cannot
         # serialize the write the way a plain repartition(cols) would.
-        df = df.hint("rebalance", *node.config.partition_by)
+        df = df.hint("rebalance", *part)
     zcols = node.config.extra.get("zorder_by")
     if zcols and not node.config.bucket_by:
         # multi-dimensional clustering: sort inside each task's output
@@ -191,8 +251,8 @@ def _writer(node: Node, df: DataFrame):
         # the layout knob for UNbucketed tables.
         df = df.sortWithinPartitions(*node.config.cluster_by)
     w = df.write.format("parquet")
-    if node.config.partition_by:
-        w = w.partitionBy(*node.config.partition_by)
+    if part:
+        w = w.partitionBy(*part)
     if node.config.bucket_by and node.config.buckets:
         # bucket-pruned scans + shuffle-free equi-joins/aggs between
         # tables bucketed the same way on the same keys — the canonical
@@ -202,7 +262,7 @@ def _writer(node: Node, df: DataFrame):
     return w
 
 
-def _view(project: Project, node: Node, df: DataFrame) -> bool:
+def _view(project: Project, node: Node, rel: str) -> bool:
     """Persistent catalog view for SQL-string models whose refs are all
     persisted relations (the compiled text is then self-contained —
     the reference's default materialization, dbt_project.yml:36).
@@ -212,23 +272,9 @@ def _view(project: Project, node: Node, df: DataFrame) -> bool:
     if node.sql is not None and all(
         dep in project._materialized for dep in node.depends_on
     ):
-        text = project.resolve_sql(node)
-        project.spark.sql(
-            f"CREATE OR REPLACE VIEW {project.relation_name(node)} AS {text}"
-        )
+        project.spark.sql(f"CREATE OR REPLACE VIEW {rel} AS {project.resolve_sql(node)}")
         return True
     return False
-
-
-def _table(project: Project, node: Node, df: DataFrame) -> None:
-    """Full-rebuild CTAS (config(materialized='table'),
-    models/example/my_first_dbt_model.sql:10)."""
-    rel = project.relation_name(node)
-    if project.spark.catalog.tableExists(rel):
-        _swap_in(project, rel, df, node)
-    else:
-        _clear_stale_location(project, rel)
-        _writer(node, df).mode("overwrite").saveAsTable(rel)
 
 
 def _align(df: DataFrame, target_schema) -> DataFrame:
@@ -284,36 +330,33 @@ def _evolved_schema(project: Project, node: Node, rel: str, df: DataFrame):
     raise ValueError(f"unknown on_schema_change policy: {policy}")
 
 
-BATCH_COL = "dbt_event_batch"
-
-_BATCH_FMT = {  # lexicographic == chronological within each unit
-    "hour": "yyyy-MM-dd HH",
-    "day": "yyyy-MM-dd",
-    "month": "yyyy-MM",
-    "year": "yyyy",
-}
-
-
-def _microbatch(project: Project, node: Node, df: DataFrame) -> None:
+def _microbatch(
+    project: Project, node: Node, rel: str, df: DataFrame, exists: bool
+) -> None:
     """dbt 1.9's microbatch incremental strategy, on plain parquet.
 
     The model's frame is split into ``batch_size`` periods of its
     ``event_time`` column; each run (re)builds only the periods in its
     processing window and leaves every other period untouched. The
     engine adds a STRING partition column ``dbt_event_batch``
-    (``date_format(date_trunc(batch_size, event_time))``) so a period
-    rebuild is partition DDL + a bounded append — never a table rewrite:
+    (``date_format(date_trunc(batch_size, event_time))``), the last
+    partition column after ``partition_by``, so a period rebuild is
+    partition DDL + a bounded append — never a table rewrite:
 
     - initial build: everything from ``begin`` (dbt's required anchor)
       partitioned by batch.
     - incremental run: window start = (max landed batch − ``lookback``
       periods) — dbt's late-arrival allowance — or the explicit
       ``event_time_start`` passed to :meth:`Project.run`; window end =
-      explicit ``event_time_end`` or open. Affected partitions (existing
-      ∪ arriving, inside the window) are DROPped, then the filtered
-      frame is appended. A window period whose restated source is now
+      explicit ``event_time_end`` or open. The landed partitions inside
+      the window are DROPped, then the frame, filtered to the same
+      window, is appended. A window period whose restated source is now
       empty is therefore genuinely cleared, matching dbt's
       rebuild-from-source semantics.
+
+    Both writes go through the node's layout (``_writer``), so
+    ``cluster_by``, ``zorder_by`` and ``bucket_by`` apply here as to
+    every other strategy.
 
     Divergence, documented: dbt executes one query per batch for retry
     granularity; we land the whole window in ONE write job (same final
@@ -324,138 +367,72 @@ def _microbatch(project: Project, node: Node, df: DataFrame) -> None:
     free.
     """
     spark = project.spark
-    rel = project.relation_name(node)
     cfg = node.config.extra
-    event_time = cfg.get("event_time")
-    if not event_time:
-        raise ValueError(f"{node.name}: microbatch requires event_time=")
     unit = cfg.get("batch_size", "day")
     if unit not in _BATCH_FMT:
         raise ValueError(
             f"{node.name}: batch_size must be one of {sorted(_BATCH_FMT)}"
         )
-    lookback = int(cfg.get("lookback", 1))
-    start_ovr, end_ovr = getattr(project, "_event_time_window", (None, None))
-    ts = F.col(event_time).cast("timestamp")
-    # NULL event-times: a row at an unknown time belongs to NO batch —
-    # the same contract the stateful sessionizers pin (r10). Without
-    # this explicit gate the fate was begin-dependent and inconsistent:
-    # with `begin` set the NULL-batch rows silently vanished through
-    # the >= filter, without it they landed once in the
-    # __HIVE_DEFAULT_PARTITION__ at the initial build and no later
-    # window could ever rebuild or clear them (NULL fails every
-    # window-boundary comparison). Route them explicitly upstream if
-    # they must be kept. Counted + warned, never silent (r12 advice).
-    df = _drop_rows_loudly(
-        df, ts.isNull(), node.name,
-        f"NULL/uncastable {event_time} event-time",
-        probe_cols=[event_time],
-        accounted=cfg.get("count_excluded_rows", True),
+    fmt = _BATCH_FMT[unit]
+    start, end = getattr(project, "_event_time_window", (None, None))
+    part_cols = _partition_cols(node)
+    # one listing of the landed (partition_by..., batch) specs: it
+    # anchors the lookback window and names every partition to drop.
+    # It reads only partition columns, so it costs file metadata.
+    landed = (
+        spark.table(rel).select(*part_cols).distinct().collect() if exists else []
     )
-    batch_of = F.date_format(F.date_trunc(unit, ts), _BATCH_FMT[unit])
-    part_cols = (*node.config.partition_by, BATCH_COL)
+    batches = [r[BATCH_COL] for r in landed if r[BATCH_COL] is not None]
+    if start is not None:
+        start = _fmt_batch(spark, start, unit)
+    elif batches:
+        # max landed batch − lookback periods, in the batch grid
+        start = spark.sql(
+            f"SELECT date_format(to_timestamp('{max(batches)}', '{fmt}')"
+            f" - INTERVAL {int(cfg.get('lookback', 1))} {unit.upper()}, '{fmt}')"
+        ).first()[0]
+    elif cfg.get("begin"):
+        start = _fmt_batch(spark, cfg["begin"], unit)
+    if end is not None:
+        end = _fmt_batch(spark, end, unit)
 
-    def _bounded(frame: DataFrame, lo: str | None, hi: str | None) -> DataFrame:
-        if lo is not None:
-            frame = frame.filter(batch_of >= _fmt_batch(spark, lo, unit))
-        if hi is not None:
-            frame = frame.filter(batch_of <= _fmt_batch(spark, hi, unit))
-        return frame
-
-    if not spark.catalog.tableExists(rel):
-        lo = start_ovr or cfg.get("begin")
-        out = _bounded(df, lo, end_ovr).withColumn(BATCH_COL, batch_of)
-        _clear_stale_location(project, rel)
-        # hash-cluster by the partition columns (see _writer): one
-        # writer group per partition value instead of every task
-        # writing every directory
-        out = out.hint("rebalance", *part_cols)
-        w = out.write.format("parquet").partitionBy(*part_cols)
-        w.mode("overwrite").saveAsTable(rel)
+    rows = df.withColumn(
+        BATCH_COL,
+        F.date_format(F.date_trunc(unit, F.col(cfg["event_time"]).cast("timestamp")), fmt),
+    )
+    if start is not None:
+        rows = rows.filter(F.col(BATCH_COL) >= start)
+    if end is not None:
+        rows = rows.filter(F.col(BATCH_COL) <= end)
+    if not exists:
+        _create(project, node, rel, rows)
         return
 
-    existing = spark.table(rel)
-    if start_ovr is not None:
-        start = _fmt_batch(spark, start_ovr, unit)
-    else:
-        last = existing.agg(F.max(BATCH_COL)).first()[0]
-        if last is None:
-            start = _fmt_batch(spark, cfg.get("begin"), unit) if cfg.get("begin") else None
-        else:
-            # max landed batch − lookback periods, in the batch grid
-            start = spark.sql(
-                f"SELECT date_format(to_timestamp('{last}', '{_BATCH_FMT[unit]}')"
-                f" - INTERVAL {lookback} {unit.upper()}, '{_BATCH_FMT[unit]}')"
-            ).first()[0]
-    end = _fmt_batch(spark, end_ovr, unit) if end_ovr is not None else None
+    def _part_lit(v) -> str:
+        # NULL partitions drop via an unquoted null literal (matches
+        # __HIVE_DEFAULT_PARTITION__, verified empirically); quoted
+        # values escape backslash-then-quote so a value like "it's"
+        # neither breaks the SQL nor silently matches nothing.
+        if v is None:
+            return "null"
+        s = str(v).replace("\\", "\\\\").replace("'", "\\'")
+        return f"'{s}'"
 
-    batch = df.withColumn(BATCH_COL, batch_of)
-    if start is not None:
-        batch = batch.filter(F.col(BATCH_COL) >= start)
-    if end is not None:
-        batch = batch.filter(F.col(BATCH_COL) <= end)
-    batch = _align(batch, existing.schema)
-
-    affected = existing.select(BATCH_COL)
-    if start is not None:
-        affected = affected.filter(F.col(BATCH_COL) >= start)
-    if end is not None:
-        affected = affected.filter(F.col(BATCH_COL) <= end)
-    # one job, not two: union the two metadata-scale distincts so the
-    # driver pays a single collect round-trip (r13)
-    periods = {
-        r[0]
-        for r in affected.distinct()
-        .unionByName(batch.select(BATCH_COL).distinct())
-        .collect()
-    }
-    if node.config.partition_by and periods:
-        # A partial partition spec (only BATCH_COL) is a silent no-op on
-        # Spark's in-memory catalog when the table is partitioned by
-        # (partition_by..., BATCH_COL) — the append would then duplicate
-        # every row of each rebuilt period. Enumerate FULL specs from the
-        # landed table for the affected periods (metadata-scale distinct
-        # over partition columns) and drop each.
-        combos = (
-            existing.filter(F.col(BATCH_COL).isin(sorted(periods)))
-            .select(*node.config.partition_by, BATCH_COL)
-            .distinct()
-            .collect()
-        )
-
-        def _part_lit(v) -> str:
-            # NULL partitions drop via an unquoted null literal (matches
-            # __HIVE_DEFAULT_PARTITION__, verified empirically); quoted
-            # values escape backslash-then-quote so a value like "it's"
-            # neither breaks the SQL nor silently matches nothing.
-            if v is None:
-                return "null"
-            s = str(v).replace("\\", "\\\\").replace("'", "\\'")
-            return f"'{s}'"
-
-        specs = [
-            "PARTITION ("
-            + ", ".join(
-                f"{c}={_part_lit(row[c])}"
-                for c in (*node.config.partition_by, BATCH_COL)
-            )
-            + ")"
-            for row in combos
-        ]
-        if specs:  # one statement for all rebuilt periods, not one each
-            spark.sql(
-                f"ALTER TABLE {rel} DROP IF EXISTS {', '.join(specs)}"
-            )
-    else:
-        specs = [
-            f"PARTITION ({BATCH_COL}='{p}')" for p in sorted(periods)
-        ]
-        if specs:
-            spark.sql(
-                f"ALTER TABLE {rel} DROP IF EXISTS {', '.join(specs)}"
-            )
-    batch = batch.hint("rebalance", *part_cols)  # see _writer
-    batch.write.format("parquet").partitionBy(*part_cols).mode("append").saveAsTable(rel)
+    # FULL specs: a partial one (only the batch column) is a silent
+    # no-op on Spark's in-memory catalog when the table is also
+    # partitioned by partition_by, and the append would then duplicate
+    # every row of each rebuilt period. A window period with no landed
+    # partition needs no DROP: the append alone creates it.
+    specs = [
+        "PARTITION (" + ", ".join(f"{c}={_part_lit(r[c])}" for c in part_cols) + ")"
+        for r in landed
+        if r[BATCH_COL] is not None
+        and (start is None or r[BATCH_COL] >= start)
+        and (end is None or r[BATCH_COL] <= end)
+    ]
+    if specs:  # one statement for all rebuilt periods, not one each
+        spark.sql(f"ALTER TABLE {rel} DROP IF EXISTS {', '.join(specs)}")
+    _writer(node, _align(rows, spark.table(rel).schema)).mode("append").saveAsTable(rel)
     spark.sql(f"REFRESH TABLE {rel}")
 
 
@@ -467,54 +444,32 @@ def _fmt_batch(spark, value: str, unit: str) -> str:
     ).first()[0]
 
 
-def _incremental(project: Project, node: Node, df: DataFrame) -> None:
-    """B3: append / insert_overwrite / merge without MERGE INTO."""
+def _incremental(project: Project, node: Node, rel: str, df: DataFrame) -> None:
+    """B3 update of an existing table: append / insert_overwrite /
+    merge / delete+insert, without MERGE INTO."""
     spark = project.spark
-    rel = project.relation_name(node)
-    if node.config.incremental_strategy == "microbatch":
-        _microbatch(project, node, df)
-        return
-    if node.config.incremental_strategy in ("merge", "delete+insert"):
-        # NULL-key exclusion must ALSO cover the initial build, or the
-        # corrupt row lands once at bootstrap and every later run's
-        # filter merely stops the growth without removing it — see
-        # _merged_rows for the full contract
-        keys = node.config.unique_key
-        keys = [keys] if isinstance(keys, str) else list(keys or ())
-        if keys and not spark.catalog.tableExists(rel):
-            # the incremental runs route through _merged_rows, which
-            # does its own loud exclusion — only the bootstrap CTAS
-            # needs the gate (and its accounting) here
-            df = _drop_rows_loudly(
-                df, _any_null(keys), node.name, "NULL unique-key",
-                probe_cols=keys,
-                accounted=node.config.extra.get("count_excluded_rows", True),
-            )
-    if not spark.catalog.tableExists(rel):
-        _clear_stale_location(project, rel)
-        _writer(node, df).mode("overwrite").saveAsTable(rel)
-        return
     strategy = node.config.incremental_strategy
+    if strategy in ("merge", "delete+insert"):
+        _swap_in(project, rel, merge_plan(project, node, df), node)
+        return
     target, evolved = _evolved_schema(project, node, rel, df)
     df = _align(df, target)
-    if evolved and strategy == "append":
-        removed_kept = set(spark.table(rel).columns) - {f.name for f in target.fields}
-        if not removed_kept:
-            # pure column addition: physical ALTER, then append — no rewrite
-            existing_names = set(spark.table(rel).columns)
-            adds = ", ".join(
-                f"{f.name} {f.dataType.simpleString()}"
-                for f in target.fields
-                if f.name not in existing_names
-            )
-            if adds:
-                spark.sql(f"ALTER TABLE {rel} ADD COLUMNS ({adds})")
-        else:
-            # column removal on plain parquet = rewrite: align history to
-            # the new schema once, then fall through to the append below
-            history = _align(spark.table(rel), target)
-            _swap_in(project, rel, history, node)
     if strategy == "append":
+        if evolved:
+            have = spark.table(rel).columns
+            if set(have) <= {f.name for f in target.fields}:
+                # pure column addition: physical ALTER, then append — no rewrite
+                adds = ", ".join(
+                    f"{f.name} {f.dataType.simpleString()}"
+                    for f in target.fields
+                    if f.name not in have
+                )
+                if adds:
+                    spark.sql(f"ALTER TABLE {rel} ADD COLUMNS ({adds})")
+            else:
+                # column removal on plain parquet = rewrite: align history
+                # to the new schema once, then append below
+                _swap_in(project, rel, _align(spark.table(rel), target), node)
         _writer(node, df).mode("append").saveAsTable(rel)
         return
     if strategy == "insert_overwrite":
@@ -535,41 +490,28 @@ def _incremental(project: Project, node: Node, df: DataFrame) -> None:
         else:
             _swap_in(project, rel, df, node)
         return
-    if strategy in ("merge", "delete+insert"):
-        _swap_in(project, rel, _merged_rows(project, node, df, target), node)
-        return
     raise ValueError(f"unknown incremental strategy: {strategy}")
 
 
-def _merged_rows(project: Project, node: Node, df: DataFrame, target) -> DataFrame:
-    """The MERGE / delete+insert output plan (dbt's delete+insert —
-    delete target rows matching the batch's keys, insert the batch —
-    is semantically identical to the anti-join+union rewrite, so one
-    code path). Split from :func:`_incremental` so the streaming bridge
-    can run the pre-execution scale gate on the exact plan the sink is
-    about to execute (``streaming.pipeline.run_into_incremental``)."""
+def merge_plan(project: Project, node: Node, df: DataFrame) -> DataFrame:
+    """The rows a merge / delete+insert run swaps in over the existing
+    table, after ``on_schema_change``: ``existing ANTI-JOIN batch ∪
+    batch`` (dbt's delete+insert — delete target rows matching the
+    batch's keys, insert the batch — is semantically the same rewrite,
+    so one plan). :func:`materialize` passes the batch after its
+    identity gate; the streaming bridge
+    (``streaming.pipeline.run_into_incremental``) builds the same plan
+    to check its scale before the first merge trigger executes it."""
     spark = project.spark
     rel = project.relation_name(node)
-    keys = node.config.unique_key
+    keys = _keys(node)
     if not keys:
         raise ValueError(
             f"{node.name}: {node.config.incremental_strategy} strategy "
             "requires unique_key"
         )
-    keys = [keys] if isinstance(keys, str) else list(keys)
-    # NULL-key rows are excluded (r11 probe): NULL never equals NULL,
-    # so SQL MERGE semantics re-INSERT such a row on EVERY scheduled
-    # run — one corrupt key grew the table without bound ((None, x)
-    # appended per run, forever) while looking "successful". A row
-    # with no stable identity cannot be idempotently merged; the
-    # family rule applies (samplers, dedup, microbatch event-times) —
-    # route NULL-key rows explicitly upstream if they must be kept
-    # (e.g. an append-strategy dead-letter model). Counted + warned,
-    # never silent (r12 advice).
-    df = _drop_rows_loudly(
-        df, _any_null(keys), node.name, "NULL unique-key", probe_cols=keys,
-        accounted=node.config.extra.get("count_excluded_rows", True),
-    )
+    target, _ = _evolved_schema(project, node, rel, df)
+    df = _align(df, target)
     existing = _align(spark.table(rel), target)
     preds = node.config.incremental_predicates
     if preds:
@@ -589,7 +531,9 @@ def _merged_rows(project: Project, node: Node, df: DataFrame, target) -> DataFra
     return existing.join(df, on=keys, how="left_anti").unionByName(df)
 
 
-def _snapshot(project: Project, node: Node, df: DataFrame) -> None:
+def _snapshot(
+    project: Project, node: Node, rel: str, df: DataFrame, exists: bool
+) -> None:
     """B5: SCD2 snapshot — validity-interval capture on plain parquet.
 
     timestamp strategy: a row is 'changed' when its updated_at advanced
@@ -597,26 +541,12 @@ def _snapshot(project: Project, node: Node, df: DataFrame) -> None:
     Changed keys close their open row (dbt_valid_to = new updated_at) and
     insert a new open version. New keys insert an open version.
     """
-    spark = project.spark
-    rel = project.relation_name(node)
-    key = node.config.unique_key
-    keys = [key] if isinstance(key, str) else list(key)
+    keys = _keys(node)
     cfg = node.config.extra
     strategy = cfg.get("strategy", "timestamp")
     updated_at = cfg.get("updated_at")
     if strategy == "timestamp" and not updated_at:
         raise ValueError(f"{node.name}: timestamp snapshots need updated_at=")
-    # NULL-key rows are excluded (r11 probe): with NULL never matching
-    # the change-detection join, each run inserted ANOTHER open version
-    # for the same unknown entity — three runs, three concurrent open
-    # rows, breaking the one-open-row-per-key invariant every later run
-    # builds on. No stable identity means no history to track (the
-    # merge/microbatch/sampler family rule). Counted + warned, never
-    # silent (r12 advice).
-    df = _drop_rows_loudly(
-        df, _any_null(keys), node.name, "NULL unique-key", probe_cols=keys,
-        accounted=cfg.get("count_excluded_rows", True),
-    )
 
     if strategy == "timestamp":
         valid_from = F.col(updated_at).cast("timestamp")
@@ -666,12 +596,11 @@ def _snapshot(project: Project, node: Node, df: DataFrame) -> None:
         .drop("_rn")
     )
 
-    if not spark.catalog.tableExists(rel):
-        _clear_stale_location(project, rel)
-        new.write.format("parquet").mode("overwrite").saveAsTable(rel)
+    if not exists:
+        _create(project, node, rel, new)
         return
 
-    current = spark.table(rel)
+    current = project.spark.table(rel)
     open_rows = current.filter(F.col("dbt_valid_to").isNull())
     closed_rows = current.filter(F.col("dbt_valid_to").isNotNull())
 
@@ -688,7 +617,7 @@ def _snapshot(project: Project, node: Node, df: DataFrame) -> None:
         # < source.updated_at). An scd_id-difference test also fired on
         # an OUT-OF-ORDER older record (late replay), closing the open
         # row at an older timestamp — a negative validity interval —
-        # and silently rolling the key backwards (r9 probe). Equal
+        # and silently rolling the key backwards. Equal
         # updated_at with a different payload is also NOT a change
         # under this strategy (dbt trusts updated_at); use the check
         # strategy when payload drift without a timestamp bump matters.
@@ -737,8 +666,7 @@ def _swap_in(project: Project, rel: str, df: DataFrame, node: Node) -> None:
     spark = project.spark
     staging = f"{rel}__dbt_tmp"
     spark.sql(f"DROP TABLE IF EXISTS {staging}")
-    _clear_stale_location(project, staging)
-    _writer(node, df).mode("overwrite").saveAsTable(staging)
+    _create(project, node, staging, df)
     spark.sql(f"DROP TABLE IF EXISTS {rel}")
     spark.sql(f"ALTER TABLE {staging} RENAME TO {rel}")
     if node.config.partition_by:

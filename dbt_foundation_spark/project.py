@@ -32,7 +32,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from dbt_foundation_spark.manifest import Manifest, Node, NodeConfig
-from dbt_foundation_spark.materialize import materialize
+from dbt_foundation_spark.materialize import _create, materialize
 from dbt_foundation_spark.session import check_codegen_cache, codegen_compiles
 from dbt_foundation_spark.sources.registry import SourceRegistry
 from dbt_foundation_spark.testing import declared_tests, evaluate
@@ -261,7 +261,6 @@ class Project:
         package: str | None = None,
         version: int | None = None,
         latest_version: bool = False,
-        count_excluded_rows: bool = True,
     ):
         """Register a model: ``@project.model`` on ``(ctx) -> DataFrame``,
         or ``project.model(sql_text, name=...)`` for a SQL-string model.
@@ -313,13 +312,6 @@ class Project:
                 cfg.extra["description"] = description
             if zorder_by:
                 cfg.extra["zorder_by"] = tuple(zorder_by)
-            if not count_excluded_rows:
-                # node-level opt-out of the exclusion accounting pass,
-                # for hot incremental models whose upstream plan is an
-                # expensive join/agg (materialize._drop_rows_loudly) —
-                # the contract filter still applies, only the count job
-                # is skipped
-                cfg.extra["count_excluded_rows"] = False
             if event_time is not None:
                 # dbt 1.9 microbatch configs (materialize._microbatch)
                 cfg.extra.update(
@@ -402,7 +394,6 @@ class Project:
         check_cols: tuple[str, ...] | str = (),
         schema: str | None = None,
         invalidate_hard_deletes: bool = False,
-        count_excluded_rows: bool = True,
     ):
         """SCD2 snapshot (snapshots/ scaffolding, dbt_project.yml:19)."""
 
@@ -416,8 +407,6 @@ class Project:
                 check_cols=() if check_cols == "all" else tuple(check_cols),
                 invalidate_hard_deletes=invalidate_hard_deletes,
             )
-            if not count_excluded_rows:
-                cfg.extra["count_excluded_rows"] = False
             self.manifest.add(
                 Node(
                     name=name or obj.__name__,
@@ -897,17 +886,19 @@ class Project:
             return self.spark.table(self.relation_name(node)).limit(limit)
         return self.build_frame(node).limit(limit)
 
-    def _drop_relation(self, rel: str, keep_views: bool = False) -> None:
-        """DROP whatever object type occupies ``rel`` (Spark's DROP TABLE
-        refuses views and vice versa, even with IF EXISTS)."""
+    def _drop_relation(self, rel: str, keep: str | None = None) -> bool:
+        """DROP whatever object type occupies ``rel`` unless it is of
+        kind ``keep`` ("VIEW" or "TABLE"): Spark's DROP TABLE refuses
+        views and vice versa, even with IF EXISTS, and neither kind can
+        be replaced by the other. Returns whether ``rel`` still holds a
+        relation (one of kind ``keep``)."""
         if not self.spark.catalog.tableExists(rel):
-            return
-        kind = self.spark.catalog.getTable(rel).tableType
-        if kind == "VIEW":
-            if not keep_views:  # CREATE OR REPLACE VIEW handles the rest
-                self.spark.sql(f"DROP VIEW IF EXISTS {rel}")
-        else:
-            self.spark.sql(f"DROP TABLE IF EXISTS {rel}")
+            return False
+        kind = "VIEW" if self.spark.catalog.getTable(rel).tableType == "VIEW" else "TABLE"
+        if kind == keep:
+            return True
+        self.spark.sql(f"DROP {kind} IF EXISTS {rel}")
+        return False
 
     def clone_from(
         self,
@@ -925,7 +916,10 @@ class Project:
         zero data movement at any scale, reads always see the state
         table's current files); ``full_copy=True`` does CTAS instead
         (dbt's fallback for stores without zero-copy), paying one write
-        to make the clone independent of later state mutations. Cloned
+        to make the clone independent of later state mutations. The
+        copy takes the node's layout (partitioning, incl. a microbatch
+        model's batch column; buckets; sort), so later incremental runs
+        find the table they would have built. Cloned
         nodes count as materialized, so subsequent ``run(select=...)``
         of downstream models ``ref()`` the clones — dbt's deferral
         workflow.
@@ -949,14 +943,9 @@ class Project:
             self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {self.schema_for(node)}")
             if full_copy:
                 self._drop_relation(dst)
-                from dbt_foundation_spark.materialize import _clear_stale_location
-
-                _clear_stale_location(self, dst)
-                self.spark.table(src).write.format("parquet").mode(
-                    "overwrite"
-                ).saveAsTable(dst)
+                _create(self, node, dst, self.spark.table(src))
             else:
-                self._drop_relation(dst, keep_views=True)
+                self._drop_relation(dst, keep="VIEW")
                 self.spark.sql(f"CREATE OR REPLACE VIEW {dst} AS SELECT * FROM {src}")
             self._materialized.add(node.name)
             self._frames.pop(node.name, None)

@@ -336,7 +336,7 @@ def run_into_incremental(
     streaming story; this is the engine's extension: the same node
     definition serves batch backfill and continuous ingestion, and the
     checkpoint makes restarts resume mid-stream."""
-    from dbt_foundation_spark.materialize import _incremental
+    from dbt_foundation_spark.materialize import materialize, merge_plan
 
     node = project.manifest[node_name]
     if node.config.materialized != "incremental":
@@ -356,8 +356,6 @@ def run_into_incremental(
             "append/merge strategies"
         )
 
-    from dbt_foundation_spark.materialize import _evolved_schema, _merged_rows
-
     spark = project.spark
     rel = project.relation_name(node)
     gate_state: dict = {}
@@ -370,22 +368,20 @@ def run_into_incremental(
         # scan itself on the first trigger (the create/append write
         # plan), and — for merge/delete+insert — the existing⟕batch
         # anti-join + union the first time it executes, which on a
-        # fresh table is trigger TWO (trigger one is the CTAS).
+        # fresh table is trigger TWO (trigger one is the CTAS). That
+        # plan is built over the raw batch: the NULL-key filter
+        # materialize adds (and counts once per trigger) leaves its
+        # shape unchanged.
         _gate_first_batch(gate_state, batch_df)
-        if node.config.incremental_strategy in (
-            "merge",
-            "delete+insert",
-        ) and spark.catalog.tableExists(rel):
-            if not gate_state.get("merge_gated"):
-                from dbt_foundation_spark.materialize import _align
-
-                target, _ = _evolved_schema(project, node, rel, batch_df)
-                _gate_first_batch(
-                    gate_state,
-                    _merged_rows(project, node, _align(batch_df, target), target),
-                    key="merge_gated",
-                )
-        _incremental(project, node, batch_df)
+        if (
+            node.config.incremental_strategy in ("merge", "delete+insert")
+            and not gate_state.get("merge_gated")
+            and spark.catalog.tableExists(rel)
+        ):
+            _gate_first_batch(
+                gate_state, merge_plan(project, node, batch_df), key="merge_gated"
+            )
+        materialize(project, node, batch_df)
 
     writer = stream_df.writeStream.foreachBatch(sink).option(
         "checkpointLocation", checkpoint_dir

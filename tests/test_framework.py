@@ -2134,45 +2134,114 @@ def test_null_key_and_event_time_exclusions_are_accounted(
                 if "excluded" in r.getMessage()]
 
 
-def test_count_excluded_rows_opt_out_skips_count_not_filter(
-    project, spark, caplog
+@pytest.mark.parametrize(
+    "first, then", [("view", "table"), ("view", "incremental"), ("table", "view")]
+)
+def test_materialization_switch_replaces_relation_of_other_kind(
+    project, spark, first, then
 ):
-    """``count_excluded_rows=False`` (r12 advice, the accounting knob):
-    a hot incremental model whose upstream plan is an expensive
-    join/agg can opt out of the exclusion COUNT — the extra pass
-    _drop_rows_loudly pays to re-execute the model plan — without
-    losing the contract FILTER itself. Contract: NULL-key rows are
-    still excluded from the output; no "excluded N rows" warning is
-    emitted (counting is off, not zero); an INFO line records that the
-    node runs unaccounted so the log never reads as clean-by-evidence."""
-    import logging as _logging
+    """Rebuilding a model under a materialization of the other kind
+    replaces the relation, as dbt does. Spark refuses each direction on
+    its own: DROP TABLE of a view (which also stranded the staging
+    table), saving data into a view, and CREATE OR REPLACE VIEW over a
+    table."""
+    sql = "SELECT 1 AS id UNION ALL SELECT 2 AS id"
+    project.model(sql, name="sw", materialized=first)
+    assert all(r.status == "success" for r in project.run())
 
+    p2 = Project(project.name, spark, target=project.target)
+    p2.model(sql, name="sw", materialized=then)
+    res = p2.run()
+    assert all(r.status == "success" for r in res), res
+    rel = p2.relation_name(p2.manifest["sw"])
+    assert (spark.catalog.getTable(rel).tableType == "VIEW") == (then == "view")
+    assert sorted(r.id for r in spark.table(rel).collect()) == [1, 2]
+    assert not spark.catalog.tableExists(f"{rel}__dbt_tmp")
+
+
+@pytest.mark.parametrize("partition_by, jobs", [((), 7), (("grp",), 7)])
+def test_microbatch_run_job_count_pinned(project, spark, partition_by, jobs):
+    """Pins how many Spark jobs one incremental microbatch run over an
+    existing table runs: the NULL event-time count, one listing of the
+    landed partition specs (it anchors the lookback window and names
+    every DROP) and the append. Job ids are sequential per SparkContext
+    and the build runs on pool threads, so the count is the id gap
+    between two marker jobs."""
+    sc = spark.sparkContext
+    assert not spark.streams.active  # a live stream would run jobs between marks
+
+    def marker_job() -> int:
+        sc.setJobGroup("microbatch_job_count_marker", "marker")
+        try:
+            sc.parallelize([1], 1).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return max(sc.statusTracker().getJobIdsForGroup("microbatch_job_count_marker"))
+
+    def mk(rows):
+        return spark.createDataFrame(
+            rows, "id bigint, grp string, ts string"
+        ).withColumn("ts", F.col("ts").cast("timestamp"))
+
+    state = {"batch": mk([(1, "a", "2024-01-01 10:00:00"),
+                          (2, "b", "2024-01-02 10:00:00"),
+                          (3, "a", "2024-01-03 10:00:00")])}
+
+    @project.model(
+        materialized="incremental", incremental_strategy="microbatch",
+        event_time="ts", batch_size="day", lookback=1, begin="2024-01-01",
+        partition_by=list(partition_by), name="mb_jobs",
+    )
+    def mb_jobs(ctx):
+        return state["batch"]
+
+    assert all(r.status == "success" for r in project.run())
+    # window: day 2 (max landed day 3 − lookback 1) onwards; day 3
+    # is cleared, day 4 arrives
+    state["batch"] = mk([(2, "b", "2024-01-02 11:00:00"),
+                         (4, "a", "2024-01-04 10:00:00")])
+    p2 = _reattach(project)
+    before = marker_job()
+    assert all(r.status == "success" for r in p2.run())
+    ran = marker_job() - before - 1
+    rel = p2.relation_name(p2.manifest["mb_jobs"])
+    assert sorted((r.id, r.dbt_event_batch) for r in spark.table(rel).collect()) == [
+        (1, "2024-01-01"), (2, "2024-01-02"), (4, "2024-01-04"),
+    ]
+    assert ran == jobs, ran
+
+
+def test_microbatch_honours_bucket_layout(project, spark):
+    """Microbatch writes take the node's layout like every other
+    strategy: a bucketed, partition_by model is created bucketed, and
+    its period DROP + append round-trips without losing or duplicating
+    rows."""
     state = {}
 
-    def build(p, rows):
-        state["b"] = spark.createDataFrame(rows, "id int, v string")
+    def mk(rows):
+        return spark.createDataFrame(
+            rows, "id bigint, grp string, ts string"
+        ).withColumn("ts", F.col("ts").cast("timestamp"))
 
-        @p.model(
-            name="quiet_merge", materialized="incremental",
-            incremental_strategy="merge", unique_key="id",
-            count_excluded_rows=False,
-        )
-        def quiet_merge(ctx):
-            return state["b"]
+    @project.model(
+        materialized="incremental", incremental_strategy="microbatch",
+        event_time="ts", batch_size="day", lookback=1, begin="2024-01-01",
+        partition_by=["grp"], bucket_by=["id"], buckets=2, name="mb_bucketed",
+    )
+    def mb_bucketed(ctx):
+        return state["batch"]
 
-        return p
-
-    p = build(_reattach(project), [(1, "a"), (None, "x"), (None, "y")])
-    with caplog.at_level(_logging.INFO, logger="dbt_foundation_spark"):
-        assert all(r.status == "success" for r in p.run())
-    # the filter still applies — no NULL-key row reached the table
-    out = spark.table(
-        p.relation_name(p.manifest["quiet_merge"])
-    ).collect()
-    assert [r["id"] for r in out] == [1]
-    # no count warning, but the opt-out itself is on the record
-    assert not [r for r in caplog.records
-                if "excluded" in r.getMessage()
-                and r.levelno >= _logging.WARNING]
-    assert [r for r in caplog.records
-            if "count_excluded_rows=false" in r.getMessage()]
+    state["batch"] = mk([(i, "ab"[i % 2], f"2024-01-0{1 + i % 3} 10:00:00")
+                         for i in range(9)])
+    assert all(r.status == "success" for r in project.run())
+    # window: day 2 onwards is rebuilt from the restated source
+    state["batch"] = mk([(i, "ab"[i % 2], f"2024-01-0{2 + i % 2} 11:00:00")
+                         for i in range(20, 24)])
+    assert all(r.status == "success" for r in _reattach(project).run())
+    rel = project.relation_name(project.manifest["mb_bucketed"])
+    layout = spark.sql(f"DESCRIBE TABLE EXTENDED {rel}").collect()
+    assert {r.col_name: r.data_type for r in layout}.get("Num Buckets") == "2"
+    assert sorted((r.id, r.dbt_event_batch) for r in spark.table(rel).collect()) == [
+        (0, "2024-01-01"), (3, "2024-01-01"), (6, "2024-01-01"),
+        (20, "2024-01-02"), (21, "2024-01-03"), (22, "2024-01-02"), (23, "2024-01-03"),
+    ]

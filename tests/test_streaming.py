@@ -545,6 +545,57 @@ def test_stream_into_incremental_merge(spark, staging):
         spark.sql(f"DROP DATABASE IF EXISTS {schema} CASCADE")
 
 
+
+def test_stream_into_incremental_counts_null_keys_once_per_trigger(
+    spark, staging, caplog
+):
+    """NULL-key rows reaching the bridge are excluded and counted once
+    per trigger, on the create trigger and on the merge trigger whose
+    plan the bridge also checks for scale: one warning each, naming
+    the trigger's excluded count."""
+    import logging
+    import uuid as _uuid
+
+    from dbt_foundation_spark.project import Project, Target
+    from dbt_foundation_spark.streaming.pipeline import run_into_incremental
+
+    schema = f"st_{_uuid.uuid4().hex[:8]}"
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {schema}")
+    p = Project("stream_nk", spark, target=Target(schema=schema))
+
+    @p.model(
+        materialized="incremental",
+        incremental_strategy="merge",
+        unique_key="k",
+    )
+    def fct_stream_nk(ctx):  # definition only; batches arrive via the bridge
+        raise AssertionError("bridge must not invoke the model fn")
+
+    in_dir = staging["root"] / f"nk_in_{_uuid.uuid4().hex[:6]}"
+    ckpt = _ckpt(staging)
+    try:
+        for rows, nulls in (([(1, "a"), (2, "a")], 1), ([(2, "b"), (3, "b")], 2)):
+            spark.createDataFrame(
+                rows + [(None, "x")] * nulls, "k int, v string"
+            ).coalesce(1).write.mode("append").parquet(str(in_dir))
+            stream = spark.readStream.schema("k int, v string").parquet(str(in_dir))
+            caplog.clear()
+            with caplog.at_level(logging.WARNING, logger="dbt_foundation_spark"):
+                run_into_incremental(p, "fct_stream_nk", stream, ckpt)
+            warns = [r.getMessage() for r in caplog.records
+                     if "fct_stream_nk" in r.getMessage()
+                     and "NULL unique-key" in r.getMessage()]
+            assert len(warns) == 1, warns
+            assert f"excluded {nulls} " in warns[0]
+
+        got = {
+            (r["k"], r["v"])
+            for r in spark.table(f"{schema}.fct_stream_nk").collect()
+        }
+        assert got == {(1, "a"), (2, "b"), (3, "b")}
+    finally:
+        spark.sql(f"DROP DATABASE IF EXISTS {schema} CASCADE")
+
 def test_dedup_ingest_stream_matches_sequential(spark, sf_dir, staging):
     """run_dedup_ingest must equal the sequential daily-ingest loop it
     replaces: same per-batch ops (index dedup -> within-batch greedy
