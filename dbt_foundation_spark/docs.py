@@ -25,6 +25,7 @@ from dbt_foundation_spark.project import Project
 def generate_docs(project: Project, path: str | None = None) -> dict[str, Any]:
     """Build {"manifest": ..., "catalog": ...}; optionally write
     ``manifest.json`` + ``catalog.json`` under ``path``."""
+    project._bind_refs()
     manifest: dict[str, Any] = {"nodes": {}, "sources": [], "exposures": {}}
     for node in project.manifest.nodes.values():
         if node.resource_type == "exposure":

@@ -173,6 +173,7 @@ def evaluate(
     max_chained_views: int = 4,
     max_joins: int = 7,
 ) -> list[Finding]:
+    project._bind_refs()
     manifest = project.manifest
     models = {n.name: n for n in manifest.models()}
     findings: list[Finding] = []

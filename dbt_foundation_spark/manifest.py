@@ -3,9 +3,10 @@
 Reference semantics re-expressed:
 - nodes carry ``resource_type``, ``config.schema``, ``alias`` exactly as
   the orphan macro consumes them (macros/list_orphaned_objects.sql:45-48);
-- edges come from ``ref()``/``source()`` calls captured while building
-  each model's DataFrame (dbt captures them while rendering Jinja —
-  §3 step 2 of SURVEY.md);
+- edges come from a model's ``ref()``/``source()`` calls, read once when
+  it is registered (dbt reads them while parsing — §3 step 2 of
+  SURVEY.md): ``refs`` holds the patterns, ``Project._bind_refs``
+  resolves them into ``depends_on``;
 - ``ref`` resolves to a 2-part ``schema.alias`` name, never 3-part
   (macros/overrides/ref.sql:20-25 strips the database for clone-safety).
 
@@ -18,8 +19,8 @@ from __future__ import annotations
 
 import hashlib
 import inspect
-from collections import deque
 from dataclasses import dataclass, field
+from graphlib import CycleError, TopologicalSorter
 from typing import Any, Callable
 
 
@@ -56,9 +57,11 @@ class Node:
     package: str | None = None  # owning package (2-arg ref target)
     base_name: str | None = None  # logical name for versioned models
     version: int | None = None  # model version (ref version= kwarg)
-    # SQL-string models: parsed ref() shapes (package, name, version),
-    # resolved to node keys at run time (registration order independent)
-    sql_refs: tuple[tuple[str | None, str, int | None], ...] = ()
+    # ref() calls read at registration as (name, package, version),
+    # resolved to node keys when edges are bound (registration order
+    # independent); source() pairs go straight into source_deps
+    refs: tuple[tuple[str, str | None, int | None], ...] = ()
+    dynamic: bool = False  # calls not all readable: one capture render binds them
 
     @property
     def alias(self) -> str:
@@ -167,30 +170,26 @@ class Manifest:
                     changed = True
         return out
 
+    def sorter(self, names: set[str]) -> TopologicalSorter:
+        """A prepared ``graphlib`` sorter over ``names`` and the edges
+        among them: ``Project.run``'s ready queue. Raises ``ValueError``
+        on a dependency cycle."""
+        graph = TopologicalSorter({n: self.nodes[n].depends_on & names for n in names})
+        try:
+            graph.prepare()
+        except CycleError as e:
+            raise ValueError(f"dependency cycle among: {sorted(set(e.args[1]))}") from None
+        return graph
+
     def topo_generations(self, subset: set[str] | None = None) -> list[list[Node]]:
-        """Kahn's algorithm in generations: each generation's nodes depend
-        only on nodes of earlier generations. A layered view of the DAG
+        """Generations of the DAG: each generation's nodes depend only on
+        nodes of earlier generations. A layered view of the DAG
         (perfbench's per-layer figures read it); builds do not run by
         generation. Raises ``ValueError`` on a dependency cycle."""
-        names = set(subset) if subset is not None else set(self.nodes)
-        indeg = {
-            n: len(self.nodes[n].depends_on & names) for n in names
-        }
-        ready = deque(sorted(n for n, d in indeg.items() if d == 0))
+        graph = self.sorter(set(self.nodes) if subset is None else set(subset))
         gens: list[list[Node]] = []
-        seen = 0
-        while ready:
-            gen = sorted(ready)
-            ready.clear()
+        while graph.is_active():
+            gen = sorted(graph.get_ready())
             gens.append([self.nodes[n] for n in gen])
-            seen += len(gen)
-            for done in gen:
-                for n in names:
-                    if done in self.nodes[n].depends_on:
-                        indeg[n] -= 1
-                        if indeg[n] == 0:
-                            ready.append(n)
-        if seen != len(names):
-            cyc = sorted(n for n in names if indeg[n] > 0)
-            raise ValueError(f"dependency cycle among: {cyc}")
+            graph.done(*gen)
         return gens

@@ -217,6 +217,7 @@ def lint(
     same contract as PLANS.md's whitelist table)."""
     from .plans.inspect import scale_findings
 
+    project._bind_refs()
     problems: list[str] = []
     for node in project.manifest.models():
         if node.sql is not None:

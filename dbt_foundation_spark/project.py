@@ -2,8 +2,16 @@
 
 The engine's dbt-core analog. Design stance (SURVEY.md §7): no Jinja —
 models are Python functions ``(ctx) -> DataFrame`` or raw Spark-SQL
-strings; ``ctx.ref()`` / ``ctx.source()`` return DataFrames and record
-DAG edges as a side effect (dbt records them while rendering Jinja).
+strings; ``ctx.ref()`` / ``ctx.source()`` return DataFrames.
+
+A model's DAG edges are read once, when it is registered, without
+running it: a SQL-string model's ``ref()`` calls by pattern, a Python
+model's literal ``ctx.ref(...)`` / ``ctx.source(...)`` calls from its
+syntax tree (dbt-core's ``PythonParseVisitor``). Only a model whose
+calls cannot all be read that way (non-literal arguments, ``ctx``
+handed to a helper, source not readable) gets one capture render when
+edges are bound — dbt's parse-time render — and its frames are thrown
+away. Each node's frame is built once per invocation, in its own step.
 
 Semantics preserved from the reference:
 - 2-part ref resolution (macros/overrides/ref.sql:10-26): refs resolve
@@ -19,14 +27,17 @@ Semantics preserved from the reference:
 
 from __future__ import annotations
 
+import ast
+import inspect
 import json
 import logging
 import re
+import textwrap
 import time
 import uuid
+from contextlib import suppress
 from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass
-from graphlib import CycleError, TopologicalSorter
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -99,19 +110,28 @@ def _ref_shape(m: re.Match) -> tuple[str, str | None, int | None]:
     return m.group("a"), None, ver
 
 
-def _parse_sql_refs(sql: str) -> tuple[tuple[str | None, str, int | None], ...]:
-    """All ref() calls in a SQL-string model as (package, name, version).
+def _ref_pattern(
+    *args: str, version: int | None = None, v: int | None = None
+) -> tuple[str, str | None, int | None]:
+    """(name, package, version) of one ``ref()`` call — the shapes of
+    macros/overrides/ref.sql:10-26 and the resolve_ref argument order."""
+    if len(args) not in (1, 2):
+        raise TypeError(f"ref() takes 1 or 2 positional args, got {len(args)}")
+    return args[-1], args[0] if len(args) == 2 else None, v if version is None else version
+
+
+def _parse_sql_refs(sql: str) -> tuple[tuple[str, str | None, int | None], ...]:
+    """All ref() calls in a SQL-string model as (name, package, version).
 
     A ``ref(`` occurrence the grammar can't parse raises immediately: a
     silently dropped ref would mean a missing DAG edge and the model
     scheduled before its upstream exists.
     """
     spans: list[tuple[int, int]] = []
-    refs: list[tuple[str | None, str, int | None]] = []
+    refs: list[tuple[str, str | None, int | None]] = []
     for m in _SQL_REF_RE.finditer(sql):
         spans.append(m.span())
-        name, pkg, ver = _ref_shape(m)
-        refs.append((pkg, name, ver))
+        refs.append(_ref_shape(m))
     for m in re.finditer(r"\bref\(", sql):
         if not any(s <= m.start() < e for s, e in spans):
             snippet = sql[m.start() : m.start() + 60]
@@ -119,6 +139,51 @@ def _parse_sql_refs(sql: str) -> tuple[tuple[str | None, str, int | None], ...]:
                 f"unsupported ref() shape in SQL-string model: {snippet!r}"
             )
     return tuple(refs)
+
+
+def _read_edges(node: Node) -> None:
+    """Read a model's ``ref()`` patterns, and a Python model's
+    ``source()`` pairs, once, when it is registered. A Python model or
+    snapshot is read from its syntax tree without running it: every
+    ``<p>.ref(...)`` / ``<p>.source(...)`` call whose arguments are all
+    literals, ``<p>`` being the function's first parameter, in every
+    branch, taken or not (dbt-core's ``PythonParseVisitor``). The model
+    is dynamic — one capture render binds its edges — when the walk
+    cannot be sure it saw every call: the source cannot be read or
+    parsed as one ``def``, an argument is not a literal, ``<p>`` is used
+    other than as ``<p>.<attr>`` (passed to a helper, stored, aliased),
+    or ``<p>.ref`` / ``<p>.source`` is used without being called."""
+    if node.sql is not None:
+        node.refs = _parse_sql_refs(node.sql)
+        return
+    shape = {"ref": _ref_pattern, "source": lambda source_name, table_name: (source_name, table_name)}
+    read: dict[str, list] = {"ref": [], "source": []}
+    try:
+        (fdef,) = ast.parse(textwrap.dedent(inspect.getsource(node.fn))).body
+        p = (fdef.args.posonlyargs + fdef.args.args)[0].arg
+        if fdef.name != node.fn.__name__:  # the source line of a lambda
+            raise ValueError(fdef.name)
+        parent = {c: n for n in ast.walk(fdef) for c in ast.iter_child_nodes(n)}
+        for name in ast.walk(fdef):
+            if not (isinstance(name, ast.Name) and name.id == p):
+                continue
+            attr = parent[name]
+            if not isinstance(attr, ast.Attribute):
+                raise ValueError(f"{p} used other than as {p}.<attr>")
+            if attr.attr not in shape:
+                continue
+            call = parent[attr]
+            if not (isinstance(call, ast.Call) and call.func is attr):
+                raise ValueError(f"{p}.{attr.attr} used without being called")
+            args = [ast.literal_eval(a) for a in call.args]
+            kwargs = {k.arg: ast.literal_eval(k.value) for k in call.keywords}
+            read[attr.attr].append(shape[attr.attr](*args, **kwargs))
+    except (OSError, TypeError, SyntaxError, ValueError, AttributeError, IndexError) as e:
+        node.dynamic = True
+        logger.info("model %s is dynamic (%s): a capture render binds its edges", node.name, e)
+        return
+    node.refs = tuple(read["ref"])
+    node.source_deps.update(read["source"])
 
 
 def _ephemeral_view(key: str) -> str:
@@ -144,25 +209,55 @@ class Context:
         ``ref('model', version=n)`` / ``v=n``. The database part is never
         embedded; resolution goes through the manifest.
         """
-        if version is None:
-            version = v
-        if len(args) == 1:
-            package, name = None, args[0]
-        elif len(args) == 2:
-            package, name = args
-        else:
-            raise TypeError(f"ref() takes 1 or 2 positional args, got {len(args)}")
+        return self._frame(self._key(_ref_pattern(*args, version=version, v=v)))
+
+    def _key(self, pattern: tuple[str, str | None, int | None]) -> str:
         try:
-            key = self.project.manifest.resolve_ref(name, package=package, version=version)
+            return self.project.manifest.resolve_ref(*pattern)
         except KeyError as e:
             raise KeyError(f"{e.args[0]} (from {self.node.name})") from None
+
+    def _frame(self, key: str) -> DataFrame:
+        """The frame a ref() of ``key`` reads. The key must be one of
+        the node's bound edges, so the scheduler has already run (or
+        deliberately left out) every upstream a step reads."""
         self.project._check_access(self.node, key)
-        self.node.depends_on.add(key)
+        if key not in self.node.depends_on:
+            raise LookupError(
+                f"model {self.node.name} calls ref() on {key}, which is not one "
+                "of the edges bound when the model was registered: unable to "
+                "infer all dependencies (give ref() literal arguments)"
+            )
         return self.project._node_frame(key)
+
+    def _compile(self) -> DataFrame:
+        """The node's frame: its function called on this context, or its
+        SQL with every ref() read through this context as a temp view."""
+        if self.node.sql is None:
+            return self.node.fn(self)
+
+        def view(m: re.Match) -> str:
+            key = self._key(_ref_shape(m))
+            self._frame(key).createOrReplaceTempView(_ephemeral_view(key))
+            return _ephemeral_view(key)
+
+        return self.spark.sql(self._sql(view))
+
+    def _sql(self, ref_sub) -> str:
+        """The node's SQL with each ref() match replaced by ``ref_sub(m)``
+        and each var() by ``str()`` of its value. A var() default is
+        spliced VERBATIM: var('x', 'lit') keeps its quotes and stays a
+        valid SQL string literal; numeric defaults splice as numbers
+        (quote string vars in the model SQL)."""
+
+        def vsub(m: re.Match) -> str:
+            default = m.group("default")
+            return str(self.var(m.group("name"), _VAR_REQUIRED if default is None else default.strip()))
+
+        return _SQL_VAR_RE.sub(vsub, _SQL_REF_RE.sub(ref_sub, self.node.sql))
 
     def source(self, source_name: str, table_name: str) -> DataFrame:
         """Resolve a declared source (models/sources.yml analog)."""
-        self.node.source_deps.add((source_name, table_name))
         return self.project.sources.load(self.spark, source_name, table_name)
 
     def var(self, name: str, default: Any = _VAR_REQUIRED) -> Any:
@@ -188,6 +283,20 @@ class Context:
     def this(self) -> DataFrame:
         """The node's own existing relation (dbt ``{{ this }}``)."""
         return self.spark.table(self.project.relation_name(self.node))
+
+
+class _Capture(Context):
+    """Context of a dynamic model's capture render (dbt's parse-time
+    render): every ref()/source() it reaches is recorded as an edge of
+    its node. Upstream frames built for it are capture renders too."""
+
+    def _frame(self, key: str) -> DataFrame:
+        self.node.depends_on.add(key)
+        return self.project._node_frame(key)
+
+    def source(self, source_name: str, table_name: str) -> DataFrame:
+        self.node.source_deps.add((source_name, table_name))
+        return super().source(source_name, table_name)
 
 
 @dataclass
@@ -222,8 +331,11 @@ class Project:
         self.on_run_end = tuple(on_run_end)
         self.manifest = Manifest()
         self.invocation_id = str(uuid.uuid4())
-        self._frames: dict[str, DataFrame] = {}  # memoized ephemeral/built frames
+        # this invocation's frames of nodes not persisted (virtual,
+        # ephemeral, or an upstream the run did not select)
+        self._frames: dict[str, DataFrame] = {}
         self._materialized: set[str] = set()
+        self._context: type[Context] = Context  # _Capture while binding edges
         # microbatch processing-window override (run(event_time_start/end))
         self._event_time_window: tuple[str | None, str | None] = (None, None)
 
@@ -331,8 +443,7 @@ class Project:
                 base_name=base if base != node_name else None,
                 version=version,
             )
-            if node.sql is not None:
-                node.sql_refs = _parse_sql_refs(node.sql)
+            _read_edges(node)
             # a declared test build() cannot run fails here, before any
             # model is materialized
             declared_tests(node)
@@ -407,14 +518,11 @@ class Project:
                 check_cols=() if check_cols == "all" else tuple(check_cols),
                 invalidate_hard_deletes=invalidate_hard_deletes,
             )
-            self.manifest.add(
-                Node(
-                    name=name or obj.__name__,
-                    resource_type="snapshot",
-                    config=cfg,
-                    fn=obj,
-                )
+            node = Node(
+                name=name or obj.__name__, resource_type="snapshot", config=cfg, fn=obj
             )
+            _read_edges(node)
+            self.manifest.add(node)
             return obj
 
         if fn is None:
@@ -436,59 +544,48 @@ class Project:
     # ---------- building ----------
 
     def _node_frame(self, name: str) -> DataFrame:
-        """DataFrame for a node: the materialized relation if it exists
-        in this run, else the (memoized) lazily-composed frame —
-        ephemeral models are simply never-persisted frames, which
-        Catalyst inlines into consumers for free."""
+        """DataFrame for a node: its relation once persisted, else the
+        frame its step built in this invocation, else one built now (an
+        upstream the run did not select) — ephemeral models are simply
+        never-persisted frames, which Catalyst inlines into consumers
+        for free."""
         node = self.manifest[name]
         if name in self._materialized and node.config.materialized != "ephemeral":
             return self.spark.table(self.relation_name(node))
-        # one lookup: the scheduling thread may drop a memoized frame
-        # while a pool thread reads it
-        df = self._frames.get(name)
-        if df is None:
-            df = self._frames[name] = self.build_frame(node)
-        return df
+        if name not in self._frames:
+            self._frames[name] = self.build_frame(node)
+        return self._frames[name]
 
     def resolve_sql(self, node: Node) -> str:
-        """Compile a SQL-string model: every ref() shape the function
+        """Compile a SQL-string model whose upstreams are all persisted
+        (a persistent view's text): every ref() shape the function
         ``Context.ref`` supports (1-arg, 2-arg package, version=/v=,
-        dotted version keys) → 2-part relation name for persisted
-        upstreams, temp-view name for virtual ones."""
+        dotted version keys) → its 2-part relation name."""
+        return Context(self, node)._sql(
+            lambda m: self.relation_name(self.manifest[self.manifest.resolve_ref(*_ref_shape(m))])
+        )
 
-        def sub(m: re.Match) -> str:
-            key = self.manifest.resolve_ref(*_ref_shape(m))
-            if key in self._materialized:
-                return self.relation_name(self.manifest[key])
-            return _ephemeral_view(key)
-
-        def vsub(m: re.Match) -> str:
-            name = m.group("name")
-            if name in self.vars:
-                return str(self.vars[name])
-            default = m.group("default")
-            if default is not None:
-                # spliced VERBATIM: var('x', 'lit') keeps its quotes and
-                # stays a valid SQL string literal; numeric defaults
-                # splice as numbers. (Provided values render as raw
-                # str() — quote string vars in the model SQL.)
-                return default.strip()
-            raise KeyError(
-                f"var {name!r} is undefined (required by {node.name}; "
-                "pass vars={...} to Project or give var() a default)"
-            )
-
-        return _SQL_VAR_RE.sub(vsub, _SQL_REF_RE.sub(sub, node.sql))
-
-    def _bind_sql_refs(self, node: Node) -> None:
-        """Resolve a SQL-string model's parsed ref() shapes into DAG
-        edges. Deferred to run/build time (not registration) so models
-        can be registered in any order and versioned/packaged refs
-        resolve to their true node keys (``fact.v2``)."""
-        for pkg, name, ver in node.sql_refs:
-            key = self.manifest.resolve_ref(name, package=pkg, version=ver)
-            self._check_access(node, key)
-            node.depends_on.add(key)
+    def _bind_refs(self) -> None:
+        """Resolve every model's ref patterns, read when it was
+        registered, into ``depends_on`` node keys — here rather than at
+        registration, so models register in any order and versioned/
+        packaged refs bind their true keys (``fact.v2``). A pattern that
+        does not resolve binds nothing: the node's step raises the same
+        error, attributed to it. Runs no Spark job unless a model is
+        dynamic: each of those gets one capture render, whose frames
+        (and the upstream frames built for it) are thrown away."""
+        for node in self.manifest.nodes.values():
+            for pattern in node.refs:
+                with suppress(KeyError):  # raised again, attributed, in its step
+                    node.depends_on.add(self.manifest.resolve_ref(*pattern))
+        frames, self._frames, self._context = self._frames, {}, _Capture
+        try:
+            for node in self.manifest.nodes.values():
+                if node.dynamic:
+                    with suppress(Exception):  # raised again, attributed, in its step
+                        node.fn(_Capture(self, node))
+        finally:
+            self._frames, self._context = frames, Context
 
     def _check_access(self, consumer: Node, key: str) -> None:
         """dbt 1.5 model access: a ``private`` model may only be
@@ -508,7 +605,7 @@ class Project:
             )
 
     def build_frame(self, node: Node) -> DataFrame:
-        """Compile one node to a DataFrame (records edges as a side effect)."""
+        """Compile one node to a DataFrame."""
         if node.resource_type == "seed":
             # mode=FAILFAST: seeds are small,
             # checked-in configuration tables that drive joins and
@@ -612,35 +709,7 @@ class Project:
                 for f in inferred
             )
             return reader.schema(ddl).csv(node.path)
-        ctx = Context(self, node)
-        if node.sql is not None:
-            self._bind_sql_refs(node)
-            for dep in node.depends_on:
-                if dep not in self._materialized:
-                    self._node_frame(dep).createOrReplaceTempView(_ephemeral_view(dep))
-            return self.spark.sql(self.resolve_sql(node))
-        return node.fn(ctx)
-
-    def _parse(self) -> None:
-        """Parse phase: bind every SQL-string model's refs, then build
-        every model frame once so ref()/source() calls in Python models
-        register DAG edges (dbt's Jinja capture render)."""
-        for node in self.manifest.nodes.values():
-            if node.sql is not None:
-                try:
-                    self._bind_sql_refs(node)  # edges exist even if capture fails
-                except PermissionError:
-                    pass  # access violation re-raises attributed at execute
-        for node in self.manifest.nodes.values():
-            if node.name not in self._frames and node.resource_type not in (
-                "test",
-                "exposure",
-            ):
-                try:
-                    self._frames[node.name] = self.build_frame(node)
-                except Exception:
-                    # error surfaces again (attributed) during run()
-                    self._frames.pop(node.name, None)
+        return self._context(self, node)._compile()
 
     # ---------- execution ----------
 
@@ -669,9 +738,7 @@ class Project:
             # (dbt's {{ this }}). Hook failures fail the node.
             for hook in node.config.pre_hook:
                 self.spark.sql(hook.replace("{this}", self.relation_name(node)))
-            df = self._frames.get(node.name)
-            if df is None:
-                df = self.build_frame(node)
+            df = self.build_frame(node)
             if (node.config.extra.get("contract") or {}).get("enforced"):
                 # dbt 1.5 model contracts: schema checked at plan time,
                 # row constraints validated with one aggregate job — a
@@ -683,8 +750,7 @@ class Project:
             for hook in node.config.post_hook:
                 self.spark.sql(hook.replace("{this}", self.relation_name(node)))
             if persisted:
-                self._materialized.add(node.name)
-                self._frames.pop(node.name, None)  # consumers read the relation
+                self._materialized.add(node.name)  # consumers read the relation
             else:
                 self._frames[node.name] = df  # virtual: lazy recompute-on-read
             return RunResult(node.name, "success", None, time.perf_counter() - t0)
@@ -731,6 +797,7 @@ class Project:
         """
         check_codegen_cache(self.spark)
         compiled0, compile_ms0 = codegen_compiles(self.spark)
+        self._frames = {}  # each node's step builds its frame afresh
         self._event_time_window = (event_time_start, event_time_end)
         self.spark.sql(f"CREATE DATABASE IF NOT EXISTS {self.target.schema}")
         for node in self.manifest.nodes.values():
@@ -739,7 +806,7 @@ class Project:
         for hook in self.on_run_start:
             # dbt: an on-run-start failure aborts the invocation
             self.spark.sql(hook.replace("{schema}", self.target.schema))
-        self._parse()
+        self._bind_refs()
         runnable = {
             n.name
             for n in self.manifest.nodes.values()
@@ -753,13 +820,7 @@ class Project:
             from dbt_foundation_spark.selectors import select_nodes
 
             runnable &= select_nodes(self, selector, exclude=exclude, state=state)
-        graph = TopologicalSorter(
-            {n: self.manifest[n].depends_on & runnable for n in runnable}
-        )
-        try:
-            graph.prepare()  # before any node runs
-        except CycleError as e:
-            raise ValueError(f"dependency cycle among: {sorted(set(e.args[1]))}") from None
+        graph = self.manifest.sorter(runnable)  # a cycle raises before any node runs
         results: list[RunResult] = []
         failed: set[str] = set()
         with ThreadPoolExecutor(max_workers=self.target.threads) as pool:
@@ -778,19 +839,6 @@ class Project:
                     name = running.pop(fut)
                     step = fut.result()
                     results.extend(step)
-                    if step[0].status == "success" and name in self._materialized:
-                        # Capture-phase frames downstream of a persisted
-                        # node embed a STALE view of it: on first
-                        # materialization, its pre-materialization frame
-                        # (an incremental's delta batch, a snapshot's raw
-                        # input without dbt_valid_* columns); on a
-                        # REBUILD, a resolved scan whose file index points
-                        # at the swapped-away files (the staging swap
-                        # deletes them → FAILED_READ_FILE). Drop them
-                        # before any consumer is released, so consumers
-                        # re-resolve the relation.
-                        for d in self.manifest.downstream({name}) - {name}:
-                            self._frames.pop(d, None)
                     if any(r.status in ("error", "test_fail") for r in step):
                         # dbt build: a failing test poisons the node like
                         # an error, so bad data never propagates down the
@@ -810,7 +858,7 @@ class Project:
         """``dbt ls``: resource names matching a selector expression
         (full --select grammar, selectors.py), sorted; all models/
         seeds/snapshots when no selector is given."""
-        self._parse()  # graph selectors need edges; builds nothing
+        self._bind_refs()  # graph selectors need edges
         names = {
             n.name
             for n in self.manifest.nodes.values()
@@ -884,6 +932,7 @@ class Project:
         node = self.manifest[name]
         if self._relation_exists(node):
             return self.spark.table(self.relation_name(node)).limit(limit)
+        self._bind_refs()
         return self.build_frame(node).limit(limit)
 
     def _drop_relation(self, rel: str, keep: str | None = None) -> bool:
@@ -948,7 +997,6 @@ class Project:
                 self._drop_relation(dst, keep="VIEW")
                 self.spark.sql(f"CREATE OR REPLACE VIEW {dst} AS SELECT * FROM {src}")
             self._materialized.add(node.name)
-            self._frames.pop(node.name, None)
             results.append(
                 RunResult(node.name, "success", None, time.perf_counter() - t0)
             )
@@ -971,8 +1019,6 @@ class Project:
         (dbt_project_evaluator's fct_exposure_parents_materializations).
         ``depends_on`` refs resolve at declaration — declare exposures
         after their models so typos fail here, not in a dashboard."""
-        from dbt_foundation_spark.manifest import Node, NodeConfig
-
         node = Node(
             name=name,
             resource_type="exposure",
@@ -1005,4 +1051,5 @@ class Project:
 
     def modified_plus(self, previous_state: dict[str, str]) -> set[str]:
         """Selector: changed nodes and all downstream (README.md:280)."""
+        self._bind_refs()
         return self.manifest.downstream(self.modified(previous_state))

@@ -790,10 +790,9 @@ def q_cosine_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = fan_out(spark, t(spark, sf_dir, "embeddings"))
     qv = _query_vector(spark, sf_dir, 1)
     # lazily pin the exact answer (10 rows): it is consumed twice (the
-    # output AND the recall join), and pre-pin (r13) the full
-    # brute-force scan+cosine pass executed once per consumer —
-    # plans/r13/q_cosine_topk_ivf_before.txt shows both TakeOrdered
-    # subtrees over their own parquet scans.
+    # output AND the recall join), and unpinned, the full brute-force
+    # scan+cosine pass executed once per consumer — the plan held a
+    # TakeOrderedAndProject subtree over its own parquet scan for each.
     exact = pin(
         cosine_topk(emb, "vec_id", "embedding", qv, k=10, exclude_id=1),
         eager=False,

@@ -311,6 +311,7 @@ def run_tests(
     ``tests``: {model_name: {test_label: [TestFn, ...]}}; when None, uses
     every model's :func:`declared_tests`.
     """
+    project._bind_refs()  # a model not built in this process compiles here
     if tests:
         plan = [
             (model, label, fn)
@@ -373,6 +374,7 @@ def run_configured_tests(project, specs: list[TestSpec]) -> list[TestResult]:
     """Execute TestSpecs with dbt severity semantics: count violations,
     then status = error if (severity=error and error_if met), else warn
     if warn_if met, else pass."""
+    project._bind_refs()
     results: list[TestResult] = []
     for s in specs:
         res, violations = evaluate(project, s.model, s.label, s.fn, s.limit)

@@ -32,7 +32,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dbt_foundation_spark.project import Context, Project, _ephemeral_view
+from dbt_foundation_spark.project import Context, Project
 
 
 @dataclass
@@ -84,6 +84,7 @@ def run_unit_test(
     """Run one model's logic against mocked inputs; compare to expect."""
     tname = name or f"unit_{model}"
     try:
+        project._bind_refs()
         node = project.manifest[model]
         ref_mocks: dict[str, DataFrame] = {}
         src_mocks: dict[tuple[str, str], DataFrame] = {}
@@ -108,11 +109,7 @@ def run_unit_test(
                 canon[key] = rkey
 
         class MockContext(Context):
-            def ref(self, *args, version=None, v=None):
-                if version is None:
-                    version = v
-                package, rname = (None, args[0]) if len(args) == 1 else args
-                key = project.manifest.resolve_ref(rname, package=package, version=version)
+            def _frame(self, key):
                 if key not in ref_mocks:
                     raise ValueError(f"input ref('{key}') not mocked in 'given'")
                 used.add(key)
@@ -134,23 +131,7 @@ def run_unit_test(
             def this(self) -> DataFrame:
                 raise ValueError("this() is not available in a unit test")
 
-        if node.sql is not None:
-            project._bind_sql_refs(node)
-            for dep in node.depends_on:
-                if dep not in ref_mocks:
-                    raise ValueError(f"input ref('{dep}') not mocked in 'given'")
-                used.add(dep)
-                ref_mocks[dep].createOrReplaceTempView(_ephemeral_view(dep))
-            import re as _re
-
-            from dbt_foundation_spark.project import _SQL_REF_RE, _ref_shape
-
-            def sub(m: _re.Match) -> str:
-                return _ephemeral_view(project.manifest.resolve_ref(*_ref_shape(m)))
-
-            out = project.spark.sql(_SQL_REF_RE.sub(sub, node.sql))
-        else:
-            out = node.fn(MockContext(project, node))
+        out = MockContext(project, node)._compile()
 
         unused = [k for k in given if canon[k] not in used]
         if unused:

@@ -647,11 +647,14 @@ def test_heavy_query_plan_shapes_pinned(spark, sf_dir):
     # r13 re-pin: the optimization round's lazy pins (localCheckpoint)
     # moved each detector's shared subtree (signature / postings /
     # hash-set builds) behind an RDD scan, so the FINAL plan's budget
-    # covers the post-pin tail; the pinned subtrees' own exchange
-    # counts are audited by the committed before/after plans
-    # (plans/r13/). Budgets are exact current counts — a refactor that
-    # reintroduces a duplicated subtree, an extra exchange, or a
-    # Python row UDF fails here, not at 100 TB.
+    # covers the post-pin tail; the pinned subtrees are planned on
+    # their own when each pin materializes. Before the pins, the final
+    # plans of q_dedup_minhash and q_dedup_simhash each held 14
+    # exchange operators (shuffle and broadcast), the duplicated
+    # subtrees re-planned by AQE; with them, 8 each. Budgets are exact
+    # current counts — a refactor that reintroduces a duplicated
+    # subtree, an extra exchange, or a Python row UDF fails here, not
+    # at 100 TB.
     budgets = {
         "q_dedup_minhash": 4,   # ground-truth posting self-join + pair
                                 # agg + found/true scalars; the banding

@@ -2245,3 +2245,222 @@ def test_microbatch_honours_bucket_layout(project, spark):
         (0, "2024-01-01"), (3, "2024-01-01"), (6, "2024-01-01"),
         (20, "2024-01-02"), (21, "2024-01-03"), (22, "2024-01-02"), (23, "2024-01-03"),
     ]
+
+
+def test_second_build_reads_newly_landed_source_files(project, spark, tmp_path):
+    """A second build() on the same Project builds every frame afresh:
+    a virtual model over a file source lists the source again, so a
+    file landed between the builds reaches the table model above it."""
+    from dbt_foundation_spark.sources.registry import Source
+
+    land = tmp_path / "landed"
+    spark.createDataFrame([(1,)], "id int").write.parquet(str(land))
+    project.sources.add(Source("raw", "landed", path=str(land)))
+
+    @project.model
+    def land_stg(ctx):
+        return ctx.source("raw", "landed")
+
+    @project.model(materialized="table")
+    def land_mart(ctx):
+        return ctx.ref("land_stg")
+
+    assert all(r.status == "success" for r in project.build())
+    spark.createDataFrame([(2,)], "id int").write.mode("append").parquet(str(land))
+    assert all(r.status == "success" for r in project.build())
+    rel = project.relation_name(project.manifest["land_mart"])
+    assert sorted(r.id for r in spark.table(rel).collect()) == [1, 2]
+
+
+def _lineage_project(spark, target):
+    p = Project("lineage", spark, target=target)
+
+    @p.model(materialized="table")
+    def lin_a(ctx):
+        return spark.range(2)
+
+    @p.model
+    def lin_b(ctx):
+        return ctx.ref("lin_a")
+
+    p.model("SELECT * FROM ref('lin_b')", name="lin_c")
+    return p
+
+
+def test_lineage_before_first_run(project, spark):
+    """Edges exist as soon as the models are registered: the evaluator,
+    the docs manifest and state:modified+ see them on a project that
+    has never run, and none of them builds anything."""
+    from dbt_foundation_spark.docs import generate_docs
+    from dbt_foundation_spark.evaluator import evaluate
+
+    p = _lineage_project(spark, project.target)
+    assert {f.node for f in evaluate(p) if f.check == "root_models"} == {"lin_a"}
+
+    nodes = generate_docs(_lineage_project(spark, project.target))["manifest"]["nodes"]
+    assert [nodes[n]["depends_on"] for n in ("lin_a", "lin_b", "lin_c")] == [
+        [], ["lin_a"], ["lin_b"],
+    ]
+
+    p = _lineage_project(spark, project.target)
+    state = dict(p.state_snapshot(), lin_a="an older definition")
+    assert p.modified_plus(state) == {"lin_a", "lin_b", "lin_c"}
+    assert not spark.catalog.tableExists(p.relation_name(p.manifest["lin_a"]))
+
+
+def test_ls_runs_no_spark_job(project, spark):
+    """dbt ls reads edges, not frames: on a project whose models are all
+    read statically it runs no Spark job, fresh or after a build. Job
+    ids are sequential per SparkContext, so the count is the id gap
+    between two marker jobs."""
+    sc = spark.sparkContext
+    assert not spark.streams.active  # a live stream would run jobs between marks
+
+    def marker_job() -> int:
+        sc.setJobGroup("ls_job_count_marker", "marker")
+        try:
+            sc.parallelize([1], 1).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return max(sc.statusTracker().getJobIdsForGroup("ls_job_count_marker"))
+
+    @project.model
+    def ls_stg(ctx):
+        return ctx.source("raw", "nation")
+
+    @project.model(materialized="incremental", incremental_strategy="merge",
+                   unique_key="n_nationkey")
+    def ls_inc(ctx):
+        df = ctx.ref("ls_stg")
+        if ctx.is_incremental():
+            hwm = ctx.this().agg(F.max("n_nationkey")).first()[0]
+            df = df.filter(F.col("n_nationkey") > hwm)
+        return df
+
+    for warm in (False, True):
+        before = marker_job()
+        assert project.ls(selector="+ls_inc") == ["ls_inc", "ls_stg"]
+        assert marker_job() - before - 1 == 0, warm
+        if not warm:
+            assert all(r.status == "success" for r in project.build())
+
+
+def test_context_ref_outside_bound_edges_names_node_and_key(project, spark):
+    """Context.ref reads only edges bound before the step: a key outside
+    them is dbt's "unable to infer all dependencies" error, naming the
+    model and the key."""
+    from dbt_foundation_spark.project import Context
+
+    @project.model
+    def cr_other(ctx):
+        return spark.range(1)
+
+    @project.model
+    def cr_node(ctx):
+        return spark.range(1)
+
+    project.ls()
+    with pytest.raises(LookupError, match=r"cr_node.*cr_other"):
+        Context(project, project.manifest["cr_node"]).ref("cr_other")
+
+
+def _reads_literals(ctx):
+    a, b, c = ctx.ref("m"), ctx.ref("pkg", "m"), ctx.ref("m", v=2)
+    return a.unionByName(b).unionByName(c).unionByName(ctx.source("raw", "t"))
+
+
+def _reads_incremental_branch(ctx):
+    df = ctx.ref("up")
+    if ctx.is_incremental():
+        df = df.join(ctx.ref("m"), "id", "left_anti")
+    return df
+
+
+def _ref_up(ctx):
+    return ctx.ref("up")
+
+
+def _hands_ctx_to_helper(ctx):
+    return _ref_up(ctx)
+
+
+@pytest.mark.parametrize(
+    "fn, refs, sources",
+    [
+        (_reads_literals, {("m", None, None), ("m", "pkg", None), ("m", None, 2)},
+         {("raw", "t")}),
+        (_reads_incremental_branch, {("up", None, None), ("m", None, None)}, set()),
+        (_hands_ctx_to_helper, None, set()),
+    ],
+    ids=["literals", "incremental_branch", "ctx_to_helper"],
+)
+def test_edge_reader(project, spark, fn, refs, sources):
+    """A Python model's literal ref()/source() calls are read from its
+    syntax tree at registration, in every branch. A model that hands
+    ``ctx`` to a helper is dynamic: one capture render binds its edges,
+    it runs after ``up``, and it reads ``up``'s persisted relation."""
+    builds = []
+
+    @project.model(materialized="table")
+    def up(ctx):
+        builds.append(1)
+        return spark.range(len(builds))  # one more row per build
+
+    project.model(fn, name="reader", materialized="table")
+    node = project.manifest["reader"]
+    assert node.dynamic == (refs is None)
+    assert set(node.refs) == (refs or set())
+    assert node.source_deps == sources
+    if refs is None:
+        res = project.run()
+        assert all(r.status == "success" for r in res), res
+        order = [r.node for r in res]
+        assert order.index("up") < order.index("reader")
+        assert node.depends_on == {"up"}
+        # the capture render built up's frame once and up's step once;
+        # reader's step read the relation that step wrote
+        assert len(builds) == 2
+        assert spark.table(project.relation_name(node)).count() == 2
+
+
+def test_build_builds_each_frame_once(project, spark):
+    """Every executed node's frame is built exactly once per invocation,
+    in its own step, on the first build and on a rebuild of the same
+    Project alike."""
+    from collections import Counter
+
+    @project.model(materialized="table")
+    def once_src(ctx):
+        return spark.range(4)
+
+    @project.model
+    def once_view(ctx):
+        return ctx.ref("once_src").filter("id > 0")
+
+    @project.model(materialized="ephemeral")
+    def once_eph(ctx):
+        return ctx.ref("once_src").filter("id < 3")
+
+    @project.model(materialized="incremental", incremental_strategy="merge", unique_key="id")
+    def once_inc(ctx):
+        return ctx.ref("once_view")
+
+    project.model(
+        "SELECT v.id FROM ref('once_view') v JOIN ref('once_eph') e ON v.id = e.id",
+        name="once_mart", materialized="table",
+    )
+    calls: Counter = Counter()
+    build_frame = project.build_frame
+
+    def counted(node):
+        calls[node.name] += 1
+        return build_frame(node)
+
+    project.build_frame = counted
+    for _ in range(2):
+        calls.clear()
+        res = project.build()
+        assert all(r.status == "success" for r in res), res
+        assert calls == Counter({r.node: 1 for r in res}), calls
+    rel = project.relation_name(project.manifest["once_mart"])
+    assert sorted(r.id for r in spark.table(rel).collect()) == [1, 2]

@@ -5,7 +5,7 @@ work is active (a plan does not time anything).
 
 Usage::
 
-    python tools/dump_plans.py --dir plans/r14 --suffix before q_foo q_bar
+    python tools/dump_plans.py --dir /tmp/plans --suffix before q_foo q_bar
 """
 from __future__ import annotations
 
@@ -19,7 +19,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="+")
-    ap.add_argument("--dir", default="plans/r14")
+    ap.add_argument("--dir", required=True)
     ap.add_argument("--suffix", default="before")
     ap.add_argument("--sf", default="0.1")
     args = ap.parse_args()

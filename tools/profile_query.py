@@ -3,13 +3,13 @@
 Times named catalog queries through the SAME methodology as bench.py
 (build the frame, noop-sink it) — one cold run + N warm runs — and
 optionally dumps ``explain('formatted')`` to a file so before/after
-plan shapes are commit-able evidence (plans/r13/).
+plan shapes can be compared.
 
 Usage::
 
     python tools/profile_query.py q_pricing_summary q_containment
     python tools/profile_query.py --warm 5 q_corpus_pipeline
-    python tools/profile_query.py --explain plans/r13 --suffix before q_foo
+    python tools/profile_query.py --explain /tmp/plans --suffix before q_foo
     python tools/profile_query.py --sf 0.01 q_foo     # non-default SF
 
 Never run while pytest/bench is active — contention fakes movers.
